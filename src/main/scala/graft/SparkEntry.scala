@@ -2044,10 +2044,10 @@ object SparkEntry {
     * bucketed int8 index from two thirds of the corpus, append the rest,
     * probe with nProbe=2 + exact rerank. The oracle rebuilds the
     * candidate universe from the ONE-SHOT assignment aux (`ivf_assign`)
-    * plus the quantization arithmetic — so this gates both the
-    * incremental build (2-batch index == one-shot lists) and the
-    * shuffle-free `assignCentroid` argmin (must equal `ivfAssign`'s
-    * min_by tie rule). */
+    * plus the quantization arithmetic — so this gates the incremental
+    * build (2-batch index == one-shot lists). Index and aux share one
+    * argmin (`VecNearest`); NearestCentroidSpec holds it to the
+    * cross-join `min_by` reference. */
   private def embIvfIncr(s: SparkSession, dir: String): DataFrame = {
     // raw (un-widened) reads: this gate's cost is the write+append
     // orchestration, whose bucketed writes re-shuffle their input
@@ -2170,9 +2170,9 @@ object SparkEntry {
     * emb_ivf_topk (kCentroids=8, nProbe=2, reusing the ivf_assign/
     * ivf_probes aux dumps), so the oracle replays candidate admission
     * (probe ∘ assignment), the exact-long ADC arithmetic, and the
-    * ranking end to end — and any drift between the engine's fused
-    * assignCentroid projection and the dumped min_by assignment
-    * hash-fails. */
+    * ranking end to end. The fused encode and the dumped assignment
+    * share one argmin (`VecNearest`); NearestCentroidSpec holds it to
+    * the cross-join `min_by` reference. */
   private def embPqIvf(s: SparkSession, dir: String): DataFrame = {
     val emb = embs(s, dir)
     val books = pqBooks(s, dir)

@@ -85,7 +85,8 @@ object Ann {
     * probed lists cover the true top-k other-label neighbors (size
     * `kCentroids`/`nProbe` as for [[ivfTopK]]); same shuffle shape too —
     * broadcast probes + one query_id-keyed ranking window. Pass trained
-    * `cents` ([[loadCentroids]]) to skip Lloyd in production. Returns
+    * `cents` ([[loadCentroids]]) to skip Lloyd in production. `idCol`
+    * must be unique and non-null (see [[ivfAssign]]). Returns
     * (query_id, neighbor_id, neighbor_label, rank). */
   def hardNegativesIvf(corpus: DataFrame, queries: DataFrame, k: Int,
                        kCentroids: Int = 64, nProbe: Int = 4, iters: Int = 2,
@@ -95,12 +96,10 @@ object Ann {
       : DataFrame = {
     val cs = cents.getOrElse(
       ivfCentroids(corpus, kCentroids, iters, idCol, vecCol))
-    val assign = ivfAssign(corpus, cs, idCol, vecCol)
     val probes = ivfProbes(queries, cs, nProbe, idCol, vecCol)
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
-        col(labelCol).as("neighbor_label"))
-      .join(assign.select(col("vec_id").as("neighbor_id"),
-        col("centroid_id")), Seq("neighbor_id"))
+      col(labelCol).as("neighbor_label"),
+      nearestId(col(vecCol), cs).as("centroid_id"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
       col(labelCol).as("__ql"))
     val w = Window.partitionBy(col("query_id"))
@@ -192,52 +191,71 @@ object Ann {
     *    (`round(x * 1e6)` as long): long addition is associative and
     *    commutative, so the shuffle order cannot perturb the result the
     *    way double summation would;
-    *  - assignment ties break on centroid id via `min_by` over a
-    *    `(dist, cid)` struct — a map-side-combinable aggregate, no window.
+    *  - each vector takes its nearest centroid in the scan itself
+    *    ([[VecNearest]], ties to the lower centroid id), so the only
+    *    shuffles are the dimension-sized mean aggregates.
     *
     * Centroids are collected to the driver each iteration (k x dim doubles
-    * — true dimension data, same justification as chromsizes) and
-    * re-broadcast, keeping each iteration one shallow scan+agg job instead
-    * of a k-deep recursive plan. At corpus scale, train on a bounded
-    * sample and persist the centroids next to the index; `iters` here is
-    * the same Lloyd loop MLlib's KMeans runs driver-side. */
+    * — true dimension data, same justification as chromsizes) and ride
+    * the next scan's plan, keeping each iteration one shallow scan+agg job
+    * instead of a k-deep recursive plan. At corpus scale, train on a
+    * bounded sample and persist the centroids next to the index; `iters`
+    * here is the same Lloyd loop MLlib's KMeans runs driver-side.
+    * `idCol` must be unique. */
   def ivfCentroids(corpus: DataFrame, k: Int, iters: Int = 2,
                    idCol: String = "vec_id",
-                   vecCol: String = "embedding"): Array[(Int, Array[Double])] = {
+                   vecCol: String = "embedding"): Array[(Int, Array[Double])] =
+    lloyd(corpus, k, iters, idCol, vecCol, Seq(v => v)).head
+
+  /** The deterministic Lloyd loop of [[ivfCentroids]] (one subspace, the
+    * whole vector) and [[pqCodebooks]] (`subs` = the m slices, trained
+    * together). Seeds are the `k` rows with the smallest
+    * `(xxhash64(id), id)` — vector-independent, so every subspace seeds
+    * from the same rows. Jobs: one seed collect, then one per
+    * iteration; each iteration assigns every subspace map-side (one
+    * [[VecNearest]] per subspace under a `posexplode`) and averages in
+    * integer micro-units. Returns one `(cid, centroid)` book per
+    * subspace, cids ascending. */
+  private def lloyd(corpus: DataFrame, k: Int, iters: Int, idCol: String,
+                    vecCol: String, subs: Seq[Column => Column])
+      : Seq[Array[(Int, Array[Double])]] = {
     val spark = corpus.sparkSession
     import spark.implicits._
     // native Cast on the array (codegen'd), not a transform() lambda
     val vecs = corpus.select(col(idCol).as("__id"),
       col(vecCol).cast("array<double>").as("__v"))
-    var cents: Array[(Int, Array[Double])] = vecs
-      .orderBy(xxhash64(col("__id")), col("__id"))
-      .limit(k).select(col("__v")).as[Array[Double]].collect()
-      .zipWithIndex.map { case (v, i) => (i, v) }
+    val svs = subs.map(_(col("__v")))
+    val seeds = vecs.orderBy(xxhash64(col("__id")), col("__id")).limit(k)
+      .select(array(svs: _*)).as[Seq[Array[Double]]].collect()
+    var books: Seq[Array[(Int, Array[Double])]] = svs.indices.map(s =>
+      seeds.zipWithIndex.map { case (v, cid) => (cid, v(s)) })
     val micro = 1e6
     for (_ <- 0 until iters) {
-      val cdf = broadcast(spark.createDataset(cents.toSeq)
-        .toDF("__cid", "__cv"))
-      val sums = vecs.crossJoin(cdf)
-        .withColumn("__d", sqDist(col("__v"), col("__cv")))
-        .groupBy(col("__id"), col("__v"))
-        .agg(min_by(col("__cid"), struct(col("__d"), col("__cid"))).as("__cid"))
+      val asg = svs.zip(books).map { case (sv, cs) =>
+        struct(nearestId(sv, cs).as("cid"), sv.as("sv"))
+      }
+      val sums = vecs
+        .select(posexplode(array(asg: _*)).as(Seq("__sub", "__a")))
         // quantize after the explode so the integer micro-unit math is a
         // scalar codegen'd expression, not a transform() lambda
-        .select(col("__cid"),
-          posexplode(col("__v")).as(Seq("__dim", "__x")))
-        .groupBy(col("__cid"), col("__dim"))
+        .select(col("__sub"), col("__a.cid").as("__cid"),
+          posexplode(col("__a.sv")).as(Seq("__dim", "__x")))
+        .groupBy(col("__sub"), col("__cid"), col("__dim"))
         .agg(sum(round(col("__x") * micro).cast("long")).as("__s"),
           count(lit(1)).as("__n"))
-        .groupBy(col("__cid"))
+        .groupBy(col("__sub"), col("__cid"))
         .agg(transform(array_sort(collect_list(struct(col("__dim"),
           col("__s"), col("__n")))),
           s => s.getField("__s").cast("double") /
             (s.getField("__n") * micro)).as("__cv"))
-        .as[(Int, Array[Double])].collect().toMap
+        .as[(Int, Int, Array[Double])].collect()
+        .map { case (s, cid, cv) => (s, cid) -> cv }.toMap
       // a centroid that lost every point keeps its previous position
-      cents = cents.map { case (cid, old) => (cid, sums.getOrElse(cid, old)) }
+      books = books.zipWithIndex.map { case (cs, s) =>
+        cs.map { case (cid, old) => (cid, sums.getOrElse((s, cid), old)) }
+      }
     }
-    cents
+    books
   }
 
   /** Persist trained coarse-quantizer centroids as a parquet model
@@ -273,63 +291,52 @@ object Ann {
       .as[(Int, Int, Array[Double])].collect().sortBy(t => (t._1, t._2))
   }
 
-  private def centroidDf(corpus: DataFrame,
-                         cents: Array[(Int, Array[Double])]): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    broadcast(spark.createDataset(cents.toSeq).toDF("__cid", "__cv"))
-  }
+  /** The `n` nearest centroid ids of `vec`, nearest first ([[VecNearest]]). */
+  private def nearest(vec: Column, cents: Array[(Int, Array[Double])],
+                      n: Int): Column =
+    colOf(VecNearest(exprOf(vec), cents, n))
 
-  private def sqDist(a: Column, b: Column): Column =
-    colOf(VecSqDist(exprOf(a), exprOf(b)))
+  /** The nearest centroid id of `vec`: the inverted-list assignment. */
+  private def nearestId(vec: Column,
+                        cents: Array[(Int, Array[Double])]): Column =
+    nearest(vec, cents, 1).getItem(0)
 
-  /** Inverted-list assignment: each vector to its nearest centroid.
-    * Broadcast nested loop over k centroids + map-side-combinable `min_by`
-    * argmin — no shuffle wider than (id, cid). */
+  /** Inverted-list assignment: each vector to its nearest centroid,
+    * ties to the lower centroid id ([[VecNearest]]). One projection of
+    * the corpus scan: no join, no shuffle. One row per input row, so
+    * `idCol` must be unique. */
   def ivfAssign(corpus: DataFrame, cents: Array[(Int, Array[Double])],
                 idCol: String = "vec_id",
                 vecCol: String = "embedding"): DataFrame =
-    corpus.select(col(idCol).as("vec_id"), col(vecCol).as("__v"))
-      .crossJoin(centroidDf(corpus, cents))
-      .withColumn("__d", sqDist(col("__v"), col("__cv")))
-      .groupBy(col("vec_id"))
-      .agg(min_by(col("__cid"), struct(col("__d"), col("__cid")))
-        .as("centroid_id"))
+    corpus.select(col(idCol).as("vec_id"),
+      nearestId(col(vecCol), cents).as("centroid_id"))
 
-  /** Per-query probe lists: the `nProbe` nearest centroids. The query set
-    * is small by contract (same as [[lshTopK]]), so the window is over
-    * |Q| x k rows. */
+  /** Per-query probe lists: the `nProbe` nearest centroids, in
+    * `(distance, cid)` order ([[VecNearest]]), exploded to one
+    * `(query_id, centroid_id)` row each. `idCol` must be unique. */
   def ivfProbes(queries: DataFrame, cents: Array[(Int, Array[Double])],
                 nProbe: Int, idCol: String = "vec_id",
-                vecCol: String = "embedding"): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("__d").asc, col("__cid").asc)
-    queries.select(col(idCol).as("query_id"), col(vecCol).as("__v"))
-      .crossJoin(centroidDf(queries, cents))
-      .withColumn("__d", sqDist(col("__v"), col("__cv")))
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") <= nProbe)
-      .select(col("query_id"), col("__cid").as("centroid_id"))
-  }
+                vecCol: String = "embedding"): DataFrame =
+    queries.select(col(idCol).as("query_id"),
+      explode(nearest(col(vecCol), cents, nProbe)).as("centroid_id"))
 
   /** IVF approximate top-k: probe the `nProbe` nearest inverted lists,
     * rank candidates by exact cosine. The scale path when the corpus is
     * too large for [[bruteForceTopK]] and sign-bit buckets ([[lshTopK]])
     * cluster poorly: list sizes track the data distribution (~N/k each),
-    * and recall/cost trade on `nProbe` alone. One shuffle keys the
-    * candidate set on `query_id` for the ranking window; the
-    * centroid-id equi-join itself is map-side (broadcast probes). */
+    * and recall/cost trade on `nProbe` alone. The corpus scan computes
+    * each vector's list itself and meets the broadcast probes map-side;
+    * the one shuffle keys the candidate set on `query_id` for the
+    * ranking window. `idCol` must be unique and non-null. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               kCentroids: Int = 64, nProbe: Int = 4, iters: Int = 2,
               idCol: String = "vec_id", vecCol: String = "embedding",
               cents: Option[Array[(Int, Array[Double])]] = None): DataFrame = {
     val cs = cents.getOrElse(
       ivfCentroids(corpus, kCentroids, iters, idCol, vecCol))
-    val assign = ivfAssign(corpus, cs, idCol, vecCol)
     val probes = ivfProbes(queries, cs, nProbe, idCol, vecCol)
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"))
-      .join(assign.select(col("vec_id").as("neighbor_id"),
-        col("centroid_id")), Seq("neighbor_id"))
+    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
+      nearestId(col(vecCol), cs).as("centroid_id"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("__cos").desc, col("neighbor_id").asc)
@@ -343,30 +350,14 @@ object Ann {
         col("__cos").as("cosine"))
   }
 
-  /** Shuffle-free inverted-list assignment: argmin over the k broadcast
-    * centroids computed INSIDE one projection (an array of (dist, cid)
-    * structs reduced with `array_min`, whose lexicographic struct order
-    * is exactly [[ivfAssign]]'s `min_by(cid, struct(d, cid))` tie rule).
-    * [[ivfAssign]]'s groupBy form shuffles (id, cid) once; this form
-    * shuffles NOTHING, which is what an index-building scan over 100 TB
-    * wants — assignment, quantization, and the bucketed write all fuse
-    * into the single corpus pass. */
-  def assignCentroid(cents: Array[(Int, Array[Double])],
-                     vec: Column): Column = {
-    val entries = cents.map { case (cid, cv) =>
-      struct(sqDist(vec, typedLit(cv)).as("d"), lit(cid).as("c"))
-    }
-    array_min(array(entries.toIndexedSeq: _*)).getField("c")
-  }
-
   /** One increment of the quantized IVF index: every vector assigned to
-    * its inverted list and stored int8-quantized —
-    * `(centroid_id, vec_id, qvec, qscale)`. One pass, no shuffle before
-    * the bucketed write. */
+    * its inverted list ([[ivfAssign]]'s assignment) and stored
+    * int8-quantized — `(centroid_id, vec_id, qvec, qscale)`. One pass,
+    * no shuffle before the bucketed write. */
   private def ivfIndexRel(df: DataFrame, cents: Array[(Int, Array[Double])],
                           idCol: String, vecCol: String): DataFrame =
     quantizeInt8(df, vecCol).select(
-      assignCentroid(cents, col(vecCol)).as("centroid_id"),
+      nearestId(col(vecCol), cents).as("centroid_id"),
       col(idCol).as("vec_id"), col("qvec"), col("qscale"))
 
   /** Create a persisted quantized IVF index: inverted lists bucketed by
@@ -652,11 +643,12 @@ object Ann {
   }
 
   /** [[semDedup]]'s spherical-cluster assignment: (vec_id, __raw,
-    * centroid_id), one scan — normalize, broadcast-nested-loop over k
-    * centroids, map-side-combinable `min_by` argmin. The raw vector rides
-    * the groupBy key (vec_id is the true key) so the verification join
-    * reads it without a second corpus scan. Deterministic end to end:
-    * the oracle's aux dump and the gate recompute identical assignments. */
+    * centroid_id), one scan — normalize, then the nearest centroid
+    * ([[VecNearest]]) in the same projection. The raw vector rides along
+    * so the verification join reads it without a second corpus scan.
+    * One row per input row, so `idCol` must be unique. Deterministic end
+    * to end: the oracle's aux dump and the gate recompute identical
+    * assignments. */
   def semDedupAssign(df: DataFrame, kCentroids: Int = 8, iters: Int = 2,
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      cents: Option[Array[(Int, Array[Double])]] = None): DataFrame = {
@@ -664,11 +656,8 @@ object Ann {
       l2Normalize(col(vecCol)).as("__nv"), col(vecCol).as("__raw"))
     val cs = cents.getOrElse(
       ivfCentroids(nd, kCentroids, iters, "vec_id", "__nv"))
-    nd.crossJoin(centroidDf(nd, cs))
-      .withColumn("__d", sqDist(col("__nv"), col("__cv")))
-      .groupBy(col("vec_id"), col("__raw"))
-      .agg(min_by(col("__cid"), struct(col("__d"), col("__cid")))
-        .as("centroid_id"))
+    nd.select(col("vec_id"), col("__raw"),
+      nearestId(col("__nv"), cs).as("centroid_id"))
   }
 
   /** Integer-quantized second-moment sums of the embedding column in
@@ -792,95 +781,56 @@ object Ann {
   /** Product-quantization codebooks (Jegou et al. 2011, "Product
     * Quantization for Nearest Neighbor Search"): the vector space splits
     * into `m` contiguous subspaces of d/m dims, each trained with its own
-    * k-centroid deterministic Lloyd ([[ivfCentroids]] on the sliced
-    * relation — m sequential small jobs). An encoded corpus then stores
+    * k-centroid deterministic Lloyd (the [[ivfCentroids]] loop, all m
+    * subspaces in the same jobs: one seed job plus one per iteration).
+    * An encoded corpus then stores
     * `m * log2(k)` bits per vector instead of d floats — the RAM path
     * for billion-vector ANN (64 dims of float32 -> 8 nibble codes is a
-    * 64x compression). Returns (sub, cid, centroid-subvector) rows. */
+    * 64x compression). `d` is the first row's length. `idCol` must be
+    * unique. Returns (sub, cid, centroid-subvector) rows. */
   def pqCodebooks(corpus: DataFrame, m: Int, k: Int, iters: Int = 2,
                   idCol: String = "vec_id", vecCol: String = "embedding")
       : Array[(Int, Int, Array[Double])] = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val d = corpus.select(size(col(vecCol)).as("__d")).head.getInt(0)
     require(d % m == 0, s"dims=$d not divisible by m=$m subspaces")
     val sd = d / m
-    // All m subspaces train TOGETHER: the per-sub formulation (m
-    // sequential ivfCentroids loops) costs m * (1 + iters) driver-
-    // synchronized jobs — 24 for the nibble-book default, pure job
-    // overhead at any corpus size (measured 80s cold on the bench).
-    // Fused long format (sub, id, subvec) runs 1 seed job + iters
-    // iteration jobs total and produces the SAME books: the seed rule
-    // orders by (xxhash64(id), id) — vector-independent, so every sub
-    // seeds from the same k corpus rows — and each sub's Lloyd step
-    // below is the exact per-sub arithmetic (integer micro-unit sums,
-    // min_by (dist, cid) ties) keyed by __sub.
-    val sliced = corpus.select(col(idCol).as("__id"),
-        col(vecCol).cast("array<double>").as("__v"))
-      .select(col("__id"),
-        explode(array((0 until m).map(lit): _*)).as("__sub"), col("__v"))
-      .select(col("__sub"), col("__id"),
-        slice(col("__v"), col("__sub") * sd + 1, lit(sd)).as("__sv"))
-      .persist()
-    val micro = 1e6
-    // per-sub seeds via rank-limited window (WindowGroupLimit pre-prunes
-    // to k rows per sub map-side — only m*k rows reach the driver)
-    val seedW = Window.partitionBy(col("__sub"))
-      .orderBy(xxhash64(col("__id")), col("__id"))
-    var cents: Array[(Int, Int, Array[Double])] = sliced
-      .withColumn("__rn", row_number().over(seedW))
-      .filter(col("__rn") <= k)
-      .select(col("__sub"), (col("__rn") - 1).as("__cid"), col("__sv"))
-      .as[(Int, Int, Array[Double])].collect()
-      .sortBy(t => (t._1, t._2))
-    for (_ <- 0 until iters) {
-      val cdf = broadcast(spark.createDataset(cents.toSeq)
-        .toDF("__csub", "__cid", "__cv"))
-      val sums = sliced.join(cdf, col("__sub") === col("__csub"))
-        .withColumn("__d", sqDist(col("__sv"), col("__cv")))
-        .groupBy(col("__sub"), col("__id"), col("__sv"))
-        .agg(min_by(col("__cid"), struct(col("__d"), col("__cid"))).as("__cid"))
-        .select(col("__sub"), col("__cid"),
-          posexplode(col("__sv")).as(Seq("__dim", "__x")))
-        .groupBy(col("__sub"), col("__cid"), col("__dim"))
-        .agg(sum(round(col("__x") * micro).cast("long")).as("__s"),
-          count(lit(1)).as("__n"))
-        .groupBy(col("__sub"), col("__cid"))
-        .agg(transform(array_sort(collect_list(struct(col("__dim"),
-          col("__s"), col("__n")))),
-          s => s.getField("__s").cast("double") /
-            (s.getField("__n") * micro)).as("__cv"))
-        .as[(Int, Int, Array[Double])].collect()
-        .map { case (s, cid, cv) => (s, cid) -> cv }.toMap
-      cents = cents.map { case (s, cid, old) =>
-        (s, cid, sums.getOrElse((s, cid), old))
-      }
-    }
-    sliced.unpersist(blocking = false)
-    cents
+    lloyd(corpus, k, iters, idCol, vecCol,
+        (0 until m).map(s => (v: Column) => subVec(v, s, sd)))
+      .zipWithIndex.flatMap { case (cs, s) =>
+        cs.map { case (cid, cv) => (s, cid, cv) }
+      }.toArray
+  }
+
+  /** Subspace `s` of a vector cut into `sd`-dim slices. */
+  private def subVec(v: Column, s: Int, sd: Int): Column =
+    slice(v, lit(s * sd + 1), lit(sd))
+
+  /** The PQ encode generator: `posexplode` of one [[VecNearest]] code
+    * per subspace of the array<double> column `v`, yielding
+    * `(sub, code)`. The books must cover subspaces 0..m-1. */
+  private def pqCodes(v: Column,
+                      books: Array[(Int, Int, Array[Double])]): Column = {
+    val sd = books.head._3.length
+    val bySub = books.groupBy(_._1).toSeq.sortBy(_._1)
+    require(bySub.map(_._1) == bySub.indices,
+      s"PQ books must cover subspaces 0..${bySub.size - 1}")
+    posexplode(array(bySub.map { case (s, bs) =>
+      nearestId(subVec(v, s, sd), bs.map { case (_, cid, cv) => (cid, cv) })
+    }: _*)).as(Seq("sub", "code"))
   }
 
   /** Long-format PQ codes: one (vec_id, sub, code) row per subspace —
     * the shuffle-friendly layout (the ADC scan joins on (sub, code)
-    * directly; no array re-assembly lambda anywhere). Encoding is a
-    * broadcast of the m*k book rows against the corpus scan with a
-    * map-side-combinable `min_by` argmin per (vector, subspace); the
-    * only exchange carries (id, sub, code). */
+    * directly; no array re-assembly lambda anywhere). Encoding is one
+    * projection of the corpus scan: the nearest book entry per subspace
+    * ([[VecNearest]], ties to the lower cid), no join, no shuffle. One
+    * row per input row and subspace, so `idCol` must be unique. */
   def pqEncode(corpus: DataFrame, books: Array[(Int, Int, Array[Double])],
                idCol: String = "vec_id",
-               vecCol: String = "embedding"): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val sd = books.head._3.length
-    val b = broadcast(books.toSeq.toDF("sub", "__cid", "__cv"))
+               vecCol: String = "embedding"): DataFrame =
     corpus.select(col(idCol).as("vec_id"),
         col(vecCol).cast("array<double>").as("__v"))
-      .crossJoin(b)
-      .withColumn("__d",
-        sqDist(slice(col("__v"), col("sub") * sd + 1, lit(sd)), col("__cv")))
-      .groupBy(col("vec_id"), col("sub"))
-      .agg(min_by(col("__cid"), struct(col("__d"), col("__cid"))).as("code"))
-  }
+      .select(col("vec_id"), pqCodes(col("__v"), books))
 
   /** Asymmetric-distance (ADC) top-k over PQ codes: per query, a
     * quantized (sub, cid) -> partial-distance lookup table (query and
@@ -941,32 +891,19 @@ object Ann {
 
   /** PQ codes WITH their inverted-list assignment:
     * `(vec_id, centroid_id, sub, code)` — the relation
-    * [[pqIvfTopK]] scans. The coarse assignment rides the encode pass
-    * as a shuffle-free [[assignCentroid]] projection (same argmin tie
-    * rule as [[ivfAssign]], constant per vector so `first` under the
-    * encode's own (vector, subspace) aggregation), so indexing costs
-    * exactly the encode exchange — no second corpus pass or join. At
-    * rest, persist bucketed by `centroid_id` (the [[writeIvfIndex]]
-    * layout) and probes scan hash-clustered list files. */
+    * [[pqIvfTopK]] scans. The coarse assignment ([[ivfAssign]]'s) and
+    * the [[pqEncode]] codes are one projection of the corpus scan, so
+    * indexing costs no join and no exchange. At rest, persist bucketed
+    * by `centroid_id` (the [[writeIvfIndex]] layout) and probes scan
+    * hash-clustered list files. `idCol` must be unique. */
   def pqIvfEncode(corpus: DataFrame, books: Array[(Int, Int, Array[Double])],
                   cents: Array[(Int, Array[Double])],
                   idCol: String = "vec_id",
-                  vecCol: String = "embedding"): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val sd = books.head._3.length
-    val b = broadcast(books.toSeq.toDF("sub", "__cid", "__cv"))
+                  vecCol: String = "embedding"): DataFrame =
     corpus.select(col(idCol).as("vec_id"),
         col(vecCol).cast("array<double>").as("__v"))
-      .withColumn("__asg", assignCentroid(cents, col("__v")))
-      .crossJoin(b)
-      .withColumn("__d",
-        sqDist(slice(col("__v"), col("sub") * sd + 1, lit(sd)), col("__cv")))
-      .groupBy(col("vec_id"), col("sub"))
-      .agg(first(col("__asg")).as("centroid_id"),
-        min_by(col("__cid"), struct(col("__d"), col("__cid"))).as("code"))
-      .select(col("vec_id"), col("centroid_id"), col("sub"), col("code"))
-  }
+      .select(col("vec_id"), nearestId(col("__v"), cents).as("centroid_id"),
+        pqCodes(col("__v"), books))
 
   /** Persist an IVF-addressed PQ code relation as a bucketed table
     * (external at `path`), bucketed+sorted by `centroid_id` — the

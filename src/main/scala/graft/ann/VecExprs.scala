@@ -3,7 +3,8 @@ package graft.ann
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -146,6 +147,52 @@ object VecKernels {
     }
     java.lang.Double.valueOf(acc)
   }
+
+  /** Ids of the `n` centroids nearest `v` by squared L2 distance, in
+    * `(distance, cid)` order under Spark's ordering: a null distance
+    * (null or ragged vector, null element, null centroid) sorts first,
+    * NaN last, equal distances to the lower cid. This is the order of
+    * `min_by(cid, struct(d, cid))` and of a `(d ASC, cid ASC)` window,
+    * so a vector with no distance gets the lowest cids. Each distance is
+    * [[sqFD]] or [[sqDD]] (`isFloat` = array<float> input) against the
+    * array<double> centroids; a bounded insertion keeps the best
+    * `min(n, k)` in one pass over the k centroids. */
+  def nearest(v: ArrayData, isFloat: Boolean, cids: Array[Int],
+              cents: Array[ArrayData], n: Int): ArrayData = {
+    val m = math.max(0, math.min(n, cids.length))
+    val bestD = new Array[java.lang.Double](m)
+    val bestC = new Array[Int](m)
+    var filled = 0; var i = 0
+    while (i < cids.length) {
+      val d =
+        if (v == null || cents(i) == null) null
+        else if (isFloat) sqFD(v, cents(i)) else sqDD(v, cents(i))
+      val c = cids(i)
+      var j = filled
+      while (j > 0 && precedes(d, c, bestD(j - 1), bestC(j - 1))) j -= 1
+      if (j < m) {
+        var t = math.min(filled, m - 1)
+        while (t > j) { bestD(t) = bestD(t - 1); bestC(t) = bestC(t - 1); t -= 1 }
+        bestD(j) = d; bestC(j) = c
+        if (filled < m) filled += 1
+      }
+      i += 1
+    }
+    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+      .fromPrimitiveArray(bestC)
+  }
+
+  /** `(d1, c1) < (d2, c2)`: nulls first, then Spark's double order
+    * (NaN above every number, -0.0 == 0.0), then cid. */
+  private def precedes(d1: java.lang.Double, c1: Int,
+                       d2: java.lang.Double, c2: Int): Boolean =
+    if (d1 == null || d2 == null) {
+      if (d1 == null && d2 == null) c1 < c2 else d1 == null
+    } else {
+      val x = d1.doubleValue; val y = d2.doubleValue
+      val cmp = if (x == y) 0 else java.lang.Double.compare(x, y)
+      cmp < 0 || (cmp == 0 && c1 < c2)
+    }
 
   /** Hyperplane components depend only on (plane, dim) — cache the unit
     * matrix per executor instead of re-hashing planes x dims per row.
@@ -470,17 +517,11 @@ case class VecSqDist(left: Expression, right: Expression) extends VecBinaryExpr 
     copy(left = newLeft, right = newRight)
 }
 
-/** `numPlanes` sign bits of deterministic hyperplane projections packed
-  * into a long — the LSH bucket id. See [[VecKernels.lshF]].
+/** Base for the one-vector kernels: an array<float|double> child;
+  * `isFloat` picks the F or the D kernel.
   */
-case class VecLshBucket(child: Expression, numPlanes: Int)
-    extends UnaryExpression {
-  require(numPlanes >= 1 && numPlanes <= 63, "numPlanes in [1, 63]")
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "vec_lsh_bucket"
-
-  @transient private lazy val isFloat: Boolean = child.dataType match {
+sealed trait VecUnaryExpr extends UnaryExpression {
+  @transient protected lazy val isFloat: Boolean = child.dataType match {
     case ArrayType(FloatType, _)  => true
     case ArrayType(DoubleType, _) => false
   }
@@ -490,6 +531,63 @@ case class VecLshBucket(child: Expression, numPlanes: Int)
     case t => TypeCheckResult.TypeCheckFailure(
       s"$prettyName expects array<float|double>, got ${t.catalogString}")
   }
+}
+
+/** The ids of the `n` nearest of a fixed centroid set, as
+  * `array<int>` of length `min(n, k)` in `(distance, cid)` order — the
+  * one nearest-centroid kernel of the IVF/PQ layer (assignment is
+  * `n = 1`, a probe list `n = nProbe`). See [[VecKernels.nearest]] for
+  * the ordering. The centroids ride the generated class as one
+  * reference object and the generated code is a single kernel call, so
+  * its size does not depend on k. Never null: a vector with no distance
+  * gets the lowest cids.
+  */
+case class VecNearest(child: Expression,
+                      centroids: Array[(Int, Array[Double])], n: Int)
+    extends VecUnaryExpr {
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "vec_nearest"
+  override def stringArgs: Iterator[Any] =
+    Iterator(child, s"k=${centroids.length}", n)
+
+  @transient private lazy val cids: Array[Int] = centroids.map(_._1)
+  @transient private lazy val cents: Array[ArrayData] = centroids.map {
+    case (_, cv) =>
+      if (cv == null) null
+      else org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+        .fromPrimitiveArray(cv)
+  }
+
+  override def eval(input: InternalRow): Any = VecKernels.nearest(
+    child.eval(input).asInstanceOf[ArrayData], isFloat, cids, cents, n)
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val v = child.genCode(ctx)
+    val ids = ctx.addReferenceObj("cids", cids, "int[]")
+    val cs = ctx.addReferenceObj("cents", cents,
+      "org.apache.spark.sql.catalyst.util.ArrayData[]")
+    ev.copy(code = code"""
+      |${v.code}
+      |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
+      |  graft.ann.VecKernels.nearest(${v.isNull} ? null : ${v.value},
+      |    $isFloat, $ids, $cs, $n);
+     """.stripMargin, isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** `numPlanes` sign bits of deterministic hyperplane projections packed
+  * into a long — the LSH bucket id. See [[VecKernels.lshF]].
+  */
+case class VecLshBucket(child: Expression, numPlanes: Int)
+    extends VecUnaryExpr {
+  require(numPlanes >= 1 && numPlanes <= 63, "numPlanes in [1, 63]")
+
+  override def dataType: DataType = LongType
+  override def prettyName: String = "vec_lsh_bucket"
 
   override def nullSafeEval(v: Any): Any =
     if (isFloat) VecKernels.lshF(v.asInstanceOf[ArrayData], numPlanes)
@@ -508,21 +606,10 @@ case class VecLshBucket(child: Expression, numPlanes: Int)
   * k-means prep for [[graft.ann.Ann.semDedup]]. See [[VecKernels.l2nF]]
   * for the zero-norm and null-element contract.
   */
-case class VecL2Normalize(child: Expression) extends UnaryExpression {
+case class VecL2Normalize(child: Expression) extends VecUnaryExpr {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "vec_l2_normalize"
-
-  @transient private lazy val isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _)  => true
-    case ArrayType(DoubleType, _) => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<float|double>, got ${t.catalogString}")
-  }
 
   override def nullSafeEval(v: Any): Any =
     if (isFloat) VecKernels.l2nF(v.asInstanceOf[ArrayData])
@@ -546,21 +633,10 @@ case class VecL2Normalize(child: Expression) extends UnaryExpression {
 }
 
 /** max(|x_i|) — the per-vector symmetric quantization range. */
-case class VecAbsMax(child: Expression) extends UnaryExpression {
+case class VecAbsMax(child: Expression) extends VecUnaryExpr {
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
   override def prettyName: String = "vec_abs_max"
-
-  @transient private lazy val isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _)  => true
-    case ArrayType(DoubleType, _) => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<float|double>, got ${t.catalogString}")
-  }
 
   override def nullSafeEval(v: Any): Any =
     if (isFloat) VecKernels.absMaxF(v.asInstanceOf[ArrayData])
@@ -673,23 +749,12 @@ case class VecDotI8(left: Expression, right: Expression)
   * the partial aggregation all sit in one whole-stage-codegen span, and
   * the only shuffle left is the dimension-sized final aggregate. */
 case class VecCovTerms(child: Expression, dim: Int, scale: Double)
-    extends UnaryExpression {
+    extends VecUnaryExpr {
   require(dim >= 1 && dim <= 4096, "dim in [1, 4096]")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = true
   override def prettyName: String = "vec_cov_terms"
-
-  @transient private lazy val isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _)  => true
-    case ArrayType(DoubleType, _) => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects array<float|double>, got ${t.catalogString}")
-  }
 
   override def nullSafeEval(v: Any): Any =
     if (isFloat) VecKernels.covTermsF(v.asInstanceOf[ArrayData], dim, scale)

@@ -55,6 +55,19 @@ object Bloom {
       spark.conf.set(bitsKey, bits.toString)
   }
 
+  /** Raise the caps for an index of `numBuckets` filters sized for
+    * `expectedItems` keys at `fpp` — the sizing [[buildIndex]] asks
+    * [[bloomAgg]] for. Call it on the driver thread before building
+    * indexes from other threads, so they only read the session conf. */
+  def ensureIndexCaps(spark: SparkSession, numBuckets: Int,
+                      expectedItems: Long, fpp: Double): Unit = {
+    val items = perBucket(expectedItems, numBuckets)
+    ensureAggCaps(spark, items, BloomFilter.optimalNumOfBits(items, fpp))
+  }
+
+  private def perBucket(expectedItems: Long, numBuckets: Int): Long =
+    math.max(1L, expectedItems / numBuckets)
+
   /** Aggregate Column folding `hash` (must be BIGINT, e.g. `xxhash64`)
     * into one Bloom filter blob sized for `expectedItems` at `fpp`.
     * Raises the session's runtime-bloom-filter caps when the requested
@@ -92,11 +105,11 @@ object Bloom {
                  expectedItems: Long = 10000000L,
                  fpp: Double = 0.01): DataFrame = {
     require(numBuckets > 0 && expectedItems > 0)
-    val perBucket = math.max(1L, expectedItems / numBuckets)
     keyed(corpus.select(keyCol.as("__key")), col("__key"), numBuckets,
         "__h", "bucket")
       .groupBy(col("bucket"))
-      .agg(bloomAgg(col("__h"), perBucket, fpp).as("bloom"))
+      .agg(bloomAgg(col("__h"), perBucket(expectedItems, numBuckets), fpp)
+        .as("bloom"))
   }
 
   /** Collect the index and merge multi-row buckets (appended ingest

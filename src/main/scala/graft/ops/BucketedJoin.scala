@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.core.ColSpec
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Bucketed bin-index layout: amortize the interval-join shuffle across
@@ -89,7 +89,4 @@ object BucketedJoin {
         greatest(c1.startCol, c2.startCol), binSize))
       .drop(leftBin, rightBin)
   }
-
-  /** Convenience: read a bin-index table written by [[writeBinIndex]]. */
-  def readBinIndex(s: SparkSession, table: String): DataFrame = s.table(table)
 }

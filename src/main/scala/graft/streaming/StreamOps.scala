@@ -8,8 +8,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * reference is a batch library, SURVEY §2.6/§7).
   *
   * Two classes of operator:
-  *  - stateless interval transforms (region select, expand, bin
-  *    assignment) stream as-is — they're pure `Column` expressions;
+  *  - stateless interval transforms (region select, expand) stream
+  *    as-is — they're pure `Column` expressions;
   *  - order-sensitive sweeps (merge/cluster, sessionize) need keyed state:
   *    `flatMapGroupsWithState` keyed by chrom/user with an event-time
   *    watermark.
@@ -25,13 +25,6 @@ object StreamOps {
       .withWatermark(tsCol, watermark)
       .groupBy(window(col(tsCol), window_), col("event_type"))
       .agg(count(lit(1)).as("n"), sum(col("value")).as("value_sum"))
-
-  /** Streaming bin assignment: stateless — each interval tagged with its
-    * genome bin, ready for downstream stateful merge keyed by (chrom,bin). */
-  def assignBins(intervals: DataFrame, binSize: Long): DataFrame =
-    intervals.withColumn("bin",
-      ((col("start") - pmod(col("start"), lit(binSize))) / lit(binSize))
-        .cast("long"))
 
   case class Iv(chrom: String, start: Long, end: Long)
   case class MergedRun(chrom: String, start: Long, end: Long, nIntervals: Long)
@@ -365,6 +358,11 @@ object StreamOps {
       ).flatten
       if (tail.size <= 1) tail.foreach(f => f())
       else {
+        // the bloom append raises session-global SQL caps while it
+        // plans; raise them here so the writer threads only read them
+        if (bloomIndexPath != null)
+          graft.dedup.Bloom.ensureIndexCaps(s, bloomBuckets,
+            bloomExpectedItems, bloomFpp)
         val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
         val threads = tail.map { f =>
           val t = new Thread(() =>
@@ -372,7 +370,13 @@ object StreamOps {
           t.start(); t
         }
         threads.foreach(_.join())
-        if (!errs.isEmpty) throw errs.peek()
+        // rethrow the first failure with the others attached, so no
+        // writer's error is lost
+        val first = errs.poll()
+        if (first != null) {
+          errs.forEach(e => first.addSuppressed(e))
+          throw first
+        }
       }
       if (bloomIndexPath != null) {
         fresh.unpersist()

@@ -92,60 +92,35 @@ object Bpe {
   /** Train `numMerges` BPE merges:
     * `(rank, left, right, merged, pair_n)` with `rank` 1-based in merge
     * order. Stops early (fewer rows) if the vocabulary runs out of
-    * pairs.
+    * pairs. Both trainers produce bit-identical merges (BpeSpec), so
+    * the choice is cost only:
+    *  - below `IncrementalThreshold` merges, [[trainFull]]: one
+    *    explode-argmax job per merge over the whole vocabulary;
+    *  - from it on, [[trainBatched]]: pair counts aggregated once and
+    *    maintained by deltas over the words a merge affects, with most
+    *    merges decided on the driver between re-anchor jobs.
     *
-    * Incremental pair-count maintenance: the full pair-count relation
-    * is aggregated ONCE from the initial vocabulary; each iteration
-    * then (1) takes the argmax off the persisted counts, (2) filters
-    * the vocabulary to words whose packed string CONTAINS the merge
-    * pattern `␟a␟␟b␟` — the only words whose pair multiset can change
-    * under the fold — and (3) applies the signed before/after delta of
-    * just those words to the counts relation. Per-iteration aggregation
-    * work is proportional to the AFFECTED words (which shrinks fast as
-    * merges specialize), not the whole vocabulary: a production
-    * 30k-merge train re-aggregates a few thousand words per step
-    * instead of exploding every symbol of every word 30k times. The
-    * merge sequence is bit-identical to the full recompute (property:
-    * BpeSpec "incremental train equals full recompute"); [[trainFull]]
-    * keeps the naive path as the testing reference.
-    *
-    * Strategy selection: the delta machinery costs ~2 extra stages per
-    * iteration, so for SHORT trainings the full recompute's single
-    * explode-argmax job per merge is faster regardless of vocabulary
-    * (measured: 12 merges on the gate corpus, full 6s vs incr 13s);
-    * past `IncrementalThreshold` merges the per-iteration work term
-    * dominates and the delta path wins (measured via
-    * graft.tools.BpeTrainBench at 512 merges over a 210k-word 4-gram
-    * vocabulary, sf0.1: incr 162s vs full 322s, identical merge md5 —
-    * and the ratio grows with vocabulary and merge count). `train`
-    * picks by merge count; both paths produce bit-identical output.
-    *
-    * Lineage/material hygiene: counts are LAZILY `localCheckpoint`ed —
-    * the argmax materializes them, and as the FIRST marked RDD on that
-    * action's path they get truncated (RDD.doCheckpoint stops at the
-    * first marked RDD; deeper marked ancestors are NOT truncated
-    * unless spark.checkpoint.checkpointAllMarkedAncestors is set, a
-    * context-wide conf a library can't assume). The folded vocabulary
-    * therefore checkpoints EAGERLY each iteration — its own tiny
-    * map-over-blocks job — because as a deeper ancestor a lazy mark
-    * would never truncate and ~500 accrued generations overflow the
-    * task-deserialization stack. Materializing ws every iteration also
-    * keeps the delta reading a 1-replace-deep chain: a k-deep lazy
-    * fold chain makes each delta job re-run up to k full-vocabulary
-    * replaces, silently restoring the O(vocab) per-iteration work this
-    * path removes. ContextCleaner reclaims superseded generations (no
-    * CacheManager pinning). */
+    * The threshold is not a measured crossover for [[trainBatched]]. It
+    * was set against an earlier per-merge delta trainer, which cost ~2
+    * extra stages per merge (12 merges on the gate corpus: full 6 s,
+    * delta 13 s; 512 merges over a 210k-word vocabulary at sf0.1: delta
+    * 162 s, full 322 s). `graft.tools.BpeTrainBench` compares the two
+    * kept trainers. */
   val IncrementalThreshold = 128
 
   def train(df: DataFrame, textCol: String, numMerges: Int): DataFrame =
     if (numMerges < IncrementalThreshold) trainFull(df, textCol, numMerges)
     else trainBatched(df, textCol, numMerges)
 
-  /** Merge-loop LATENCY eliminator on top of [[trainIncremental]]'s
-    * delta maintenance: most iterations emit the next merge WITHOUT
-    * scheduling a Spark job, by deciding the argmax driver-side from a
-    * collected top-K snapshot plus sound upper bounds on every pair the
-    * pending merges could have changed.
+  /** The delta trainer with driver-side decisions. Pair counts are
+    * aggregated ONCE from the initial vocabulary; a merge `(a, b)` then
+    * changes only the words whose packed string CONTAINS `␟a␟␟b␟`, and
+    * their signed before/after pair counts are applied to the counts
+    * relation — per-merge work proportional to the affected words, not
+    * the vocabulary. On top of that, most iterations emit the next merge
+    * WITHOUT scheduling a Spark job, by deciding the argmax driver-side
+    * from a collected top-K snapshot plus sound upper bounds on every
+    * pair the pending merges could have changed.
     *
     * The invariant making this exact: folding merge `(a, b) -> ab` over
     * the vocabulary changes the count of pair `(x, y)` ONLY IF
@@ -172,7 +147,21 @@ object Bpe {
     *
     * Output is bit-identical to [[trainFull]] (BpeSpec property); jobs
     * scale with ANCHORS, not merges — on Zipfian text most consecutive
-    * top pairs are symbol-disjoint, so batches run long. */
+    * top pairs are symbol-disjoint, so batches run long.
+    *
+    * Lineage/material hygiene: counts are LAZILY `localCheckpoint`ed —
+    * the anchor argmax materializes them, and as the FIRST marked RDD on
+    * that action's path they get truncated (RDD.doCheckpoint stops at
+    * the first marked RDD; deeper marked ancestors are NOT truncated
+    * unless spark.checkpoint.checkpointAllMarkedAncestors is set, a
+    * context-wide conf a library can't assume). The folded vocabulary
+    * therefore checkpoints EAGERLY at each anchor — its own tiny
+    * map-over-blocks job — because as a deeper ancestor a lazy mark
+    * would never truncate and hundreds of accrued generations overflow
+    * the task-deserialization stack. Materializing ws also keeps the
+    * next deltas reading a shallow replace chain instead of re-running
+    * every earlier fold over the full vocabulary. ContextCleaner
+    * reclaims superseded generations (no CacheManager pinning). */
   def trainBatched(df: DataFrame, textCol: String, numMerges: Int,
                    topK: Int = 64, maxPending: Int = 32): DataFrame = {
     require(numMerges > 0 && topK > 1 && maxPending > 0)
@@ -258,51 +247,10 @@ object Bpe {
     merges.toSeq.toDF("rank", "left", "right", "merged", "pair_n")
   }
 
-  /** The incremental-maintenance trainer (see [[train]] doc). */
-  def trainIncremental(df: DataFrame, textCol: String,
-                       numMerges: Int): DataFrame = {
-    require(numMerges > 0)
-    val spark = df.sparkSession
-    import spark.implicits._
-    var ws = wordCounts(df, textCol).localCheckpoint()
-    var counts = pairCounts(ws).localCheckpoint(false)
-    val merges = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, String, String, String, Long)]
-    var i = 0
-    var exhausted = false
-    while (i < numMerges && !exhausted) {
-      val top = counts
-        .orderBy(col("c").desc, col("s1").asc, col("s2").asc)
-        .limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val r = top.head
-        val (a, b, c) = (r.getString(0), r.getString(1), r.getLong(2))
-        merges += ((i + 1L, a, b, a + b, c))
-        i += 1
-        if (i < numMerges) {
-          val pat = Sep + a + Sep + Sep + b + Sep
-          val aff = ws.filter(col("s").contains(pat))
-          val minus = pairCounts(aff)
-            .select(col("s1"), col("s2"), (-col("c")).as("c"))
-          val plus = pairCounts(aff.select(col("word"), col("n"),
-            mergeOne(col("s"), a, b, a + b).as("s")))
-          counts = counts.unionByName(plus).unionByName(minus)
-            .groupBy(col("s1"), col("s2")).agg(sum(col("c")).as("c"))
-            .filter(col("c") > 0)
-            .localCheckpoint(false)
-          ws = ws.select(col("word"), col("n"),
-            mergeOne(col("s"), a, b, a + b).as("s")).localCheckpoint()
-        }
-      }
-    }
-    merges.toSeq.toDF("rank", "left", "right", "merged", "pair_n")
-  }
-
   /** The naive full-recompute trainer — every iteration re-aggregates
-    * pair counts over the whole vocabulary. Kept as the reference
-    * implementation the incremental [[train]] is property-tested
-    * against (and as the clearer statement of the recipe). */
+    * pair counts over the whole vocabulary. [[train]]'s short-run path,
+    * and the reference [[trainBatched]] is property-tested against (and
+    * the clearer statement of the recipe). */
   def trainFull(df: DataFrame, textCol: String, numMerges: Int): DataFrame = {
     require(numMerges > 0)
     val spark = df.sparkSession

@@ -23,8 +23,6 @@ object TextOps {
 
   def upperCount(text: Column): Column = regexp_count(text, lit("[A-Z]"))
 
-  def digitCount(text: Column): Column = regexp_count(text, lit("[0-9]"))
-
   val EnglishStopwords: Seq[String] =
     Seq("the", "and", "of", "to", "in", "a", "is", "that", "it", "for",
       "on", "with", "as", "was", "at", "by", "an", "be", "this", "are")
@@ -104,17 +102,6 @@ object TextOps {
 
   /** Content fingerprint: md5 of the raw text (exact-dup key). */
   def fingerprintMd5(text: Column): Column = md5(text.cast("binary"))
-
-  /** Rolling polynomial hash (base 31, mod the prime 2^57-13) over
-    * characters — an order-sensitive fingerprint computed with a
-    * higher-order fold, no UDF. The modulus is sized so `acc*31 + 255`
-    * stays under 2^63: a 2^61 modulus would overflow Long under ANSI
-    * mode. */
-  def rollingHash(text: Column): Column = {
-    val p = 144115188075855859L // prime 2^57-13; p*31 + 255 < 2^63
-    aggregate(split(text, ""), lit(0L),
-      (acc, ch) => pmod(acc * lit(31L) + coalesce(ascii(ch), lit(0)), lit(p)))
-  }
 
   /** Unicode normalization ([[UnicodeNormalize]], codegen'd): the
     * canonical pre-dedup step — byte-identical dedup keys need

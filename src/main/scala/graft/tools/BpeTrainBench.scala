@@ -4,14 +4,14 @@ import org.apache.spark.sql.SparkSession
 
 /** Measurement main for the BPE trainer's two strategies:
   * `runMain graft.tools.BpeTrainBench <sfDir> <numMerges>
-  * <incr|full|batched> [ngrams=N]`.
+  * <full|batched> [ngrams=N]`.
   * Trains on the `documents` table and prints one JSON line with the
-  * wall-clock seconds and a checksum of the learned merge list (so the
-  * two strategies' equality is visible in the artifact, not just in
-  * BpeSpec). Evidence for the incremental pair-count-maintenance
-  * claim: at production merge counts the full recompute re-aggregates
-  * the whole vocabulary per merge while the incremental path
-  * re-aggregates only pattern-affected words. The synthetic corpus'
+  * wall-clock seconds, the Spark job count and a checksum of the
+  * learned merge list (so the two strategies' equality is visible in
+  * the artifact, not just in BpeSpec). At production merge counts the
+  * full recompute re-aggregates the whole vocabulary per merge while
+  * the batched path re-aggregates only pattern-affected words and
+  * decides most merges on the driver. The synthetic corpus'
   * word list is tiny (31 distinct words — training exhausts at ~107
   * merges and either strategy is a pure scheduling benchmark), so the
   * optional `ngrams=N` mode re-tokenizes each document's sliding
@@ -55,10 +55,9 @@ object BpeTrainBench {
       })
     val t0 = System.nanoTime()
     val merges = (mode match {
-      case "incr" => graft.text.Bpe.trainIncremental(docs, "text", numMerges)
       case "full" => graft.text.Bpe.trainFull(docs, "text", numMerges)
       case "batched" => graft.text.Bpe.trainBatched(docs, "text", numMerges)
-      case m => sys.error(s"unknown mode $m (incr|full|batched)")
+      case m => sys.error(s"unknown mode $m (full|batched)")
     }).collect()
     val sec = (System.nanoTime() - t0) / 1e9
     val sum = java.security.MessageDigest.getInstance("MD5")

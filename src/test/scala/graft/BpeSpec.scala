@@ -107,22 +107,6 @@ class BpeSpec extends SparkSpec {
     assert(got == Seq("aa", "aa", "aa", "</w>"))
   }
 
-  test("incremental train equals full recompute, merge for merge") {
-    // Mixed corpus with repeats, ties, and words that stay affected
-    // across many merges — exercises delta add/remove/reappear paths.
-    val df = Seq("low lower lowest low low banana bandana aaaa abab",
-      "the thee then than banana low lowest abab aa")
-      .toDF("text")
-    val inc = Bpe.trainIncremental(df, "text", numMerges = 24)
-      .orderBy("rank")
-      .as[(Long, String, String, String, Long)].collect().toSeq
-    val full = Bpe.trainFull(df, "text", numMerges = 24)
-      .orderBy("rank")
-      .as[(Long, String, String, String, Long)].collect().toSeq
-    assert(inc == full)
-    assert(inc.size == 24)
-  }
-
   test("batched train equals full recompute at every snapshot geometry") {
     // The decide-without-a-job path must be bit-identical to the naive
     // trainer regardless of how often it re-anchors: tiny topK forces

@@ -924,6 +924,33 @@ class StreamingSpec extends SparkSpec {
       }
   }
 
+  test("ingest tail: with two failing tail writers the first error is " +
+    "rethrown and the other rides along as suppressed") {
+    import graft.dedup.Dedup
+    import graft.streaming.StreamOps
+    val corpus = Seq((1L, "web", "alpha beta gamma delta"))
+      .toDF("doc_id", "source", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_tail").toString
+    spark.sql("DROP TABLE IF EXISTS tail_spec")
+    Dedup.writeMinhashIndex(corpus, "doc_id", "text", "tail_spec",
+      s"$dir/idx", numBuckets = 4)
+    val b0 = Seq((2L, "web", "epsilon zeta eta theta"))
+      .toDF("doc_id", "source", "text")
+    // the profile and length-histogram writers both read the strata
+    // column, which the batch lacks; the CMS writer succeeds
+    val e = intercept[Exception](StreamOps.ingestDedupBatch(
+      b0, 0L, "tail_spec", s"$dir/store", (p, _) => { p.count(); () },
+      numBuckets = 4, profileIndexPath = s"$dir/prof",
+      profileStrataCol = "no_such_col",
+      lenHistPath = s"$dir/lenhist", lenHistSbBits = 4,
+      cmsPath = s"$dir/cms", cmsDepth = 3, cmsWidth = 64))
+    // Spark may attach its own caller-stack trace as a suppressed too
+    val all = e +: e.getSuppressed.toSeq
+    val tail = all.filter(_.getMessage.contains("no_such_col"))
+    assert(tail.size == 2 && tail.head == e,
+      s"expected 2 tail errors, got: ${all.mkString("; ")}")
+  }
+
   test("ingest replay: re-delivering a batchId after a completed store " +
     "write keeps the store rows and does not double the profile") {
     import graft.dedup.{Bloom, Dedup}

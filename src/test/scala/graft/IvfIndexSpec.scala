@@ -4,9 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.ann.Ann
 
-/** Persisted quantized IVF index: shuffle-free assignment equivalence,
-  * incremental build == one-shot, probe correctness against brute force,
-  * and crash-safe compaction (results preserved, one file per bucket). */
+/** Persisted quantized IVF index: incremental build == one-shot, probe
+  * correctness against brute force, and crash-safe compaction (results
+  * preserved, one file per bucket). The assignment itself is checked
+  * against the cross-join argmin in [[NearestCentroidSpec]]. */
 class IvfIndexSpec extends SparkSpec {
   import spark.implicits._
 
@@ -63,15 +64,6 @@ class IvfIndexSpec extends SparkSpec {
       "a probed-list exhaustive winner was not rank-1 in the pruned scan")
   }
 
-  test("assignCentroid equals ivfAssign (same argmin, same tie rule)") {
-    val cents = Ann.ivfCentroids(vecs, 6)
-    val inline = vecs.select($"vec_id",
-      Ann.assignCentroid(cents, $"embedding").as("centroid_id"))
-    val grouped = Ann.ivfAssign(vecs, cents)
-    assert(inline.exceptAll(grouped).isEmpty &&
-      grouped.exceptAll(inline).isEmpty)
-  }
-
   test("incremental index == one-shot index; probe matches a direct " +
     "quantized ranking over the probed lists") {
     val cents = Ann.ivfCentroids(vecs, 6)
@@ -93,8 +85,9 @@ class IvfIndexSpec extends SparkSpec {
     val probes = Ann.ivfProbes(queries, cents, 2)
     val qz = Ann.quantizeInt8(vecs)
     val cand = qz.select($"vec_id".as("neighbor_id"), $"qvec".as("cq"),
-        $"qscale".as("cs"),
-        Ann.assignCentroid(cents, $"embedding").as("centroid_id"))
+        $"qscale".as("cs"))
+      .join(Ann.ivfAssign(vecs, cents)
+        .withColumnRenamed("vec_id", "neighbor_id"), Seq("neighbor_id"))
       .join(probes, Seq("centroid_id"))
       .filter($"query_id" =!= $"neighbor_id")
       .join(qz.select($"vec_id".as("query_id"), $"qvec".as("qq"),

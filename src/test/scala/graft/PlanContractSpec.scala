@@ -308,16 +308,19 @@ class PlanContractSpec extends SparkSpec {
       .persist() // index at rest — the search plan is what we audit
     try {
       codes.count()
+      // the build is one projection of the corpus scan: assignment and
+      // codes are VecNearest calls, with no join and no exchange
+      val build = plan(Ann.pqIvfEncode(vecs, books, cents))
+      assert(!build.contains("Join") && !build.contains("Exchange"), build)
       val df = Ann.pqIvfTopK(codes, books,
         vecs.filter($"vec_id" % 40 === 0), cents, k = 3, nProbe = 2)
       df.collect()
       // audit the corpus-stream side of the SEARCH plan only: the walk
       // stops at InMemoryTableScan (the index at rest — its one-time
-      // build plan contains pqEncode's intentional broadcast cross
-      // join) AND at BroadcastExchange (the probe/ADC-table broadcast
-      // SIDES are built from the small query set crossed with
-      // dimension-sized books/centroids — intentionally nested-loop;
-      // the contract protects the corpus-sized stream, not them)
+      // build plan is checked above) AND at BroadcastExchange (the
+      // ADC-table broadcast side is the small query set crossed with
+      // the dimension-sized books — intentionally nested-loop; the
+      // contract protects the corpus-sized stream, not it)
       def nodes(p: org.apache.spark.sql.execution.SparkPlan)
           : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
