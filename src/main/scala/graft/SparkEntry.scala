@@ -7,14 +7,18 @@ import graft.ops.{BucketedJoin, Closest, Extras, IntervalJoin, Ops}
 import graft.streaming.StreamOps
 import graft.text.{Corpus, ProfileIndex, TextOps}
 import graft.vis.Vis
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Driver contract: one `queries` entry per implemented operator
-  * (SURVEY.md §2) + equivalent DuckDB SQL in `oracleSql` for the driver's
-  * correctness gate. Column names and BIGINT-normalized types match between
-  * both sides exactly.
+/** Driver contract: the gate table `gates`, one [[SparkEntry.Gate]] per
+  * implemented operator (SURVEY.md §2) with its builder and the
+  * equivalent DuckDB SQL the driver's correctness gate compares it
+  * against. Column names and BIGINT-normalized types match between both
+  * sides exactly. `queries` and `oracleSql` are the table keyed by gate
+  * name; `auxDumps` are the Spark-computed relations that some oracles
+  * read through `{AUX_DIR}/<name>`.
   */
 object SparkEntry {
   import TestTables._
@@ -34,11 +38,9 @@ object SparkEntry {
   // candidate waste x explosion — at 64 the fine join generated ~3.8x the
   // true pairs, at 16 ~2.2x, and the finer key space (8x more (chrom,bin)
   // keys) spreads the exploding join's OUTPUT skew that AQE cannot see in
-  // input bytes. Conf-overridable so bin-width sensitivity stays A/B-able
-  // same-JVM (results are bin-invariant — JoinPropertySpec/OpsSpec gate
+  // input bytes. Results are bin-invariant (JoinPropertySpec/OpsSpec gate
   // that); the pre-r16 value was 64.
-  private def B(s: SparkSession): Long =
-    s.conf.get("spark.graft.gates.binSize", "8").toLong
+  private val GateBin = 8L
 
   // ------------------------------------------------------------ relational
 
@@ -78,7 +80,7 @@ object SparkEntry {
 
   private def ivOverlap(how: String)(s: SparkSession, dir: String): DataFrame =
     Ops.overlap(iv1(s, dir), iv2(s, dir), how = how, suffixes = ("_1", "_2"),
-        returnOverlap = how == "inner", binSize = B(s))
+        returnOverlap = how == "inner", binSize = GateBin)
       .select(col("id_1") +: col("id_2") +:
         (if (how == "inner") Seq(col("overlap_start"), col("overlap_end"))
          else Nil): _*)
@@ -98,14 +100,14 @@ object SparkEntry {
     val c2 = ColSpec.default.withSuffix("_2")
     BucketedJoin.writeBinIndex(
       iv1(s, dir).select("id", "chrom", "start", "end"),
-      t1, s"$path/i1", c1, binSize = B(s), numBuckets = 8)
+      t1, s"$path/i1", c1, binSize = GateBin, numBuckets = 8)
     BucketedJoin.writeBinIndex(
       ColSpec.suffixAll(iv2(s, dir).select("id", "chrom", "start", "end"), "_2"),
-      t2, s"$path/i2", c2, binSize = B(s), numBuckets = 8,
+      t2, s"$path/i2", c2, binSize = GateBin, numBuckets = 8,
       binColName = "__bin_2")
     BucketedJoin.pairsFromBinIndex(
       s.table(t1), s.table(t2), c1, c2,
-      rightBin = "__bin_2", binSize = B(s))
+      rightBin = "__bin_2", binSize = GateBin)
       .select(col("id").as("id_1"), col("id_2"))
   }
 
@@ -114,7 +116,7 @@ object SparkEntry {
   private def ivOverlapInnerMl(s: SparkSession, dir: String): DataFrame =
     Ops.overlap(iv1(s, dir), iv2(s, dir), how = "inner",
         suffixes = ("_1", "_2"),
-        strategy = IntervalJoin.BinnedTwoLevel, binSize = B(s))
+        strategy = IntervalJoin.BinnedTwoLevel, binSize = GateBin)
       .select(col("id_1"), col("id_2"))
 
   /** Two-level binning chosen by `Auto` itself, not forced: ivLong's
@@ -128,7 +130,7 @@ object SparkEntry {
     s.conf.set(IntervalJoin.ProbeThresholdKey, (1L << 12).toString)
     try
       Ops.overlap(ivLong(s, dir), iv1(s, dir), how = "inner",
-          suffixes = ("_1", "_2"), binSize = B(s))
+          suffixes = ("_1", "_2"), binSize = GateBin)
         .select(col("id_1"), col("id_2"))
     finally prev match {
       case Some(v) => s.conf.set(IntervalJoin.ProbeThresholdKey, v)
@@ -138,12 +140,12 @@ object SparkEntry {
 
   private def ivOverlapRight(s: SparkSession, dir: String): DataFrame =
     Ops.overlap(iv3(s, dir), iv2(s, dir), how = "right",
-        suffixes = ("_1", "_2"), binSize = B(s))
+        suffixes = ("_1", "_2"), binSize = GateBin)
       .select(col("id_1"), col("id_2"))
 
   private def ivOverlapOn(s: SparkSession, dir: String): DataFrame =
     Ops.overlap(iv1(s, dir), iv2(s, dir), how = "inner",
-        suffixes = ("_1", "_2"), on = Seq("strand"), binSize = B(s))
+        suffixes = ("_1", "_2"), on = Seq("strand"), binSize = GateBin)
       .select(col("id_1"), col("id_2"), col("strand_1"))
 
   /** Regression for the merged-anti point-promotion bug: df2 carries
@@ -152,19 +154,19 @@ object SparkEntry {
     * point's coordinate. */
   private def ivOverlapLeftPts(s: SparkSession, dir: String): DataFrame =
     Ops.overlap(iv1(s, dir), iv2p(s, dir), how = "left",
-        suffixes = ("_1", "_2"), binSize = B(s))
+        suffixes = ("_1", "_2"), binSize = GateBin)
       .select(col("id_1"), col("id_2"))
 
   private def ivSetdiffPts(s: SparkSession, dir: String): DataFrame =
-    Ops.setdiff(iv1(s, dir), iv2p(s, dir), binSize = B(s))
+    Ops.setdiff(iv1(s, dir), iv2p(s, dir), binSize = GateBin)
       .select(col("id"), col("chrom"), col("start"), col("end"))
 
   private def ivCountOverlaps(s: SparkSession, dir: String): DataFrame =
-    Ops.countOverlaps(iv1(s, dir), iv2(s, dir), countCol = "n", binSize = B(s))
+    Ops.countOverlaps(iv1(s, dir), iv2(s, dir), countCol = "n", binSize = GateBin)
       .select(col("id"), col("n"))
 
   private def ivSetdiff(s: SparkSession, dir: String): DataFrame =
-    Ops.setdiff(iv1(s, dir), iv2(s, dir), binSize = B(s))
+    Ops.setdiff(iv1(s, dir), iv2(s, dir), binSize = GateBin)
       .select(col("id"), col("chrom"), col("start"), col("end"))
 
   // bucketSize 256 over the ~[0, 2530] fixture coordinate space exercises
@@ -199,18 +201,18 @@ object SparkEntry {
       .select(col("id"), col("chrom"), col("start"), col("end"))
 
   private def ivCoverage(s: SparkSession, dir: String): DataFrame =
-    Ops.coverage(iv2(s, dir), iv1(s, dir), coverageCol = "coverage", binSize = B(s))
+    Ops.coverage(iv2(s, dir), iv1(s, dir), coverageCol = "coverage", binSize = GateBin)
       .select(col("id"), col("chrom"), col("start"), col("end"), col("coverage"))
 
   /** Sequence-backed ops over the synthetic md5-derived chunk store
     * (extras.py:170-355): GC fraction per iv1 interval and a GATC digest
     * of the genome. */
   private def seqFracGc(s: SparkSession, dir: String): DataFrame =
-    graft.seq.SeqOps.fracGc(iv1(s, dir), seqChunks(s), binSize = B(s))
+    graft.seq.SeqOps.fracGc(iv1(s, dir), seqChunks(s), binSize = GateBin)
       .select(col("id"), col("frac_gc"))
 
   private def seqFracMapped(s: SparkSession, dir: String): DataFrame =
-    graft.seq.SeqOps.fracMapped(iv1(s, dir), seqChunks(s), binSize = B(s))
+    graft.seq.SeqOps.fracMapped(iv1(s, dir), seqChunks(s), binSize = GateBin)
       .select(col("id"), col("frac_mapped"))
 
   private def seqDigest(s: SparkSession, dir: String): DataFrame =
@@ -244,14 +246,13 @@ object SparkEntry {
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       val it = scratchCreated.iterator()
-      while (it.hasNext) {
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-          f.delete(); ()
-        }
-        try rm(new java.io.File(it.next())) catch { case _: Throwable => }
-      }
+      while (it.hasNext)
+        try rmTree(new java.io.File(it.next())) catch { case _: Throwable => }
     }))
+  }
+
+  private def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
   }
 
   private def scratchFile(name: String): String = {
@@ -406,12 +407,12 @@ object SparkEntry {
   /** Interval-set Jaccard of iv1 vs iv2 (the bedtools statistic): one
     * row of exact longs plus their single IEEE division. */
   private def ivJaccard(s: SparkSession, dir: String): DataFrame =
-    Extras.jaccardIntervals(iv1(s, dir), iv2(s, dir), binSize = B(s))
+    Extras.jaccardIntervals(iv1(s, dir), iv2(s, dir), binSize = GateBin)
 
   /** Relative-distance statistic of iv2 midpoints against iv1 flanks
     * (bedtools reldist): exact flank deltas + their single division. */
   private def ivReldist(s: SparkSession, dir: String): DataFrame =
-    Extras.relDistance(iv2(s, dir), iv1(s, dir), binSize = B(s),
+    Extras.relDistance(iv2(s, dir), iv1(s, dir), binSize = GateBin,
       bucketSize = SCAN_BUCKET)
 
   /** Coverage-depth histogram of iv1 over the synthetic chromsizes
@@ -430,19 +431,19 @@ object SparkEntry {
   /** frac_gene_coverage composition (extras.py:357-387): iv2 "genes"
     * covered and counted against iv1. */
   private def ivGeneCoverage(s: SparkSession, dir: String): DataFrame =
-    Extras.fracGeneCoverage(iv2(s, dir), iv1(s, dir), binSize = B(s))
+    Extras.fracGeneCoverage(iv2(s, dir), iv1(s, dir), binSize = GateBin)
       .select(col("id"), col("chrom"), col("start"), col("end"),
         col("coverage"), col("count"))
 
   private def ivClosest(s: SparkSession, dir: String): DataFrame =
     Closest.closest(iv3(s, dir), Some(iv2(s, dir)), k = 1,
-        tieBreakingCol = Some("id"), suffixes = ("_1", "_2"), binSize = B(s),
+        tieBreakingCol = Some("id"), suffixes = ("_1", "_2"), binSize = GateBin,
         bucketSize = SCAN_BUCKET)
       .select(col("id_1"), col("id_2"), col("distance"))
 
   private def ivClosestK3(s: SparkSession, dir: String): DataFrame =
     Closest.closest(iv3(s, dir), Some(iv2(s, dir)), k = 3,
-        tieBreakingCol = Some("id"), suffixes = ("_1", "_2"), binSize = B(s),
+        tieBreakingCol = Some("id"), suffixes = ("_1", "_2"), binSize = GateBin,
         bucketSize = SCAN_BUCKET)
       .select(col("id_1"), col("id_2"), col("distance"))
 
@@ -450,13 +451,13 @@ object SparkEntry {
     * iv3 (reference arrops.py:655-657 excludes only the row itself). */
   private def ivClosestSelf(s: SparkSession, dir: String): DataFrame =
     Closest.closest(iv3(s, dir), None, k = 1, tieBreakingCol = Some("id"),
-        suffixes = ("_1", "_2"), binSize = B(s), bucketSize = SCAN_BUCKET)
+        suffixes = ("_1", "_2"), binSize = GateBin, bucketSize = SCAN_BUCKET)
       .select(col("id_1"), col("id_2"), col("distance"))
 
   private def ivClosestUpstream(s: SparkSession, dir: String): DataFrame =
     Closest.closest(iv3(s, dir), Some(iv2(s, dir)), k = 1,
         ignoreDownstream = true, tieBreakingCol = Some("id"),
-        suffixes = ("_1", "_2"), binSize = B(s), bucketSize = SCAN_BUCKET)
+        suffixes = ("_1", "_2"), binSize = GateBin, bucketSize = SCAN_BUCKET)
       .select(col("id_1"), col("id_2"), col("distance"))
 
   /** Arbitrary tie EXPRESSION (reference accepts a callable,
@@ -466,17 +467,17 @@ object SparkEntry {
   private def ivClosestTie(s: SparkSession, dir: String): DataFrame =
     Closest.closest(iv3(s, dir), Some(iv2(s, dir)), k = 1,
         tieBreakingExpr = Some(-col("id")), suffixes = ("_1", "_2"),
-        binSize = B(s), bucketSize = SCAN_BUCKET)
+        binSize = GateBin, bucketSize = SCAN_BUCKET)
       .select(col("id_1"), col("id_2"), col("distance"))
 
   private def ivSubtract(s: SparkSession, dir: String): DataFrame =
-    Ops.subtract(iv2(s, dir), iv1(s, dir), binSize = B(s))
+    Ops.subtract(iv2(s, dir), iv1(s, dir), binSize = GateBin)
       .select(col("id"), col("chrom"), col("start"), col("end"))
 
   /** `return_index`: per-parent fragment counter `sub_index_` in fragment
     * order (reference ops.py:1323-1329). */
   private def ivSubtractIndex(s: SparkSession, dir: String): DataFrame =
-    Ops.subtract(iv2(s, dir), iv1(s, dir), returnIndex = true, binSize = B(s))
+    Ops.subtract(iv2(s, dir), iv1(s, dir), returnIndex = true, binSize = GateBin)
       .select(col("id"), col("chrom"), col("start"), col("end"),
         col("sub_index_").cast("long").as("sub_index_"))
 
@@ -486,7 +487,7 @@ object SparkEntry {
   private def ivClosestIgnore(s: SparkSession, dir: String): DataFrame =
     Closest.closest(iv3(s, dir), Some(iv2(s, dir)), k = 1,
         ignoreOverlaps = true, tieBreakingCol = Some("id"),
-        suffixes = ("_1", "_2"), binSize = B(s), bucketSize = SCAN_BUCKET)
+        suffixes = ("_1", "_2"), binSize = GateBin, bucketSize = SCAN_BUCKET)
       .select(col("id_1"), col("id_2"), col("distance"))
 
   private def ivComplement(s: SparkSession, dir: String): DataFrame =
@@ -535,7 +536,7 @@ object SparkEntry {
     val a = scrambledFixture(s, dir, "ko_iv3", iv3(s, dir), 2654435761L)
     val b = scrambledFixture(s, dir, "ko_iv2", iv2(s, dir), 1103515245L)
     val out = Ops.overlap(a, b, how = "left", suffixes = ("_1", "_2"),
-      keepOrder = true, binSize = B(s))
+      keepOrder = true, binSize = GateBin)
     Ops.withInputOrdinal(out.select(col("id_1"), col("id_2")), "pos")
   }
 
@@ -571,7 +572,7 @@ object SparkEntry {
     val lv = Extras.stackIntervals(iv3(s, dir))
       .select(col("chrom"), col("start"), col("end"), col("id"), col("level"))
     val viol = Ops.overlap(lv, lv, how = "inner", suffixes = ("_1", "_2"),
-        on = Seq("level"), binSize = B(s))
+        on = Seq("level"), binSize = GateBin)
       .filter(col("id_1") < col("id_2"))
       .groupBy(col("chrom_1").as("__vc")).agg(count(lit(1)).as("__viol"))
     val depth = Extras.pileup(iv3(s, dir), bucketSize = SCAN_BUCKET)
@@ -616,6 +617,35 @@ object SparkEntry {
         max(col("face_rgb")).as("face_rgb"),
         max(col("edge_rgb")).as("edge_rgb"))
 
+  /** Harness of the evt_stream_* gates: runs `stream` into the memory
+    * sink `sink` with `parts` shuffle partitions, calls `feed` with the
+    * started query, then stops it and returns the sink table. The
+    * partition count is set before `start()` because stateful operators
+    * fix theirs at query start; the session's value is restored after.
+    * The state store and offset/commit WAL fsync every micro-batch, so
+    * the checkpoint sits on tmpfs when available (unique per run,
+    * deleted after) and a throttled block device can't serialize the
+    * batches. */
+  private def streamGate[T](s: SparkSession, sink: String, parts: Int,
+      stream: Dataset[T])(feed: StreamingQuery => Unit): DataFrame = {
+    s.catalog.dropTempView(sink)
+    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    val ckpt = graft.core.Scratch.dir.map(d =>
+      new java.io.File(d, s"ckpt-${java.util.UUID.randomUUID()}"))
+    try {
+      val writer = stream.writeStream.format("memory").queryName(sink)
+        .outputMode("append")
+      val q = ckpt.fold(writer)(c =>
+        writer.option("checkpointLocation", c.getAbsolutePath)).start()
+      try feed(q) finally q.stop()
+    } finally {
+      s.conf.set("spark.sql.shuffle.partitions", prevParts)
+      ckpt.foreach(rmTree)
+    }
+    s.table(sink)
+  }
+
   /** Batch-equivalence oracle for the streaming merge: iv1 fed through a
     * MemoryStream in ~8 micro-batches whose arrival order is scrambled
     * WITHIN 128-coordinate buckets (bounded disorder, the operator's
@@ -638,25 +668,11 @@ object SparkEntry {
     val arrival = rows.sortBy(iv =>
       (iv.start / 128, (iv.start * 31 + iv.end * 7) % 97, iv.chrom, iv.end))
     val input = MemoryStream[StreamOps.Iv]
-    s.catalog.dropTempView("evt_stream_merge_sink")
     // the stateful shuffle keys on chrom (8 groups): 32 state-store
     // partitions per micro-batch are pure fixed overhead, so pin the
-    // streaming query's partitioning to the group count (captured at
-    // query start; restored after)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    // state store + offset/commit WAL fsync per micro-batch: place the
-    // checkpoint on tmpfs when available (unique per run, deleted below)
-    // so a throttled block device can't serialize the batches
-    val ckpt = graft.core.Scratch.dir.map(d =>
-      new java.io.File(d, s"ckpt-${java.util.UUID.randomUUID()}"))
-    val writer0 = StreamOps.streamingMerge(input.toDS(), minDist = 0,
-        allowedLag = 256)
-      .writeStream.format("memory").queryName("evt_stream_merge_sink")
-      .outputMode("append")
-    val q = ckpt.fold(writer0)(c =>
-      writer0.option("checkpointLocation", c.getAbsolutePath)).start()
-    try {
+    // streaming query's partitioning to the group count
+    streamGate(s, "evt_stream_merge_sink", 8, StreamOps.streamingMerge(
+        input.toDS(), minDist = 0, allowedLag = 256)) { q =>
       // 2 mid-stream batches + the sentinel flush: batch-boundary state
       // carry, in-window disorder repair, and the lag frontier are all
       // exercised from the second batch on, and the oracle checks full
@@ -669,18 +685,7 @@ object SparkEntry {
       input.addData(rows.map(_.chrom).distinct.toSeq
         .map(c => StreamOps.Iv(c, 1L << 20, (1L << 20) + 1)))
       q.processAllAvailable()
-    } finally {
-      q.stop()
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      ckpt.foreach { c =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-        }
-        rm(c)
-      }
-    }
-    s.table("evt_stream_merge_sink")
-      .select(col("chrom"), col("start"), col("end"),
+    }.select(col("chrom"), col("start"), col("end"),
         col("nIntervals").as("n_intervals"))
   }
 
@@ -706,33 +711,13 @@ object SparkEntry {
     val poisoned = batches.head.filter(_.eventId % 16 == 0)
       .map(e => e.copy(value = e.value + 9999.0))
     val input = MemoryStream[StreamOps.Ev]
-    s.catalog.dropTempView("evt_stream_dedup_sink")
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val ckpt = graft.core.Scratch.dir.map(d =>
-      new java.io.File(d, s"ckpt-${java.util.UUID.randomUUID()}"))
-    val writer0 = StreamOps.streamingDedup(input.toDS(), delay = "365 days")
-      .writeStream.format("memory").queryName("evt_stream_dedup_sink")
-      .outputMode("append")
-    val q = ckpt.fold(writer0)(c =>
-      writer0.option("checkpointLocation", c.getAbsolutePath)).start()
-    try {
+    streamGate(s, "evt_stream_dedup_sink", 8, StreamOps.streamingDedup(
+        input.toDS(), delay = "365 days")) { q =>
       batches.zipWithIndex.foreach { case (b, i) =>
         input.addData((if (i == 1) poisoned ++ b else b).toSeq)
         q.processAllAvailable()
       }
-    } finally {
-      q.stop()
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      ckpt.foreach { c =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-        }
-        rm(c)
-      }
-    }
-    s.table("evt_stream_dedup_sink")
-      .select(col("eventId").as("event_id"), col("tms"),
+    }.select(col("eventId").as("event_id"), col("tms"),
         col("eventType").as("event_type"), col("value"))
   }
 
@@ -758,34 +743,14 @@ object SparkEntry {
     val maxTms = base.map(_.tms).max
     val batches = base.grouped(math.max(1, base.length / 3 + 1)).toSeq
     val input = MemoryStream[StreamOps.SessEv]
-    s.catalog.dropTempView("evt_stream_sessionize_sink")
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val ckpt = graft.core.Scratch.dir.map(d =>
-      new java.io.File(d, s"ckpt-${java.util.UUID.randomUUID()}"))
-    val writer0 = StreamOps.streamingSessionize(input.toDS())
-      .writeStream.format("memory").queryName("evt_stream_sessionize_sink")
-      .outputMode("append")
-    val q = ckpt.fold(writer0)(c =>
-      writer0.option("checkpointLocation", c.getAbsolutePath)).start()
-    try {
+    streamGate(s, "evt_stream_sessionize_sink", 8,
+        StreamOps.streamingSessionize(input.toDS())) { q =>
       batches.foreach { b => input.addData(b.toSeq); q.processAllAvailable() }
       input.addData(StreamOps.SessEv(-1L, -1L, maxTms + 6L * 3600 * 1000))
       q.processAllAvailable()
       input.addData(StreamOps.SessEv(-1L, -2L, maxTms + 6L * 3600 * 1000 + 1))
       q.processAllAvailable()
-    } finally {
-      q.stop()
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      ckpt.foreach { c =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-        }
-        rm(c)
-      }
-    }
-    s.table("evt_stream_sessionize_sink")
-      .filter(col("userId") >= 0)
+    }.filter(col("userId") >= 0)
       .select(col("userId").as("user_id"), col("session_start"),
         col("session_last"), col("n_events"))
   }
@@ -813,38 +778,17 @@ object SparkEntry {
     val maxTms = base.map(_.tms).max
     val batches = base.grouped(math.max(1, base.length / 3 + 1)).toSeq
     val input = MemoryStream[StreamOps.Ev]
-    s.catalog.dropTempView("evt_stream_window_sink")
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    val ckpt = graft.core.Scratch.dir.map(d =>
-      new java.io.File(d, s"ckpt-${java.util.UUID.randomUUID()}"))
     val windowed = StreamOps.windowedEventCounts(
       input.toDF().withColumn("__ts", timestamp_millis(col("tms")))
         .withColumnRenamed("eventType", "event_type"),
       tsCol = "__ts", window_ = "1 hour", watermark = "0 seconds")
-    val writer0 = windowed
-      .writeStream.format("memory").queryName("evt_stream_window_sink")
-      .outputMode("append")
-    val q = ckpt.fold(writer0)(c =>
-      writer0.option("checkpointLocation", c.getAbsolutePath)).start()
-    try {
+    streamGate(s, "evt_stream_window_sink", 8, windowed) { q =>
       batches.foreach { b => input.addData(b.toSeq); q.processAllAvailable() }
       input.addData(StreamOps.Ev(-1L, maxTms + 6L * 3600 * 1000, "__flush", 0.0))
       q.processAllAvailable()
       input.addData(StreamOps.Ev(-2L, maxTms + 6L * 3600 * 1000 + 1, "__flush", 0.0))
       q.processAllAvailable()
-    } finally {
-      q.stop()
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      ckpt.foreach { c =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-        }
-        rm(c)
-      }
-    }
-    s.table("evt_stream_window_sink")
-      .filter(col("event_type") =!= "__flush")
+    }.filter(col("event_type") =!= "__flush")
       .select(expr("unix_millis(window.start) div 3600000").as("hour_bucket"),
         col("event_type"), col("n"),
         col("value_sum").cast("long").as("sum_value_cents"))
@@ -875,9 +819,6 @@ object SparkEntry {
           Seq(StreamOps.Ev(-2L, maxTms + 6L * 3600 * 1000 + 1, "__flush", 0.0)))
     val srcDir = new java.io.File(scratchFile("evt_stream_file_src"))
     srcDir.mkdirs()
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-    }
     val t0 = System.currentTimeMillis() - 3600 * 1000
     batches.zipWithIndex.foreach { case (b, i) =>
       val tmp = new java.io.File(scratchFile(s"esf_tmp_$i"))
@@ -891,13 +832,8 @@ object SparkEntry {
       // setLastModified failure must surface, not flake the gate.
       require(dst.setLastModified(t0 + i * 60000L),
         s"setLastModified failed for $dst")
-      rm(tmp)
+      rmTree(tmp)
     }
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    s.catalog.dropTempView("evt_stream_file_sink")
-    val ckpt = graft.core.Scratch.dir.map(d =>
-      new java.io.File(d, s"ckpt-${java.util.UUID.randomUUID()}"))
     val stream = s.readStream
       .schema(org.apache.spark.sql.Encoders.product[StreamOps.Ev].schema)
       .option("maxFilesPerTrigger", "1")
@@ -906,20 +842,10 @@ object SparkEntry {
       stream.withColumn("__ts", timestamp_millis(col("tms")))
         .withColumnRenamed("eventType", "event_type"),
       tsCol = "__ts", window_ = "1 hour", watermark = "0 seconds")
-    val writer0 = windowed
-      .writeStream.format("memory").queryName("evt_stream_file_sink")
-      .outputMode("append")
-    val q = ckpt.fold(writer0)(c =>
-      writer0.option("checkpointLocation", c.getAbsolutePath)).start()
-    try q.processAllAvailable()
-    finally {
-      q.stop()
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      ckpt.foreach(rm)
-      rm(srcDir)
-    }
-    s.table("evt_stream_file_sink")
-      .filter(col("event_type") =!= "__flush")
+    val sink = try streamGate(s, "evt_stream_file_sink", 8, windowed)(
+        _.processAllAvailable())
+      finally rmTree(srcDir)
+    sink.filter(col("event_type") =!= "__flush")
       .select(expr("unix_millis(window.start) div 3600000").as("hour_bucket"),
         col("event_type"), col("n"),
         col("value_sum").cast("long").as("sum_value_cents"))
@@ -951,21 +877,11 @@ object SparkEntry {
     val rBatches = rRows.grouped(math.max(1, rRows.length / 3 + 1)).toSeq
     val lIn = MemoryStream[StreamOps.JEv]
     val rIn = MemoryStream[StreamOps.JEv]
-    s.catalog.dropTempView("evt_stream_join_sink")
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
     // 4, not 8: a stream-stream join keeps FOUR state stores per
     // partition per trigger; store open/commit overhead, not data,
     // dominates this feed's micro-batches
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val ckpt = graft.core.Scratch.dir.map(d =>
-      new java.io.File(d, s"ckpt-${java.util.UUID.randomUUID()}"))
-    val writer0 = StreamOps.streamingEventJoin(lIn.toDS(), rIn.toDS(),
-        withinMs = 86400000L)
-      .writeStream.format("memory").queryName("evt_stream_join_sink")
-      .outputMode("append")
-    val q = ckpt.fold(writer0)(c =>
-      writer0.option("checkpointLocation", c.getAbsolutePath)).start()
-    try {
+    streamGate(s, "evt_stream_join_sink", 4, StreamOps.streamingEventJoin(
+        lIn.toDS(), rIn.toDS(), withinMs = 86400000L)) { q =>
       (0 until math.max(lBatches.size, rBatches.size)).foreach { k =>
         if (k < lBatches.size) lIn.addData(lBatches(k).toSeq)
         if (k < rBatches.size) rIn.addData(rBatches(k).toSeq)
@@ -978,18 +894,7 @@ object SparkEntry {
       lIn.addData(StreamOps.JEv(-3L, -1L, flushT + 1))
       rIn.addData(StreamOps.JEv(-4L, -1L, flushT + 1))
       q.processAllAvailable()
-    } finally {
-      q.stop()
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      ckpt.foreach { c =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-        }
-        rm(c)
-      }
-    }
-    s.table("evt_stream_join_sink")
-      .filter(col("l_id") >= 0)
+    }.filter(col("l_id") >= 0)
       .select(col("l_id"), col("r_id"), col("user_id"), col("dt_ms"))
   }
 
@@ -1012,31 +917,16 @@ object SparkEntry {
       .select(col("c_custkey").cast("long").as("userId"),
         col("c_mktsegment").as("segment"))
     val in = MemoryStream[StreamOps.JEv]
-    s.catalog.dropTempView("evt_stream_enrich_sink")
-    val ckpt = graft.core.Scratch.dir.map(d =>
-      new java.io.File(d, s"ckpt-${java.util.UUID.randomUUID()}"))
-    val writer0 = StreamOps.streamingEnrich(in.toDF(), dim, Seq("userId"))
+    val enriched = StreamOps.streamingEnrich(in.toDF(), dim, Seq("userId"))
       .select(col("eventId").as("event_id"), col("userId").as("user_id"),
         col("segment"))
-      .writeStream.format("memory").queryName("evt_stream_enrich_sink")
-      .outputMode("append")
-    val q = ckpt.fold(writer0)(c =>
-      writer0.option("checkpointLocation", c.getAbsolutePath)).start()
-    try {
+    // stateless broadcast join: no shuffle, so the partition count is moot
+    streamGate(s, "evt_stream_enrich_sink", 8, enriched) { q =>
       base.grouped(math.max(1, base.length / 4 + 1)).foreach { b =>
         in.addData(b.toSeq)
         q.processAllAvailable()
       }
-    } finally {
-      q.stop()
-      ckpt.foreach { c =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-        }
-        rm(c)
-      }
     }
-    s.table("evt_stream_enrich_sink")
   }
 
   /** End-to-end streaming-ingest gate over the FULL persisted-index
@@ -1063,12 +953,7 @@ object SparkEntry {
     * metrics. */
   private def evtIngestE2e(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // null-guard the stratum key: Spark's distinct() counts a NULL
-    // stratum, DuckDB's COUNT(DISTINCT) skips it — sentinel both sides
-    // (the doc_split_group posture) so the gate survives a nullable
-    // fixture
-    val d = docs(s, dir).select(col("doc_id"),
-      coalesce(col("source"), lit("__null")).as("source"), col("text"))
+    val d = docs(s, dir).select(col("doc_id"), col("source"), col("text"))
     // re-keyed replay copies get NEGATED ids (-id-1): genuine doc_ids
     // are non-negative, so the synthetic ids can never collide with
     // real ones at ANY fixture scale (fixed +1e6 offsets would alias
@@ -1134,8 +1019,8 @@ object SparkEntry {
     // action. Each aggregate is value-identical to the job it replaces:
     //  - minhash: band rows = count of the distinct (id, band) relation,
     //    docs = countDistinct id over that same relation;
-    //  - hist strata: source is sentinel-coalesced upstream, so
-    //    countDistinct's null-skip cannot diverge from distinct().count();
+    //  - hist strata: countDistinct skips the null stratum, so it is
+    //    counted on its own (some row's source is null);
     //  - cms_tokens: mass DIV depth is the same integer division.
     // Driver-side values from the delivery callbacks (exact_dups,
     // pairs_replay_drift) enter as literals.
@@ -1155,7 +1040,8 @@ object SparkEntry {
       .agg(count(lit(1)).as("__flagged"))
     val histAgg = graft.text.Hdr.readHistogram(s, hist, Seq("source"))
       .agg(coalesce(sum(col("n")), lit(0L)).as("__hist_docs"),
-        countDistinct(coalesce(col("source"), lit("__null")))
+        (countDistinct(col("source")) +
+          when(count(lit(1)) > count(col("source")), 1L).otherwise(0L))
           .as("__hist_strata"))
     val cmsAgg = graft.text.Cms.readSketch(s, cms)
       .agg(coalesce(sum(col("n")), lit(0L)).as("__cms_mass"))
@@ -1210,7 +1096,7 @@ object SparkEntry {
 
   private def ivPairByDistance(s: SparkSession, dir: String): DataFrame =
     Extras.pairByDistance(iv3(s, dir), minSep = 10L, maxSep = 200L,
-        maxIntervening = Some(5L), suffixes = ("_1", "_2"), binSize = B(s),
+        maxIntervening = Some(5L), suffixes = ("_1", "_2"), binSize = GateBin,
         tieBreak = Some(col("id")))
       .select(col("id_1"), col("id_2"))
 
@@ -1271,7 +1157,7 @@ object SparkEntry {
   private def ivPairEndpoints(s: SparkSession, dir: String): DataFrame =
     Extras.pairByDistance(iv3(s, dir), minSep = 10L, maxSep = 200L,
         maxIntervening = Some(5L), relativeTo = "endpoints",
-        suffixes = ("_1", "_2"), binSize = B(s), tieBreak = Some(col("id")))
+        suffixes = ("_1", "_2"), binSize = GateBin, tieBreak = Some(col("id")))
       .select(col("id_1"), col("id_2"))
 
   /** sanitize_bedframe semantics (reference construction.py:265-343) on a
@@ -1361,12 +1247,10 @@ object SparkEntry {
     * repartition to the session's core count after the read unlocks the
     * cores; Catalyst still prunes columns through the exchange, so only
     * the used columns shuffle. Skipped when the scan already splits to
-    * >= half the cores (real multi-file inputs at cluster scale), and
-    * conf-gated for same-JVM A/B. */
+    * >= half the cores (real multi-file inputs at cluster scale). */
   private def widen(s: SparkSession, df: DataFrame): DataFrame = {
     val target = s.sparkContext.defaultParallelism
-    if (!s.conf.get("spark.graft.gates.widenScan", "true").toBoolean) df
-    else if (df.rdd.getNumPartitions * 2 >= target) df
+    if (df.rdd.getNumPartitions * 2 >= target) df
     else df.repartition(target)
   }
 
@@ -3004,7 +2888,7 @@ FROM enc JOIN ids USING (subword)"""
     * also fires on sf0.001-sized inputs (PlanContractSpec asserts the
     * resulting plan shape). */
   private def extSqlOverlap(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set(graft.plans.IntervalJoinRewrite.BinSizeKey, B(s).toString)
+    s.conf.set(graft.plans.IntervalJoinRewrite.BinSizeKey, GateBin.toString)
     s.conf.set(graft.plans.IntervalJoinRewrite.SmallBytesKey, "1024")
     iv1(s, dir).createOrReplaceTempView("graft_sql_iv1")
     iv2(s, dir).createOrReplaceTempView("graft_sql_iv2")
@@ -3021,7 +2905,7 @@ FROM enc JOIN ids USING (subword)"""
     * (start = end = a.start), so the same binned rewrite applies; vanilla
     * Spark would scan every same-chrom build row per probe. */
   private def extSqlPoint(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set(graft.plans.IntervalJoinRewrite.BinSizeKey, B(s).toString)
+    s.conf.set(graft.plans.IntervalJoinRewrite.BinSizeKey, GateBin.toString)
     s.conf.set(graft.plans.IntervalJoinRewrite.SmallBytesKey, "1024")
     iv3(s, dir).createOrReplaceTempView("graft_sql_iv3")
     iv2(s, dir).createOrReplaceTempView("graft_sql_iv2")
@@ -3068,7 +2952,7 @@ FROM enc JOIN ids USING (subword)"""
     * default, an 8-way parallelism floor worth ~1.5x wall at sf0.1
     * (the ext_sql_closest vs iv_closest_k3 gap VERDICT r14 flagged). */
   private def extSqlClosest(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set(graft.plans.IntervalJoinRewrite.BinSizeKey, B(s).toString)
+    s.conf.set(graft.plans.IntervalJoinRewrite.BinSizeKey, GateBin.toString)
     s.conf.set(graft.plans.GraftTableFunctions.BucketSizeKey,
       SCAN_BUCKET.toString)
     iv3(s, dir).createOrReplaceTempView("graft_sql_iv3")
@@ -3093,7 +2977,7 @@ FROM enc JOIN ids USING (subword)"""
     * TVF — the engine's merge-then-binned-join plan. Same semantics
     * and oracle as iv_coverage. */
   private def extSqlCoverage(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set(graft.plans.IntervalJoinRewrite.BinSizeKey, B(s).toString)
+    s.conf.set(graft.plans.IntervalJoinRewrite.BinSizeKey, GateBin.toString)
     iv1(s, dir).createOrReplaceTempView("graft_sql_iv1")
     iv2(s, dir).createOrReplaceTempView("graft_sql_iv2")
     s.sql(
@@ -3121,7 +3005,7 @@ FROM enc JOIN ids USING (subword)"""
   /** Interval subtraction in plain SQL through the `graft_subtract`
     * TVF — same semantics and oracle as iv_subtract. */
   private def extSqlSubtract(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set(graft.plans.IntervalJoinRewrite.BinSizeKey, B(s).toString)
+    s.conf.set(graft.plans.IntervalJoinRewrite.BinSizeKey, GateBin.toString)
     iv1(s, dir).createOrReplaceTempView("graft_sql_iv1")
     iv2(s, dir).createOrReplaceTempView("graft_sql_iv2")
     s.sql(
@@ -3159,7 +3043,7 @@ FROM enc JOIN ids USING (subword)"""
     * and oracle as iv_closest_upstream. bucketSize conf as in
     * ext_sql_closest (parallelism only; bucket-invariant results). */
   private def extSqlClosestUp(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set(graft.plans.IntervalJoinRewrite.BinSizeKey, B(s).toString)
+    s.conf.set(graft.plans.IntervalJoinRewrite.BinSizeKey, GateBin.toString)
     s.conf.set(graft.plans.GraftTableFunctions.BucketSizeKey,
       SCAN_BUCKET.toString)
     iv3(s, dir).createOrReplaceTempView("graft_sql_iv3")
@@ -3172,182 +3056,30 @@ FROM enc JOIN ids USING (subword)"""
 
   // ---------------------------------------------------------------- wiring
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_pricing_summary" -> (q1 _),
-    "q3_segment_revenue" -> (q3 _),
-    "iv_select" -> (ivSelect _),
-    "iv_expand" -> (ivExpand _),
-    "iv_expand_scale" -> (ivExpandScale _),
-    "iv_overlap_inner" -> ivOverlap("inner") _,
-    "iv_overlap_left" -> ivOverlap("left") _,
-    "iv_overlap_outer" -> ivOverlap("outer") _,
-    "iv_overlap_on" -> (ivOverlapOn _),
-    "iv_overlap_right" -> (ivOverlapRight _),
-    "iv_overlap_inner_2l" -> (ivOverlapInnerMl _),
-    "iv_overlap_auto_2l" -> (ivOverlapAuto2l _),
-    "iv_overlap_bucketed" -> (ivOverlapBucketed _),
-    "ext_sql_overlap" -> (extSqlOverlap _),
-    "ext_sql_point" -> (extSqlPoint _),
-    "ext_sql_closest" -> (extSqlClosest _),
-    "ext_sql_merge" -> (extSqlMerge _),
-    "ext_sql_coverage" -> (extSqlCoverage _),
-    "ext_sql_cluster" -> (extSqlCluster _),
-    "ext_sql_subtract" -> (extSqlSubtract _),
-    "ext_sql_complement" -> (extSqlComplement _),
-    "ext_sql_merge_on" -> (extSqlMergeOn _),
-    "ext_sql_closest_up" -> (extSqlClosestUp _),
-    "iv_closest_self" -> (ivClosestSelf _),
-    "iv_overlap_left_pts" -> (ivOverlapLeftPts _),
-    "iv_setdiff_pts" -> (ivSetdiffPts _),
-    "iv_count_overlaps" -> (ivCountOverlaps _),
-    "iv_setdiff" -> (ivSetdiff _),
-    "iv_cluster" -> (ivCluster _),
-    "iv_cluster_on" -> (ivClusterOn _),
-    "iv_expand_left" -> (ivExpandLeft _),
-    "iv_merge" -> ivMerge(Some(0)) _,
-    "iv_merge_on" -> (ivMergeOn _),
-    "iv_merge_mindist" -> ivMerge(Some(5)) _,
-    "iv_merge_strict" -> ivMerge(None) _,
-    "iv_coverage" -> (ivCoverage _),
-    "iv_gene_coverage" -> (ivGeneCoverage _),
-    "iv_jaccard" -> (ivJaccard _),
-    "iv_reldist" -> (ivReldist _),
-    "iv_genomecov" -> (ivGenomecov _),
-    "iv_multiinter" -> (ivMultiinter _),
-    "seq_frac_gc" -> (seqFracGc _),
-    "seq_frac_mapped" -> (seqFracMapped _),
-    "seq_digest" -> (seqDigest _),
-    "seq_digest_arima" -> (seqDigestArima _),
-    "seq_digest_iupac" -> (seqDigestIupac _),
-    "io_bigwig" -> (ioBigwig _),
-    "io_dsv2_bw" -> (ioDsv2Bw _),
-    "io_bigbed" -> (ioBigbed _),
-    "io_tabix" -> (ioTabix _),
-    "io_dsv2" -> (ioDsv2 _),
-    "io_bam" -> (ioBam _),
-    "io_pairix" -> (ioPairix _),
-    "iv_closest" -> (ivClosest _),
-    "iv_closest_tie" -> (ivClosestTie _),
-    "iv_closest_k3" -> (ivClosestK3 _),
-    "iv_closest_upstream" -> (ivClosestUpstream _),
-    "iv_closest_ignore" -> (ivClosestIgnore _),
-    "iv_subtract" -> (ivSubtract _),
-    "iv_subtract_index" -> (ivSubtractIndex _),
-    "iv_complement" -> (ivComplement _),
-    "iv_trim" -> (ivTrim _),
-    "iv_trim_noview" -> (ivTrimNoview _),
-    "iv_assign_view" -> (ivAssignView _),
-    "iv_sort_rank" -> (ivSortRank _),
-    "iv_sort_bedframe" -> (ivSortBedframe _),
-    "iv_overlap_keep_order" -> (ivOverlapKeepOrder _),
-    "iv_select_indices" -> (ivSelectIndices _),
-    "iv_stack" -> (ivStack _),
-    "iv_binnify" -> (ivBinnify _),
-    "iv_chromarms" -> (ivChromarms _),
-    "iv_pair_by_distance" -> (ivPairByDistance _),
-    "iv_pair_endpoints" -> (ivPairEndpoints _),
-    "iv_pileup" -> (ivPileup _),
-    "iv_pileup_weighted" -> (ivPileupWeighted _),
-    "iv_mark_runs" -> (ivMarkRuns _),
-    "iv_merge_runs" -> (ivMergeRuns _),
-    "chk_invariants" -> (chkInvariants _),
-    "util_sanitize" -> (utilSanitize _),
-    "util_natsort" -> (utilNatsort _),
-    "region_parse" -> (regionParse _),
-    "util_colorstring" -> (utilColorstring _),
-    "evt_sessionize" -> (evtSessionize _),
-    "evt_stream_merge" -> (evtStreamMerge _),
-    "evt_stream_dedup" -> (evtStreamDedup _),
-    "evt_stream_sessionize" -> (evtStreamSessionize _),
-    "evt_stream_window" -> (evtStreamWindow _),
-    "evt_stream_file" -> (evtStreamFile _),
-    "evt_stream_join" -> (evtStreamJoin _),
-    "evt_stream_enrich" -> (evtStreamEnrich _),
-    "evt_ingest_e2e" -> (evtIngestE2e _),
-    "evt_window_agg" -> (evtWindowAgg _),
-    "txt_stats" -> (txtStats _),
-    "txt_langid" -> (txtLangid _),
-    "txt_fingerprint" -> (txtFingerprint _),
-    "txt_repetition" -> (txtRepetition _),
-    "txt_gopher_quality" -> (txtGopherQuality _),
-    "txt_paragraph_dedup" -> (txtParagraphDedup _),
-    "txt_pack" -> (txtPack _),
-    "txt_redact" -> (txtRedact _),
-    "txt_decontaminate" -> (txtDecontaminate _),
-    "txt_top_terms" -> (txtTopTerms _),
-    "txt_vocab" -> (txtVocab _),
-    "txt_feat_hash" -> (txtFeatHash _),
-    "txt_auc" -> (txtAuc _),
-    "txt_bm25" -> (txtBm25 _),
-    "txt_phrase" -> (txtPhrase _),
-    "txt_dsir" -> (txtDsir _),
-    "txt_cms" -> (txtCms _),
-    "txt_hybrid" -> (txtHybrid _),
-    "txt_decontam_fuzzy" -> (txtDecontamFuzzy _),
-    "txt_bpe" -> (txtBpe _),
-    "txt_bpe_apply" -> (txtBpeApply _),
-    "lay_zorder" -> (layZorder _),
-    "txt_len_quantiles" -> (txtLenQuantiles _),
-    "ext_sql_zorder" -> (extSqlZorder _),
-    "txt_bpe_encode" -> (txtBpeEncode _),
-    "txt_unigram_encode" -> (txtUnigramEncode _),
-    "txt_unigram" -> (txtUnigramTrain _),
-    "io_warc" -> (ioWarc _),
-    "txt_profile" -> (txtProfile _),
-    "txt_novelty" -> (txtNovelty _),
-    "txt_lm_backoff" -> (txtLmBackoff _),
-    "txt_dup_spans" -> (txtDupSpans _),
-    "txt_c4_filter" -> (txtC4 _),
-    "txt_quality_score" -> (txtQuality _),
-    "doc_sample_strat" -> (docSampleStrat _),
-    "doc_shard_shuffle" -> (docShardShuffle _),
-    "doc_domain_cap" -> (docDomainCap _),
-    "doc_mix" -> (docMix _),
-    "doc_mix_temp" -> (docMixTemp _),
-    "doc_split_group" -> (docSplitGroup _),
-    "doc_delta" -> (docDelta _),
-    "txt_cdc" -> (txtCdc _),
-    "diag_key_skew2" -> (diagKeySkew _),
-    "join_skew_salted" -> (joinSkewSalted _),
-    "lay_compaction2" -> (layCompaction _),
-    "txt_quality_adaptive" -> (txtQualityAdaptive _),
-    "txt_chunk" -> (txtChunk _),
-    "txt_normalize" -> (txtNormalize _),
-    "dedup_exact" -> (dedupExact _),
-    "dedup_bloom" -> (dedupBloom _),
-    "txt_line_dedup" -> (txtLineDedup _),
-    "txt_url_canon" -> (txtUrlCanon _),
-    "txt_profile_incr2" -> (txtProfileIncr _),
-    "txt_profile_tol" -> (txtProfileTol _),
-    "dedup_ngram_jaccard" -> (dedupNgramJaccard _),
-    "dedup_minhash_lsh" -> (dedupMinhash _),
-    "dedup_minhash_incr" -> (dedupMinhashIncr _),
-    "dedup_simhash" -> (dedupSimhash _),
-    "dedup_components" -> (dedupComponents _),
-    "dedup_keep_best" -> (dedupKeepBest _),
-    "emb_cov" -> (embCov _),
-    "emb_cosine_topk" -> (embCosineTopk _),
-    "emb_quant_topk" -> (embQuantTopk _),
-    "emb_quant_rerank" -> (embQuantRerank _),
-    "emb_ivf_incr" -> (embIvfIncr _),
-    "emb_hard_neg" -> (embHardNeg _),
-    "emb_hard_neg_ivf" -> (embHardNegIvf _),
-    "emb_ann_lsh" -> (embAnnLsh _),
-    "emb_ivf_topk" -> (embIvfTopk _),
-    "emb_pq_topk" -> (embPqTopk _),
-    "emb_pq_ivf" -> (embPqIvf _),
-    "emb_pq_ivf_search" -> (embPqIvfSearch _),
-    "emb_cosine_dedup" -> (embCosineDedup _),
-    "emb_semdedup" -> (embSemDedup _),
-    "emb_lsh_cap" -> (embLshCap _),
-    "mm_meta" -> (mmMeta _),
-    "mm_frames" -> (mmFrames _),
-    "mm_decode" -> (mmDecode _),
-    "mm_phash_dedup" -> (mmPhashDedup _),
-    "mm_audio" -> (mmAudio _),
-    "mm_video" -> (mmVideo _),
-    "mm_frame_extract" -> (mmFrameExtract _),
-    "vis_plot" -> (visPlot _))
+  /** One driver gate: `build` runs the operator over a fixture directory
+    * and `oracle` is the equivalent DuckDB SQL the driver's correctness
+    * gate hash-compares its result against. */
+  final case class Gate(name: String,
+                        build: (SparkSession, String) => DataFrame,
+                        oracle: String)
+
+  /** The gate table as name-keyed maps (Bench, Verify, Probe, PlanDump and
+    * the specs look gates up by name). Both are immutable HashMaps over
+    * the same keys, so they iterate in the same order. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    byName(_.build)
+  lazy val oracleSql: Map[String, String] = byName(_.oracle)
+
+  private def byName[A](f: Gate => A): Map[String, A] = {
+    val m = gates.map(g => g.name -> f(g)).toMap
+    require(m.size == gates.size, "duplicate gate names: " +
+      gates.groupBy(_.name).filter(_._2.size > 1).keys.mkString(", "))
+    m
+  }
+
+  /** The aux dumps an oracle reads, by their `{AUX_DIR}/<name>` paths. */
+  def auxReads(oracle: String): Set[String] =
+    """\{AUX_DIR\}/(\w+)""".r.findAllMatchIn(oracle).map(_.group(1)).toSet
 
   /** Auxiliary relations dumped by Verify alongside the query results.
     * DuckDB cannot recompute xxhash64, so the hash-based operators'
@@ -3355,7 +3087,7 @@ FROM enc JOIN ids USING (subword)"""
     * signatures/buckets instead (band equality + bit_count(xor) for
     * simhash; bucket-group cosine rank for LSH) — verifying the banding,
     * candidate, and verification logic end to end. `{AUX_DIR}` in
-    * `oracleSql` is substituted with the dump directory by Verify (a
+    * an oracle is substituted with the dump directory by Verify (a
     * sibling of its output dir, so the driver's gate only sees real
     * query results). */
   def auxDumps: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -3551,93 +3283,93 @@ FROM enc JOIN ids USING (subword)"""
        |FROM iv3 a LEFT JOIN ranked r ON a.id = r.id_1 AND r.rn <= $k
        |WHERE (SELECT ok FROM cert)""".stripMargin
 
-  def oracleSql: Map[String, String] = Map(
-    "q1_pricing_summary" ->
+  lazy val gates: Seq[Gate] = Seq(
+    Gate("q1_pricing_summary", q1,
       """SELECT l_returnflag, l_linestatus,
         | CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
         | CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sum_base_cents,
         | CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS sum_disc_cents,
         | COUNT(*) AS count_order
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_segment_revenue" ->
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus""".stripMargin),
+    Gate("q3_segment_revenue", q3,
       """SELECT c_mktsegment,
         | CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS revenue_cents,
         | COUNT(*) AS n
         |FROM customer JOIN orders ON c_custkey = o_custkey
         |JOIN lineitem ON l_orderkey = o_orderkey
-        |GROUP BY c_mktsegment""".stripMargin,
-    "iv_select" ->
+        |GROUP BY c_mktsegment""".stripMargin),
+    Gate("iv_select", ivSelect,
       s"""WITH $iv1Sql
          |SELECT id, chrom, start, "end" FROM iv1
          |WHERE chrom = 'c1'
          |  AND (CASE WHEN "end" = start THEN start + 1 ELSE "end" END) > 100
-         |  AND start < 500""".stripMargin,
-    "iv_expand" ->
+         |  AND start < 500""".stripMargin),
+    Gate("iv_expand", ivExpand,
       s"""WITH $iv1Sql
          |SELECT id, chrom,
          |  LEAST(start + 3, start + ("end" - start) // 2) AS start,
          |  GREATEST("end" - 3, start + ("end" - start) // 2) AS "end"
-         |FROM iv1""".stripMargin,
-    "iv_expand_scale" ->
+         |FROM iv1""".stripMargin),
+    Gate("iv_expand_scale", ivExpandScale,
       s"""WITH $iv1Sql
          |SELECT id, chrom,
          |  CAST(roundbankers(start - 0.25 * ("end" - start), 0) AS BIGINT) AS start,
          |  CAST(roundbankers("end" + 0.25 * ("end" - start), 0) AS BIGINT) AS "end"
-         |FROM iv1""".stripMargin,
-    "iv_expand_left" ->
+         |FROM iv1""".stripMargin),
+    Gate("iv_expand_left", ivExpandLeft,
       s"""WITH $iv1Sql
          |SELECT id, chrom,
          |  LEAST(start + 3, start + ("end" - start) // 2) AS start,
          |  GREATEST("end", start + ("end" - start) // 2) AS "end"
-         |FROM iv1""".stripMargin,
-    "iv_overlap_inner" ->
+         |FROM iv1""".stripMargin),
+    Gate("iv_overlap_inner", ivOverlap("inner"),
       s"""WITH $iv1Sql, $iv2Sql
          |SELECT a.id AS id_1, b.id AS id_2,
          |  GREATEST(a.start, b.start) AS overlap_start,
          |  LEAST(a."end", b."end") AS overlap_end
-         |FROM iv1 a JOIN iv2 b ON a.chrom = b.chrom AND ${ovl("a", "b")}""".stripMargin,
-    "iv_overlap_left" ->
+         |FROM iv1 a JOIN iv2 b ON a.chrom = b.chrom AND ${ovl("a", "b")}""".stripMargin),
+    Gate("iv_overlap_left", ivOverlap("left"),
       s"""WITH $iv1Sql, $iv2Sql
          |SELECT a.id AS id_1, b.id AS id_2
-         |FROM iv1 a LEFT JOIN iv2 b ON a.chrom = b.chrom AND ${ovl("a", "b")}""".stripMargin,
-    "iv_overlap_outer" ->
+         |FROM iv1 a LEFT JOIN iv2 b ON a.chrom = b.chrom AND ${ovl("a", "b")}""".stripMargin),
+    Gate("iv_overlap_outer", ivOverlap("outer"),
       s"""WITH $iv1Sql, $iv2Sql
          |SELECT a.id AS id_1, b.id AS id_2
-         |FROM iv1 a FULL OUTER JOIN iv2 b ON a.chrom = b.chrom AND ${ovl("a", "b")}""".stripMargin,
-    "iv_overlap_on" ->
+         |FROM iv1 a FULL OUTER JOIN iv2 b ON a.chrom = b.chrom AND ${ovl("a", "b")}""".stripMargin),
+    Gate("iv_overlap_on", ivOverlapOn,
       s"""WITH $iv1Sql, $iv2Sql
          |SELECT a.id AS id_1, b.id AS id_2, a.strand AS strand_1
          |FROM iv1 a JOIN iv2 b ON a.chrom = b.chrom AND a.strand = b.strand
-         |  AND ${ovl("a", "b")}""".stripMargin,
-    "iv_overlap_inner_2l" ->
+         |  AND ${ovl("a", "b")}""".stripMargin),
+    Gate("iv_overlap_inner_2l", ivOverlapInnerMl,
       s"""WITH $iv1Sql, $iv2Sql
          |SELECT a.id AS id_1, b.id AS id_2
-         |FROM iv1 a JOIN iv2 b ON a.chrom = b.chrom AND ${ovl("a", "b")}""".stripMargin,
-    "iv_overlap_auto_2l" ->
+         |FROM iv1 a JOIN iv2 b ON a.chrom = b.chrom AND ${ovl("a", "b")}""".stripMargin),
+    Gate("iv_overlap_auto_2l", ivOverlapAuto2l,
       s"""WITH $iv1Sql, $ivLongSql
          |SELECT a.id AS id_1, b.id AS id_2
-         |FROM ivlong a JOIN iv1 b ON a.chrom = b.chrom AND ${ovl("a", "b")}""".stripMargin,
-    "iv_overlap_bucketed" ->
+         |FROM ivlong a JOIN iv1 b ON a.chrom = b.chrom AND ${ovl("a", "b")}""".stripMargin),
+    Gate("iv_overlap_bucketed", ivOverlapBucketed,
       s"""WITH $iv1Sql, $iv2Sql
          |SELECT a.id AS id_1, b.id AS id_2
-         |FROM iv1 a JOIN iv2 b ON a.chrom = b.chrom AND ${ovl("a", "b")}""".stripMargin,
-    "ext_sql_overlap" ->
+         |FROM iv1 a JOIN iv2 b ON a.chrom = b.chrom AND ${ovl("a", "b")}""".stripMargin),
+    Gate("ext_sql_overlap", extSqlOverlap,
       s"""WITH $iv1Sql, $iv2Sql
          |SELECT a.id AS id_1, b.id AS id_2
          |FROM iv1 a JOIN iv2 b ON a.chrom = b.chrom
-         |  AND a.start < b."end" AND b.start < a."end"""".stripMargin,
-    "ext_sql_point" ->
+         |  AND a.start < b."end" AND b.start < a."end"""".stripMargin),
+    Gate("ext_sql_point", extSqlPoint,
       s"""WITH $iv2Sql, $iv3Sql
          |SELECT a.id AS id_1, b.id AS id_2
          |FROM iv3 a JOIN iv2 b ON a.chrom = b.chrom
-         |  AND b.start <= a.start AND a.start < b."end"""".stripMargin,
-    "iv_overlap_right" ->
+         |  AND b.start <= a.start AND a.start < b."end"""".stripMargin),
+    Gate("iv_overlap_right", ivOverlapRight,
       s"""WITH $iv2Sql, $iv3Sql
          |SELECT a.id AS id_1, b.id AS id_2
-         |FROM iv3 a RIGHT JOIN iv2 b ON a.chrom = b.chrom AND ${ovl("a", "b")}""".stripMargin,
+         |FROM iv3 a RIGHT JOIN iv2 b ON a.chrom = b.chrom AND ${ovl("a", "b")}""".stripMargin),
     // banded like the iv_closest family (see the comment there); the
     // self-join band widths come from iv3's own density
-    "iv_closest_self" ->
+    Gate("iv_closest_self", ivClosestSelf,
       s"""WITH $iv3Sql,
          |stx AS (SELECT chrom,
          |    GREATEST(CAST(CEIL((MAX("end") - MIN(start)) * 120.0 / COUNT(*)) AS BIGINT), 4) AS w
@@ -3656,33 +3388,33 @@ FROM enc JOIN ids USING (subword)"""
          |  (SELECT id_1 FROM cand GROUP BY id_1 HAVING COUNT(*) >= 1) z)
          |SELECT a.id AS id_1, r.id_2, r.dist AS distance
          |FROM iv3 a LEFT JOIN ranked r ON a.id = r.id_1 AND r.rn <= 1
-         |WHERE (SELECT ok FROM cert)""".stripMargin,
-    "iv_overlap_left_pts" ->
+         |WHERE (SELECT ok FROM cert)""".stripMargin),
+    Gate("iv_overlap_left_pts", ivOverlapLeftPts,
       s"""WITH $iv1Sql, $iv2Sql, $iv2pSql
          |SELECT a.id AS id_1, b.id AS id_2
-         |FROM iv1 a LEFT JOIN iv2p b ON a.chrom = b.chrom AND ${ovl("a", "b")}""".stripMargin,
-    "iv_setdiff_pts" ->
+         |FROM iv1 a LEFT JOIN iv2p b ON a.chrom = b.chrom AND ${ovl("a", "b")}""".stripMargin),
+    Gate("iv_setdiff_pts", ivSetdiffPts,
       s"""WITH $iv1Sql, $iv2Sql, $iv2pSql
          |SELECT id, chrom, start, "end" FROM iv1 a
          |WHERE NOT EXISTS (SELECT 1 FROM iv2p b
-         |  WHERE b.chrom = a.chrom AND ${ovl("a", "b")})""".stripMargin,
-    "iv_count_overlaps" ->
+         |  WHERE b.chrom = a.chrom AND ${ovl("a", "b")})""".stripMargin),
+    Gate("iv_count_overlaps", ivCountOverlaps,
       s"""WITH $iv1Sql, $iv2Sql
          |SELECT a.id, COUNT(b.id) AS n
          |FROM iv1 a LEFT JOIN iv2 b ON a.chrom = b.chrom AND ${ovl("a", "b")}
-         |GROUP BY a.id""".stripMargin,
-    "iv_setdiff" ->
+         |GROUP BY a.id""".stripMargin),
+    Gate("iv_setdiff", ivSetdiff,
       s"""WITH $iv1Sql, $iv2Sql
          |SELECT id, chrom, start, "end" FROM iv1 a
          |WHERE NOT EXISTS (SELECT 1 FROM iv2 b
-         |  WHERE b.chrom = a.chrom AND ${ovl("a", "b")})""".stripMargin,
-    "iv_cluster" -> clusterOracleSql,
+         |  WHERE b.chrom = a.chrom AND ${ovl("a", "b")})""".stripMargin),
+    Gate("iv_cluster", ivCluster, clusterOracleSql),
     // same semantics reached through the graft_cluster TVF from plain SQL
-    "ext_sql_cluster" -> clusterOracleSql,
-    "iv_merge" ->
+    Gate("ext_sql_cluster", extSqlCluster, clusterOracleSql),
+    Gate("iv_merge", ivMerge(Some(0)),
       s"""WITH $iv1Sql, $mergedIv1Sql
-         |SELECT chrom, start, "end", n_intervals FROM m1""".stripMargin,
-    "iv_multiinter" ->
+         |SELECT chrom, start, "end", n_intervals FROM m1""".stripMargin),
+    Gate("iv_multiinter", ivMultiinter,
       s"""WITH $iv1Sql, $iv2Sql, $iv3Sql, $mergedIv1Sql,
          |${TestTables.mergedSql("iv2", "m2")},
          |${TestTables.mergedSql("iv3", "m3")},
@@ -3698,8 +3430,8 @@ FROM enc JOIN ids USING (subword)"""
          |    LEAD(pos) OVER (PARTITION BY chrom ORDER BY pos) AS next
          |  FROM agg)
          |SELECT chrom, pos AS start, next AS "end", n_sets FROM c
-         |WHERE next IS NOT NULL AND n_sets > 0""".stripMargin,
-    "iv_genomecov" ->
+         |WHERE next IS NOT NULL AND n_sets > 0""".stripMargin),
+    Gate("iv_genomecov", ivGenomecov,
       s"""WITH $iv1Sql, $chromsizesSql,
          |ev AS (SELECT chrom, start AS pos, CAST(1 AS BIGINT) AS d FROM iv1
          |  UNION ALL SELECT chrom, "end", CAST(-1 AS BIGINT) FROM iv1),
@@ -3718,7 +3450,7 @@ FROM enc JOIN ids USING (subword)"""
          |  FROM g)
          |SELECT depth, n_bases,
          |  CAST(n_bases AS DOUBLE) / CAST(gb AS DOUBLE) AS fraction
-         |FROM hz, g""".stripMargin,
+         |FROM hz, g""".stripMargin),
     // banded nearest-midpoint search (the closest-family treatment —
     // see iv_closest's comment): a banded MIN equals the true MIN
     // whenever >= 1 candidate lands in band, and the two cert counts
@@ -3733,7 +3465,7 @@ FROM enc JOIN ids USING (subword)"""
     // would have emptied the result loudly. ASOF `a.m >= b.m` /
     // `a.m <= b.m` IS the nearest-upstream/-downstream semantics, with
     // no band and no cert: exact at every SF, 3s at sf1.
-    "iv_reldist" ->
+    Gate("iv_reldist", ivReldist,
       s"""WITH $iv1Sql, $iv2Sql,
          |am AS (SELECT id, chrom, (start + "end") // 2 AS m FROM iv2),
          |bm AS (SELECT chrom, (start + "end") // 2 AS m FROM iv1),
@@ -3748,8 +3480,8 @@ FROM enc JOIN ids USING (subword)"""
          |  CASE WHEN dup + ddown = 0 THEN 0.0
          |       ELSE CAST(LEAST(dup, ddown) AS DOUBLE) /
          |            CAST(dup + ddown AS DOUBLE) END AS reldist
-         |FROM up JOIN down USING (id)""".stripMargin,
-    "iv_jaccard" ->
+         |FROM up JOIN down USING (id)""".stripMargin),
+    Gate("iv_jaccard", ivJaccard,
       s"""WITH $iv1Sql, $iv2Sql, $mergedIv1Sql,
          |${TestTables.mergedSql("iv2", "m2")},
          |inter AS (
@@ -3766,10 +3498,10 @@ FROM enc JOIN ids USING (subword)"""
          |    CAST(intersection_bp AS DOUBLE) /
          |    CAST(bp1 + bp2 - intersection_bp AS DOUBLE) END AS jaccard,
          |  n_intersections
-         |FROM inter, b1, b2""".stripMargin,
-    "iv_merge_on" -> mergeOnOracleSql,
-    "ext_sql_merge_on" -> mergeOnOracleSql,
-    "iv_cluster_on" ->
+         |FROM inter, b1, b2""".stripMargin),
+    Gate("iv_merge_on", ivMergeOn, mergeOnOracleSql),
+    Gate("ext_sql_merge_on", extSqlMergeOn, mergeOnOracleSql),
+    Gate("iv_cluster_on", ivClusterOn,
       s"""WITH $iv1Sql,
          |x AS (SELECT id, chrom, strand, start, "end",
          |        MAX("end") OVER (PARTITION BY chrom, strand
@@ -3782,8 +3514,8 @@ FROM enc JOIN ids USING (subword)"""
          |SELECT id, strand,
          |  MIN(start) OVER (PARTITION BY chrom, strand, cid) AS cluster_start,
          |  MAX("end") OVER (PARTITION BY chrom, strand, cid) AS cluster_end
-         |FROM z""".stripMargin,
-    "iv_merge_mindist" ->
+         |FROM z""".stripMargin),
+    Gate("iv_merge_mindist", ivMerge(Some(5)),
       s"""WITH $iv1Sql,
          |x AS (SELECT id, chrom, start, "end",
          |        MAX("end") OVER (PARTITION BY chrom ORDER BY start, "end", id
@@ -3794,8 +3526,8 @@ FROM enc JOIN ids USING (subword)"""
          |        ROWS UNBOUNDED PRECEDING) AS cid FROM y)
          |SELECT chrom, MIN(start) AS start, MAX("end") AS "end",
          |  COUNT(*) AS n_intervals
-         |FROM z GROUP BY chrom, cid""".stripMargin,
-    "iv_merge_strict" ->
+         |FROM z GROUP BY chrom, cid""".stripMargin),
+    Gate("iv_merge_strict", ivMerge(None),
       s"""WITH $iv1Sql,
          |x AS (SELECT id, chrom, start, "end",
          |        MAX("end") OVER (PARTITION BY chrom ORDER BY start, "end", id
@@ -3806,11 +3538,11 @@ FROM enc JOIN ids USING (subword)"""
          |        ROWS UNBOUNDED PRECEDING) AS cid FROM y)
          |SELECT chrom, MIN(start) AS start, MAX("end") AS "end",
          |  COUNT(*) AS n_intervals
-         |FROM z GROUP BY chrom, cid""".stripMargin,
-    "iv_coverage" -> coverageOracleSql,
+         |FROM z GROUP BY chrom, cid""".stripMargin),
+    Gate("iv_coverage", ivCoverage, coverageOracleSql),
     // identical semantics through the graft_coverage TVF from plain SQL
-    "ext_sql_coverage" -> coverageOracleSql,
-    "iv_gene_coverage" ->
+    Gate("ext_sql_coverage", extSqlCoverage, coverageOracleSql),
+    Gate("iv_gene_coverage", ivGeneCoverage,
       s"""WITH $iv1Sql, $iv2Sql, $mergedIv1Sql,
          |cov AS (SELECT a.id, a.chrom, a.start, a."end",
          |  CAST(COALESCE(SUM(CASE WHEN m.start IS NULL THEN NULL
@@ -3823,8 +3555,8 @@ FROM enc JOIN ids USING (subword)"""
          |  GROUP BY a.id)
          |SELECT cov.id, cov.chrom, cov.start, cov."end", cov.coverage,
          |  cnt.n AS "count"
-         |FROM cov JOIN cnt ON cov.id = cnt.id""".stripMargin,
-    "seq_frac_gc" ->
+         |FROM cov JOIN cnt ON cov.id = cnt.id""".stripMargin),
+    Gate("seq_frac_gc", seqFracGc,
       s"""WITH $iv1Sql, $seqChunksSql,
          |sl AS (SELECT a.id, GREATEST(a.start, c.cstart) AS os,
          |    LEAST(a."end", c.cend) AS oe,
@@ -3840,8 +3572,8 @@ FROM enc JOIN ids USING (subword)"""
          |SELECT a.id, CASE WHEN COALESCE(st.covered - st.n, 0) > 0
          |    THEN CAST(st.gc AS DOUBLE) / CAST(st.covered - st.n AS DOUBLE)
          |    ELSE NULL END AS frac_gc
-         |FROM iv1 a LEFT JOIN st ON a.id = st.id""".stripMargin,
-    "seq_frac_mapped" ->
+         |FROM iv1 a LEFT JOIN st ON a.id = st.id""".stripMargin),
+    Gate("seq_frac_mapped", seqFracMapped,
       s"""WITH $iv1Sql, $seqChunksSql,
          |sl AS (SELECT a.id, GREATEST(a.start, c.cstart) AS os,
          |    LEAST(a."end", c.cend) AS oe,
@@ -3856,8 +3588,8 @@ FROM enc JOIN ids USING (subword)"""
          |SELECT a.id, CASE WHEN COALESCE(st.covered, 0) > 0
          |    THEN CAST(st.covered - st.n AS DOUBLE) / CAST(st.covered AS DOUBLE)
          |    ELSE 0.0 END AS frac_mapped
-         |FROM iv1 a LEFT JOIN st ON a.id = st.id""".stripMargin,
-    "seq_digest" ->
+         |FROM iv1 a LEFT JOIN st ON a.id = st.id""".stripMargin),
+    Gate("seq_digest", seqDigest,
       s"""WITH $seqChunksSql,
          |ext AS (SELECT c.chrom, c.cstart, c.seq,
          |    c.seq || COALESCE(n.pref, '') AS extseq
@@ -3876,8 +3608,8 @@ FROM enc JOIN ids USING (subword)"""
          |  UNION ALL SELECT chrom, len FROM lens) z)
          |SELECT chrom, pos AS start,
          |  LEAD(pos) OVER (PARTITION BY chrom ORDER BY pos) AS "end"
-         |FROM cuts QUALIFY "end" IS NOT NULL""".stripMargin,
-    "io_bigwig" ->
+         |FROM cuts QUALIFY "end" IS NOT NULL""".stripMargin),
+    Gate("io_bigwig", ioBigwig,
       s"""WITH $iv1Sql, $chromsizesSql,
          |bins AS (SELECT chrom, CAST(s AS BIGINT) AS start,
          |    LEAST(CAST(s AS BIGINT) + 100, length) AS "end"
@@ -3887,8 +3619,8 @@ FROM enc JOIN ids USING (subword)"""
          |SELECT bins.chrom, bins.start, bins."end",
          |  CAST(COALESCE(counts.n, 0) AS DOUBLE) AS value
          |FROM bins LEFT JOIN counts
-         |  ON bins.chrom = counts.chrom AND bins.start = counts.b""".stripMargin,
-    "io_dsv2_bw" ->
+         |  ON bins.chrom = counts.chrom AND bins.start = counts.b""".stripMargin),
+    Gate("io_dsv2_bw", ioDsv2Bw,
       s"""WITH $iv1Sql, $chromsizesSql,
          |bins AS (SELECT chrom, CAST(s AS BIGINT) AS start,
          |    LEAST(CAST(s AS BIGINT) + 100, length) AS "end"
@@ -3900,26 +3632,26 @@ FROM enc JOIN ids USING (subword)"""
          |FROM bins LEFT JOIN counts
          |  ON bins.chrom = counts.chrom AND bins.start = counts.b
          |WHERE bins.chrom = 'c2' AND bins.start < 1700
-         |  AND bins."end" > 300""".stripMargin,
-    "io_bigbed" ->
+         |  AND bins."end" > 300""".stripMargin),
+    Gate("io_bigbed", ioBigbed,
       s"""WITH $iv3Sql
-         |SELECT chrom, start, "end", id FROM iv3""".stripMargin,
-    "io_tabix" ->
-      s"""WITH $iv3Sql
-         |SELECT chrom, start, "end", id FROM iv3
-         |WHERE chrom = 'c3' AND start < 1500 AND "end" > 500""".stripMargin,
-    "io_dsv2" ->
+         |SELECT chrom, start, "end", id FROM iv3""".stripMargin),
+    Gate("io_tabix", ioTabix,
       s"""WITH $iv3Sql
          |SELECT chrom, start, "end", id FROM iv3
-         |WHERE chrom = 'c5' AND start < 1800 AND "end" > 200""".stripMargin,
-    "io_bam" ->
+         |WHERE chrom = 'c3' AND start < 1500 AND "end" > 500""".stripMargin),
+    Gate("io_dsv2", ioDsv2,
+      s"""WITH $iv3Sql
+         |SELECT chrom, start, "end", id FROM iv3
+         |WHERE chrom = 'c5' AND start < 1800 AND "end" > 200""".stripMargin),
+    Gate("io_bam", ioBam,
       s"""WITH $iv3Sql
          |SELECT 'r' || CAST(id AS VARCHAR) AS qname,
          |  CAST(id % 2 * 16 AS BIGINT) AS flag, chrom AS rname,
          |  start AS pos, CAST(30 + id % 10 AS BIGINT) AS mapq,
          |  CAST("end" - start AS VARCHAR) || 'M' AS cigar
-         |FROM iv3 WHERE chrom = 'c3' AND start < 1500 AND "end" > 500""".stripMargin,
-    "io_pairix" ->
+         |FROM iv3 WHERE chrom = 'c3' AND start < 1500 AND "end" > 500""".stripMargin),
+    Gate("io_pairix", ioPairix,
       s"""WITH $iv3Sql
          |SELECT 'p' || CAST(id AS VARCHAR) AS read_id, chrom AS chrom1,
          |  start + 1 AS pos1,
@@ -3928,10 +3660,10 @@ FROM enc JOIN ids USING (subword)"""
          |FROM iv3 WHERE chrom = 'c3'
          |  AND 'c' || CAST((id // 8) % 8 AS VARCHAR) = 'c5'
          |  AND start >= 0 AND start < 1600
-         |  AND (id * 53) % 2400 >= 0 AND (id * 53) % 2400 < 3000""".stripMargin,
+         |  AND (id * 53) % 2400 >= 0 AND (id * 53) % 2400 < 3000""".stripMargin),
     // Arima cocktail: DpnII GATC boundary at site+2, HinfI GANTC (N = any
     // base, LIKE '_' in SQL) at site+3 — cut sets unioned before the stitch
-    "seq_digest_arima" ->
+    Gate("seq_digest_arima", seqDigestArima,
       s"""WITH $seqChunksSql,
          |ext AS (SELECT c.chrom, c.cstart, c.seq,
          |    c.seq || COALESCE(n.pref, '') AS extseq
@@ -3955,11 +3687,11 @@ FROM enc JOIN ids USING (subword)"""
          |  UNION ALL SELECT chrom, len FROM lens) z)
          |SELECT chrom, pos AS start,
          |  LEAD(pos) OVER (PARTITION BY chrom ORDER BY pos) AS "end"
-         |FROM cuts QUALIFY "end" IS NOT NULL""".stripMargin,
+         |FROM cuts QUALIFY "end" IS NOT NULL""".stripMargin),
     // StyI CCWWGG boundary at site+4, HincII GTYRAC at site+5; the
     // degenerate W/Y/R classes spell as per-position IN lists (the
     // engine side compiles the same classes to Column.isin)
-    "seq_digest_iupac" ->
+    Gate("seq_digest_iupac", seqDigestIupac,
       s"""WITH $seqChunksSql,
          |ext AS (SELECT c.chrom, c.cstart, c.seq,
          |    c.seq || COALESCE(n.pref, '') AS extseq
@@ -3989,7 +3721,7 @@ FROM enc JOIN ids USING (subword)"""
          |  UNION ALL SELECT chrom, len FROM lens) z)
          |SELECT chrom, pos AS start,
          |  LEAD(pos) OVER (PARTITION BY chrom ORDER BY pos) AS "end"
-         |FROM cuts QUALIFY "end" IS NOT NULL""".stripMargin,
+         |FROM cuts QUALIFY "end" IS NOT NULL""".stripMargin),
     // BANDED closest oracles (all six + iv_reldist): the naive form
     // enumerates the full per-chrom cross product under a ROW_NUMBER
     // window — ~2.8e10 pairs at sf1, >60 GB of DuckDB temp, infeasible.
@@ -4002,18 +3734,18 @@ FROM enc JOIN ids USING (subword)"""
     // CTE PROVES sufficiency per run: if any left row has fewer than k
     // banded candidates the whole result is emptied — a loud rowcount
     // failure, never a silently-wrong compare.
-    "iv_closest" -> closestOracle(1, "id_2"),
-    "iv_closest_tie" -> closestOracle(1, "id_2 DESC"),
-    "iv_closest_k3" -> closestOracle(3, "id_2"),
+    Gate("iv_closest", ivClosest, closestOracle(1, "id_2")),
+    Gate("iv_closest_tie", ivClosestTie, closestOracle(1, "id_2 DESC")),
+    Gate("iv_closest_k3", ivClosestK3, closestOracle(3, "id_2")),
     // same plan and semantics as iv_closest_k3, reached through the
     // graft_closest TVF from plain SQL
-    "ext_sql_closest" -> closestOracle(3, "id_2"),
-    "ext_sql_merge" ->
+    Gate("ext_sql_closest", extSqlClosest, closestOracle(3, "id_2")),
+    Gate("ext_sql_merge", extSqlMerge,
       s"""WITH $iv1Sql, $mergedIv1Sql
-         |SELECT chrom, start, "end", n_intervals FROM m1""".stripMargin,
-    "iv_closest_upstream" -> closestUpstreamOracleSql,
-    "ext_sql_closest_up" -> closestUpstreamOracleSql,
-    "iv_closest_ignore" ->
+         |SELECT chrom, start, "end", n_intervals FROM m1""".stripMargin),
+    Gate("iv_closest_upstream", ivClosestUpstream, closestUpstreamOracleSql),
+    Gate("ext_sql_closest_up", extSqlClosestUp, closestUpstreamOracleSql),
+    Gate("iv_closest_ignore", ivClosestIgnore,
       s"""WITH $iv2Sql, $iv3Sql,
          |stx AS (SELECT chrom,
          |    GREATEST(CAST(CEIL((MAX("end") - MIN(start)) * 120.0 / COUNT(*)) AS BIGINT), 4) AS w
@@ -4031,12 +3763,12 @@ FROM enc JOIN ids USING (subword)"""
          |  (SELECT id_1 FROM cand GROUP BY id_1 HAVING COUNT(*) >= 1) z)
          |SELECT a.id AS id_1, r.id_2, r.dist AS distance
          |FROM iv3 a LEFT JOIN ranked r ON a.id = r.id_1 AND r.rn <= 1
-         |WHERE (SELECT ok FROM cert)""".stripMargin,
-    "iv_subtract" -> subtractOracleSql,
+         |WHERE (SELECT ok FROM cert)""".stripMargin),
+    Gate("iv_subtract", ivSubtract, subtractOracleSql),
     // same semantics reached through the graft_subtract TVF from plain SQL
-    "ext_sql_subtract" -> subtractOracleSql,
-    "ext_sql_complement" -> complementViewlessOracleSql,
-    "iv_subtract_index" ->
+    Gate("ext_sql_subtract", extSqlSubtract, subtractOracleSql),
+    Gate("ext_sql_complement", extSqlComplement, complementViewlessOracleSql),
+    Gate("iv_subtract_index", ivSubtractIndex,
       s"""WITH $iv1Sql, $iv2Sql, $mergedIv1Sql,
          |mm AS (
          |  SELECT a.id, a.chrom, a.start AS s1, a."end" AS e1,
@@ -4057,8 +3789,8 @@ FROM enc JOIN ids USING (subword)"""
          |FROM (
          |  SELECT * FROM frag1 UNION ALL SELECT * FROM frag2
          |  UNION ALL SELECT * FROM untouched) u
-         |WHERE fs < fe""".stripMargin,
-    "iv_complement" ->
+         |WHERE fs < fe""".stripMargin),
+    Gate("iv_complement", ivComplement,
       s"""WITH $iv1Sql, ${viewSql}, $mergedIv1Sql,
          |inreg AS (
          |  SELECT v.chrom, v.start AS vs, v."end" AS ve, v.name,
@@ -4075,8 +3807,8 @@ FROM enc JOIN ids USING (subword)"""
          |SELECT chrom, gs AS start, ge AS "end", name AS view_region FROM (
          |  SELECT * FROM (SELECT * FROM g1 UNION ALL SELECT * FROM g2) gg
          |  WHERE gs < ge
-         |  UNION ALL SELECT * FROM empty) u""".stripMargin,
-    "iv_trim" ->
+         |  UNION ALL SELECT * FROM empty) u""".stripMargin),
+    Gate("iv_trim", ivTrim,
       s"""WITH $iv1Sql, ${viewSql},
          |e AS (SELECT id, chrom, start - 10 AS start, "end" + 10 AS "end" FROM iv1),
          |cand AS (
@@ -4089,13 +3821,13 @@ FROM enc JOIN ids USING (subword)"""
          |  CASE WHEN b.id IS NULL THEN NULL ELSE a.chrom END AS chrom,
          |  CASE WHEN b.id IS NULL THEN NULL ELSE GREATEST(a.start, b.vs) END AS start,
          |  CASE WHEN b.id IS NULL THEN NULL ELSE LEAST(a."end", b.ve) END AS "end"
-         |FROM e a LEFT JOIN best b ON a.id = b.id""".stripMargin,
-    "iv_trim_noview" ->
+         |FROM e a LEFT JOIN best b ON a.id = b.id""".stripMargin),
+    Gate("iv_trim_noview", ivTrimNoview,
       s"""WITH $iv1Sql
          |SELECT id, chrom, GREATEST(start - 10, 0) AS start,
          |  GREATEST("end" + 10, 0) AS "end"
-         |FROM iv1""".stripMargin,
-    "iv_assign_view" ->
+         |FROM iv1""".stripMargin),
+    Gate("iv_assign_view", ivAssignView,
       s"""WITH $iv1Sql, ${viewSql},
          |cand AS (
          |  SELECT a.id, v.name, v.ord,
@@ -4104,8 +3836,8 @@ FROM enc JOIN ids USING (subword)"""
          |best AS (SELECT * FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY id
          |    ORDER BY olen DESC, ord) AS rn FROM cand) WHERE rn = 1)
          |SELECT a.id, b.name AS view_region
-         |FROM iv1 a LEFT JOIN best b ON a.id = b.id""".stripMargin,
-    "iv_sort_rank" ->
+         |FROM iv1 a LEFT JOIN best b ON a.id = b.id""".stripMargin),
+    Gate("iv_sort_rank", ivSortRank,
       s"""WITH $iv1Sql, ${viewSql},
          |cand AS (
          |  SELECT a.id, a.start, a."end", v.name, v.ord,
@@ -4114,14 +3846,14 @@ FROM enc JOIN ids USING (subword)"""
          |best AS (SELECT * FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY id
          |    ORDER BY olen DESC, ord) AS rn FROM cand) WHERE rn = 1)
          |SELECT id, CAST(ROW_NUMBER() OVER (ORDER BY ord, start, "end", id) AS BIGINT) AS rk
-         |FROM best""".stripMargin,
-    "iv_sort_bedframe" ->
+         |FROM best""".stripMargin),
+    Gate("iv_sort_bedframe", ivSortBedframe,
       s"""WITH $iv1Sql
          |SELECT CAST(ROW_NUMBER() OVER (ORDER BY chrom, start, "end") - 1
          |    AS BIGINT) AS pos,
          |  chrom, start, "end"
-         |FROM iv1""".stripMargin,
-    "iv_overlap_keep_order" ->
+         |FROM iv1""".stripMargin),
+    Gate("iv_overlap_keep_order", ivOverlapKeepOrder,
       s"""WITH $iv2Sql, $iv3Sql,
          |a AS (SELECT *, ROW_NUMBER() OVER (
          |    ORDER BY (id * 2654435761) % 999983, id) AS o1 FROM iv3),
@@ -4132,15 +3864,15 @@ FROM enc JOIN ids USING (subword)"""
          |SELECT CAST(ROW_NUMBER() OVER (ORDER BY o1, o2 NULLS LAST) - 1
          |    AS BIGINT) AS pos,
          |  id_1, id_2
-         |FROM j""".stripMargin,
-    "iv_select_indices" ->
+         |FROM j""".stripMargin),
+    Gate("iv_select_indices", ivSelectIndices,
       s"""WITH $iv3Sql
          |SELECT id, chrom, start, "end" FROM (
          |  SELECT *, ROW_NUMBER() OVER (
          |    ORDER BY (id * 2654435761) % 999983, id) - 1 AS pos
          |  FROM iv3) t
-         |WHERE pos IN (0, 7, 77, 777)""".stripMargin,
-    "iv_stack" ->
+         |WHERE pos IN (0, 7, 77, 777)""".stripMargin),
+    Gate("iv_stack", ivStack,
       s"""WITH $iv3Sql,
          |ev AS (SELECT chrom, start AS pos, 1 AS d FROM iv3
          |  UNION ALL SELECT chrom, "end", -1 FROM iv3),
@@ -4151,33 +3883,33 @@ FROM enc JOIN ids USING (subword)"""
          |cnt AS (SELECT chrom, COUNT(*) AS n FROM iv3 GROUP BY chrom)
          |SELECT cnt.chrom, cnt.n, md.max_depth AS n_levels,
          |  md.max_depth AS max_depth, CAST(0 AS BIGINT) AS n_violations
-         |FROM cnt JOIN md ON cnt.chrom = md.chrom""".stripMargin,
-    "util_colorstring" ->
+         |FROM cnt JOIN md ON cnt.chrom = md.chrom""".stripMargin),
+    Gate("util_colorstring", utilColorstring,
       """SELECT * FROM (VALUES
         |  ('red', '255,0,0'), ('tomato', '255,99,71'),
         |  ('skyblue', '135,206,235'), ('dodgerblue', '30,144,255'),
         |  ('tab:blue', '31,119,180'), ('g', '0,127,0'), ('c', '0,191,191'),
         |  ('#ff0000', '255,0,0'), ('#ff8800', '255,136,0'),
         |  ('#f0a', '255,0,170'), ('#ff000055', '255,0,0'), ('none', '0'),
-        |  (NULL, '0'), ('notacolor', NULL)) t(color, item_rgb)""".stripMargin,
-    "evt_stream_merge" ->
+        |  (NULL, '0'), ('notacolor', NULL)) t(color, item_rgb)""".stripMargin),
+    Gate("evt_stream_merge", evtStreamMerge,
       s"""WITH $iv1Sql,
          |sub1 AS (SELECT * FROM iv1 WHERE id % 8 = 0),
          |${TestTables.mergedSql("sub1")}
-         |SELECT chrom, start, "end", n_intervals FROM m1""".stripMargin,
-    "iv_binnify" ->
+         |SELECT chrom, start, "end", n_intervals FROM m1""".stripMargin),
+    Gate("iv_binnify", ivBinnify,
       s"""WITH $chromsizesSql
          |SELECT chrom, CAST(s AS BIGINT) AS start,
          |  LEAST(CAST(s AS BIGINT) + 100, length) AS "end",
          |  CAST(s // 100 AS BIGINT) AS rel_id
-         |FROM chroms CROSS JOIN range(0, 2570, 100) r(s)""".stripMargin,
-    "iv_chromarms" ->
+         |FROM chroms CROSS JOIN range(0, 2570, 100) r(s)""".stripMargin),
+    Gate("iv_chromarms", ivChromarms,
       s"""WITH $chromsizesSql
          |SELECT chrom, CAST(0 AS BIGINT) AS start, CAST(1300 AS BIGINT) AS "end",
          |  chrom || '_p' AS name FROM chroms
          |UNION ALL
-         |SELECT chrom, CAST(1300 AS BIGINT), length, chrom || '_q' FROM chroms""".stripMargin,
-    "iv_pair_by_distance" ->
+         |SELECT chrom, CAST(1300 AS BIGINT), length, chrom || '_q' FROM chroms""".stripMargin),
+    Gate("iv_pair_by_distance", ivPairByDistance,
       s"""WITH $iv3Sql,
          |m AS (SELECT id, chrom, (start + "end") // 2 AS mid,
          |    ROW_NUMBER() OVER (PARTITION BY chrom ORDER BY start, "end", id) AS rnk
@@ -4185,8 +3917,8 @@ FROM enc JOIN ids USING (subword)"""
          |SELECT a.id AS id_1, b.id AS id_2
          |FROM m a JOIN m b ON a.chrom = b.chrom
          |  AND (a.mid + 5) < (b.mid - 5) AND (b.mid - 100) < (a.mid + 100)
-         |  AND ABS(a.rnk - b.rnk) - 1 <= 5""".stripMargin,
-    "iv_pileup" ->
+         |  AND ABS(a.rnk - b.rnk) - 1 <= 5""".stripMargin),
+    Gate("iv_pileup", ivPileup,
       s"""WITH $iv1Sql,
          |ev AS (SELECT chrom, start AS pos, CAST(1 AS BIGINT) AS d FROM iv1
          |  UNION ALL SELECT chrom, "end", CAST(-1 AS BIGINT) FROM iv1),
@@ -4197,8 +3929,8 @@ FROM enc JOIN ids USING (subword)"""
          |    LEAD(pos) OVER (PARTITION BY chrom ORDER BY pos) AS next
          |  FROM agg)
          |SELECT chrom, pos AS start, next AS "end", depth FROM c
-         |WHERE next IS NOT NULL""".stripMargin,
-    "iv_pileup_weighted" ->
+         |WHERE next IS NOT NULL""".stripMargin),
+    Gate("iv_pileup_weighted", ivPileupWeighted,
       s"""WITH $iv1Sql,
          |ev AS (SELECT chrom, start AS pos, CAST(id % 5 AS BIGINT) AS d FROM iv1
          |  UNION ALL SELECT chrom, "end", CAST(-(id % 5) AS BIGINT) FROM iv1),
@@ -4209,8 +3941,8 @@ FROM enc JOIN ids USING (subword)"""
          |    LEAD(pos) OVER (PARTITION BY chrom ORDER BY pos) AS next
          |  FROM agg)
          |SELECT chrom, pos AS start, next AS "end", depth FROM c
-         |WHERE next IS NOT NULL""".stripMargin,
-    "iv_pair_endpoints" ->
+         |WHERE next IS NOT NULL""".stripMargin),
+    Gate("iv_pair_endpoints", ivPairEndpoints,
       s"""WITH $iv3Sql,
          |m AS (SELECT id, chrom, start, "end",
          |    ROW_NUMBER() OVER (PARTITION BY chrom ORDER BY start, "end", id) AS rnk
@@ -4218,8 +3950,8 @@ FROM enc JOIN ids USING (subword)"""
          |SELECT a.id AS id_1, b.id AS id_2
          |FROM m a JOIN m b ON a.chrom = b.chrom
          |  AND (a."end" + 5) < (b.start - 5) AND (b.start - 100) < (a."end" + 100)
-         |  AND ABS(a.rnk - b.rnk) - 1 <= 5""".stripMargin,
-    "iv_mark_runs" ->
+         |  AND ABS(a.rnk - b.rnk) - 1 <= 5""".stripMargin),
+    Gate("iv_mark_runs", ivMarkRuns,
       s"""WITH $iv1Sql, $chromsizesSql,
          |bins AS (SELECT chrom, CAST(s AS BIGINT) AS start,
          |    LEAST(CAST(s AS BIGINT) + 100, length) AS "end"
@@ -4236,8 +3968,8 @@ FROM enc JOIN ids USING (subword)"""
          |SELECT chrom, start, "end", CAST(value AS BIGINT) AS value,
          |  CAST(SUM(brd) OVER (PARTITION BY chrom ORDER BY start
          |    ROWS UNBOUNDED PRECEDING) - 1 AS BIGINT) AS run
-         |FROM marked""".stripMargin,
-    "iv_merge_runs" ->
+         |FROM marked""".stripMargin),
+    Gate("iv_merge_runs", ivMergeRuns,
       s"""WITH $iv1Sql, $chromsizesSql,
          |bins AS (SELECT chrom, CAST(s AS BIGINT) AS start,
          |    LEAST(CAST(s AS BIGINT) + 100, length) AS "end"
@@ -4255,8 +3987,8 @@ FROM enc JOIN ids USING (subword)"""
          |    ROWS UNBOUNDED PRECEDING) - 1 AS run FROM marked)
          |SELECT chrom, MIN(start) AS start, MAX("end") AS "end",
          |  CAST(value AS BIGINT) AS value, COUNT(*) AS n_bins
-         |FROM runs GROUP BY chrom, value, run""".stripMargin,
-    "chk_invariants" ->
+         |FROM runs GROUP BY chrom, value, run""".stripMargin),
+    Gate("chk_invariants", chkInvariants,
       s"""WITH $iv1Sql,
          |x AS (SELECT *, MAX("end") OVER (PARTITION BY chrom ORDER BY start, "end", id
          |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm FROM iv1)
@@ -4265,33 +3997,33 @@ FROM enc JOIN ids USING (subword)"""
          |    OR start > "end" THEN 1 END) = 0 AS bed_ok,
          |  BOOL_OR(start = "end") AS has_points,
          |  BOOL_OR(pm IS NOT NULL AND start < pm) AS is_overlapping
-         |FROM x""".stripMargin,
-    "util_sanitize" ->
+         |FROM x""".stripMargin),
+    Gate("util_sanitize", utilSanitize,
       """SELECT CAST(p_partkey AS BIGINT) AS id,
         |  'c' || CAST(p_partkey % 8 AS VARCHAR) AS chrom,
         |  LEAST(CAST((p_partkey * 13) % 1000 AS BIGINT),
         |        CAST((p_partkey * 7) % 1000 AS BIGINT)) AS start,
         |  GREATEST(CAST((p_partkey * 13) % 1000 AS BIGINT),
         |           CAST((p_partkey * 7) % 1000 AS BIGINT)) AS "end"
-        |FROM part""".stripMargin,
-    "util_natsort" ->
+        |FROM part""".stripMargin),
+    Gate("util_natsort", utilNatsort,
       """WITH names AS (SELECT DISTINCT 'c' || CAST(p_partkey % 12 AS VARCHAR) AS name FROM part)
         |SELECT name, CAST(ROW_NUMBER() OVER (ORDER BY
         |  regexp_extract(name, '^(\D*)', 1),
         |  CAST(regexp_extract(name, '(\d+)', 1) AS BIGINT), name) AS BIGINT) AS nat_rank
-        |FROM names""".stripMargin,
-    "region_parse" ->
+        |FROM names""".stripMargin),
+    Gate("region_parse", regionParse,
       """SELECT * FROM (VALUES
         |  ('c1:100-500', 'c1', CAST(100 AS BIGINT), CAST(500 AS BIGINT)),
         |  ('c2:1,000-2kb', 'c2', 1000, 2000),
         |  ('c3', 'c3', NULL, NULL),
         |  ('c4:50-', 'c4', 50, NULL),
         |  ('c5:1.5K-0.002M', 'c5', 1500, 2000),
-        |  ('c6 : 10 - 20', 'c6', 10, 20)) t(input, chrom, start, "end")""".stripMargin,
-    "evt_stream_dedup" ->
+        |  ('c6 : 10 - 20', 'c6', 10, 20)) t(input, chrom, start, "end")""".stripMargin),
+    Gate("evt_stream_dedup", evtStreamDedup,
       """SELECT event_id, epoch_ms(ts) AS tms, event_type, value
-        |FROM events WHERE event_id % 4 = 0""".stripMargin,
-    "evt_stream_sessionize" ->
+        |FROM events WHERE event_id % 4 = 0""".stripMargin),
+    Gate("evt_stream_sessionize", evtStreamSessionize,
       """WITH e AS (SELECT user_id, event_id, epoch_ms(ts) AS tms
         |  FROM events WHERE event_id % 4 = 1),
         |s AS (SELECT *, CASE WHEN LAG(tms) OVER w IS NULL
@@ -4301,8 +4033,8 @@ FROM enc JOIN ids USING (subword)"""
         |    ORDER BY tms, event_id ROWS UNBOUNDED PRECEDING) AS sid FROM s)
         |SELECT user_id, MIN(tms) AS session_start, MAX(tms) AS session_last,
         |  COUNT(*) AS n_events
-        |FROM sess GROUP BY user_id, sid""".stripMargin,
-    "evt_sessionize" ->
+        |FROM sess GROUP BY user_id, sid""".stripMargin),
+    Gate("evt_sessionize", evtSessionize,
       """WITH e AS (SELECT user_id, event_id, epoch_ms(ts) AS tms FROM events),
         |s AS (SELECT *, CASE WHEN LAG(tms) OVER w IS NULL
         |    OR tms - LAG(tms) OVER w > 1800000 THEN 1 ELSE 0 END AS brd
@@ -4311,42 +4043,41 @@ FROM enc JOIN ids USING (subword)"""
         |    ORDER BY tms, event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_id FROM s)
         |SELECT user_id, session_id, MIN(tms) AS session_start,
         |  COUNT(*) AS n_events
-        |FROM sess GROUP BY user_id, session_id""".stripMargin,
-    "evt_stream_join" ->
+        |FROM sess GROUP BY user_id, session_id""".stripMargin),
+    Gate("evt_stream_join", evtStreamJoin,
       """WITH e AS (SELECT event_id, user_id, epoch_ns(ts) // 1000000 AS tms
         |  FROM events WHERE event_id % 4 = 3)
         |SELECT a.event_id AS l_id, b.event_id AS r_id, a.user_id,
         |  a.tms - b.tms AS dt_ms
         |FROM e a JOIN e b ON a.user_id = b.user_id
         |WHERE a.event_id % 8 = 3 AND b.event_id % 8 = 7
-        |  AND b.tms BETWEEN a.tms - 86400000 AND a.tms""".stripMargin,
-    "evt_stream_enrich" ->
+        |  AND b.tms BETWEEN a.tms - 86400000 AND a.tms""".stripMargin),
+    Gate("evt_stream_enrich", evtStreamEnrich,
       """SELECT e.event_id, e.user_id, c.c_mktsegment AS segment
         |FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
-        |WHERE e.event_id % 4 = 1""".stripMargin,
-    "evt_stream_window" ->
+        |WHERE e.event_id % 4 = 1""".stripMargin),
+    Gate("evt_stream_window", evtStreamWindow,
       """SELECT epoch_ns(ts) // 3600000000000 AS hour_bucket, event_type,
         |  COUNT(*) AS n,
         |  CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_cents
-        |FROM events WHERE event_id % 4 = 2 GROUP BY 1, 2""".stripMargin,
-    "evt_stream_file" ->
+        |FROM events WHERE event_id % 4 = 2 GROUP BY 1, 2""".stripMargin),
+    Gate("evt_stream_file", evtStreamFile,
       """SELECT epoch_ns(ts) // 3600000000000 AS hour_bucket, event_type,
         |  COUNT(*) AS n,
         |  CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_cents
-        |FROM events WHERE event_id % 4 = 0 GROUP BY 1, 2""".stripMargin,
-    "evt_window_agg" ->
+        |FROM events WHERE event_id % 4 = 0 GROUP BY 1, 2""".stripMargin),
+    Gate("evt_window_agg", evtWindowAgg,
       """SELECT epoch_ns(ts) // 3600000000000 AS hour_bucket, event_type,
         |  COUNT(*) AS n,
         |  CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_cents
-        |FROM events GROUP BY 1, 2""".stripMargin,
+        |FROM events GROUP BY 1, 2""".stripMargin),
     // end-to-end ingest-quintet replay: the admitted set is derived from
     // first principles (rows whose text occurs in no earlier batch — the
     // bloom-prefilter + exact-verify contract), and every persisted-index
     // total must land exactly on it; token masses replay the engine
     // tokenizer (the txt_cms pattern)
-    "evt_ingest_e2e" ->
-      """WITH base AS (SELECT doc_id, COALESCE(source, '__null') AS source,
-        |    text FROM documents),
+    Gate("evt_ingest_e2e", evtIngestE2e,
+      """WITH base AS (SELECT doc_id, source, text FROM documents),
         |stream AS (
         |  SELECT doc_id, source, text, doc_id % 3 AS b FROM base
         |  UNION ALL SELECT -doc_id - 1, source, text, 1 FROM base
@@ -4375,7 +4106,8 @@ FROM enc JOIN ids USING (subword)"""
         |    FROM adm
         |  UNION ALL SELECT 'bloom_missing', CAST(0 AS BIGINT)
         |  UNION ALL SELECT 'hist_docs', CAST(COUNT(*) AS BIGINT) FROM adm
-        |  UNION ALL SELECT 'hist_strata', CAST(COUNT(DISTINCT source) AS BIGINT)
+        |  UNION ALL SELECT 'hist_strata', CAST(COUNT(DISTINCT source)
+        |      + CASE WHEN COUNT(*) > COUNT(source) THEN 1 ELSE 0 END AS BIGINT)
         |    FROM adm
         |  UNION ALL SELECT 'cms_tokens', (SELECT n FROM tok)
         |  UNION ALL SELECT 'profile_docs', CAST(COUNT(*) AS BIGINT) FROM adm
@@ -4383,8 +4115,8 @@ FROM enc JOIN ids USING (subword)"""
         |  UNION ALL SELECT 'profile_chars',
         |    CAST(COALESCE(SUM(len(text)), 0) AS BIGINT) FROM adm
         |  UNION ALL SELECT 'pairs_replay_drift', CAST(0 AS BIGINT)
-        |) t ORDER BY metric""".stripMargin,
-    "txt_stats" ->
+        |) t ORDER BY metric""".stripMargin),
+    Gate("txt_stats", txtStats,
       """SELECT doc_id,
         |  CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens,
         |  CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]')) AS BIGINT) AS n_subwords,
@@ -4395,8 +4127,8 @@ FROM enc JOIN ids USING (subword)"""
         |   + LEAST(CAST(len(regexp_extract_all(lower(text), '\b(the|and|of|to|in|a|is|that|it|for|on|with|as|was|at|by|an|be|this|are)\b')) AS DOUBLE) / GREATEST(CAST(len(regexp_extract_all(text, '\S+')) AS DOUBLE), 1.0) * 4.0, 1.0) * 0.4
         |   + (1.0 - LEAST(CAST(len(regexp_extract_all(text, '[[:punct:]]')) AS DOUBLE) / GREATEST(CAST(length(text) AS DOUBLE), 1.0) * 5.0, 1.0)) * 0.15
         |   + (1.0 - LEAST(CAST(len(regexp_extract_all(text, '[A-Z]')) AS DOUBLE) / GREATEST(CAST(length(text) AS DOUBLE), 1.0) * 4.0, 1.0)) * 0.15) AS quality
-        |FROM documents""".stripMargin,
-    "txt_repetition" ->
+        |FROM documents""".stripMargin),
+    Gate("txt_repetition", txtRepetition,
       """WITH d2 AS (SELECT doc_id,
         |    regexp_replace(text, ' (the|a|value|table|row) ', chr(10), 'g') AS text
         |  FROM documents),
@@ -4425,8 +4157,8 @@ FROM enc JOIN ids USING (subword)"""
         |  ls.dup_line_frac, ls.dup_line_char_frac, bs.top_bigram_frac
         |FROM documents d
         |LEFT JOIN ls ON d.doc_id = ls.doc_id
-        |LEFT JOIN bs ON d.doc_id = bs.doc_id""".stripMargin,
-    "txt_paragraph_dedup" ->
+        |LEFT JOIN bs ON d.doc_id = bs.doc_id""".stripMargin),
+    Gate("txt_paragraph_dedup", txtParagraphDedup,
       """WITH d2 AS (SELECT doc_id,
         |    regexp_replace(text, ' (the|a|value|table|row) ', chr(10), 'g') AS text
         |  FROM documents),
@@ -4444,8 +4176,8 @@ FROM enc JOIN ids USING (subword)"""
         |SELECT d.doc_id,
         |  CAST(COALESCE(a.n_paras, 0) AS BIGINT) AS n_paras,
         |  CAST(COALESCE(a.n_removed, 0) AS BIGINT) AS n_removed
-        |FROM documents d LEFT JOIN a ON d.doc_id = a.doc_id""".stripMargin,
-    "txt_pack" ->
+        |FROM documents d LEFT JOIN a ON d.doc_id = a.doc_id""".stripMargin),
+    Gate("txt_pack", txtPack,
       """WITH t AS (SELECT doc_id,
         |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_tokens
         |  FROM documents),
@@ -4458,8 +4190,8 @@ FROM enc JOIN ids USING (subword)"""
         |  token_offset // 512 AS seq_first,
         |  token_offset % 512 AS seq_first_off,
         |  (token_offset + n_tokens - 1) // 512 AS seq_last
-        |FROM o""".stripMargin,
-    "txt_gopher_quality" ->
+        |FROM o""".stripMargin),
+    Gate("txt_gopher_quality", txtGopherQuality,
       """WITH p AS (SELECT doc_id,
         |    regexp_replace(regexp_replace(text,
         |      ' value ', '...' || chr(10), 'g'),
@@ -4497,8 +4229,8 @@ FROM enc JOIN ids USING (subword)"""
         |    AND CASE WHEN n_words > 0 THEN CAST(n_alpha AS DOUBLE) / n_words
         |             ELSE 0.0 END >= 0.9
         |    AND n_stop >= 2) AS keep
-        |FROM m""".stripMargin,
-    "txt_redact" ->
+        |FROM m""".stripMargin),
+    Gate("txt_redact", txtRedact,
       """WITH p AS (SELECT doc_id,
         |    replace(replace(replace(text,
         |      ' key ', ' bob.smith+1@corp.example.org '),
@@ -4515,8 +4247,8 @@ FROM enc JOIN ids USING (subword)"""
         |  CAST(len(regexp_extract_all(t, '<EMAIL>')) AS BIGINT) AS n_email,
         |  CAST(len(regexp_extract_all(t, '<IP>')) AS BIGINT) AS n_ip,
         |  CAST(len(regexp_extract_all(t, '<NUM>')) AS BIGINT) AS n_num
-        |FROM r""".stripMargin,
-    "txt_decontaminate" ->
+        |FROM r""".stripMargin),
+    Gate("txt_decontaminate", txtDecontaminate,
       """WITH evx AS (SELECT doc_id AS eid,
         |    array_to_string(list_filter(string_split_regex(lower(text),
         |      '[^a-z0-9]+'), x -> len(x) > 0)[1:12], ' ') AS ex
@@ -4543,8 +4275,8 @@ FROM enc JOIN ids USING (subword)"""
         |SELECT c.doc_id, COUNT(DISTINCT c.s) AS n_hit_grams,
         |  COUNT(DISTINCT e.eval_id) AS n_eval_docs
         |FROM csh c JOIN esh e ON c.s = e.s
-        |GROUP BY c.doc_id HAVING COUNT(DISTINCT c.s) >= 1""".stripMargin,
-    "txt_top_terms" ->
+        |GROUP BY c.doc_id HAVING COUNT(DISTINCT c.s) >= 1""".stripMargin),
+    Gate("txt_top_terms", txtTopTerms,
       """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(lower(text),
         |    '[^a-z0-9]+'), x -> len(x) > 0) AS t FROM documents),
         |tf AS (SELECT doc_id, u.term, COUNT(*) AS tf
@@ -4555,8 +4287,8 @@ FROM enc JOIN ids USING (subword)"""
         |      ORDER BY tf.tf DESC, dfd.df_docs ASC, tf.term ASC) AS rnk
         |  FROM tf JOIN dfd USING (term))
         |SELECT doc_id, term, tf, df_docs, CAST(rnk AS BIGINT) AS "rank"
-        |FROM r WHERE rnk <= 5""".stripMargin,
-    "txt_vocab" ->
+        |FROM r WHERE rnk <= 5""".stripMargin),
+    Gate("txt_vocab", txtVocab,
       """WITH toks AS (SELECT doc_id, list_filter(string_split_regex(lower(text),
         |    '[^a-z0-9]+'), x -> len(x) > 0) AS t FROM documents),
         |tf AS (SELECT doc_id, u.term, COUNT(*) AS cnt
@@ -4566,8 +4298,8 @@ FROM enc JOIN ids USING (subword)"""
         |r AS (SELECT *, ROW_NUMBER() OVER (ORDER BY n_occurrences DESC,
         |    df_docs ASC, term ASC) AS rnk FROM v)
         |SELECT term, n_occurrences, df_docs, CAST(rnk AS BIGINT) AS "rank"
-        |FROM r WHERE rnk <= 200""".stripMargin,
-    "txt_novelty" ->
+        |FROM r WHERE rnk <= 200""".stripMargin),
+    Gate("txt_novelty", txtNovelty,
       """WITH toks AS (SELECT doc_id,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> len(x) > 0) AS t
         |  FROM documents),
@@ -4579,8 +4311,8 @@ FROM enc JOIN ids USING (subword)"""
         |  CAST(SUM(CASE WHEN f.first_id = sh.doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_novel,
         |  CAST(SUM(CASE WHEN f.first_id = sh.doc_id THEN 1 ELSE 0 END) AS DOUBLE)
         |    / CAST(COUNT(*) AS DOUBLE) AS novelty
-        |FROM sh JOIN f USING (s) GROUP BY sh.doc_id""".stripMargin,
-    "txt_lm_backoff" ->
+        |FROM sh JOIN f USING (s) GROUP BY sh.doc_id""".stripMargin),
+    Gate("txt_lm_backoff", txtLmBackoff,
       """WITH tdoc AS (SELECT doc_id,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> len(x) > 0) AS t
         |  FROM documents
@@ -4615,8 +4347,8 @@ FROM enc JOIN ids USING (subword)"""
         |  CAST(SUM(CASE WHEN lvl = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_l2,
         |  CAST(SUM(CASE WHEN lvl = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_l3,
         |  CAST(SUM(CASE WHEN lvl = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_oov
-        |FROM lv GROUP BY doc_id""".stripMargin,
-    "txt_quality_score" ->
+        |FROM lv GROUP BY doc_id""".stripMargin),
+    Gate("txt_quality_score", txtQuality,
       """WITH tok AS (SELECT doc_id, u.t AS term
         |  FROM (SELECT doc_id,
         |      list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -4632,8 +4364,8 @@ FROM enc JOIN ids USING (subword)"""
         |  FROM tf JOIN ww USING (term) GROUP BY doc_id)
         |SELECT d.doc_id, COALESCE(n_terms, 0) AS n_terms,
         |  COALESCE(margin, 0) AS margin, COALESCE(margin, 0) > 0 AS keep
-        |FROM documents d LEFT JOIN agg USING (doc_id)""".stripMargin,
-    "txt_auc" ->
+        |FROM documents d LEFT JOIN agg USING (doc_id)""".stripMargin),
+    Gate("txt_auc", txtAuc,
       """WITH tok AS (SELECT doc_id, u.t AS term
         |  FROM (SELECT doc_id,
         |      list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -4659,8 +4391,8 @@ FROM enc JOIN ids USING (subword)"""
         |    CAST(SUM(np * (2 * bef + n + 1)) AS BIGINT) AS sum2 FROM r)
         |SELECT P AS n_pos, N AS n_neg,
         |  CAST(sum2 - P * (P + 1) AS DOUBLE) / (2.0 * P * N) AS auc
-        |FROM f""".stripMargin,
-    "txt_feat_hash" ->
+        |FROM f""".stripMargin),
+    Gate("txt_feat_hash", txtFeatHash,
       """WITH tok AS (SELECT doc_id, u.t AS term
         |  FROM (SELECT doc_id,
         |      list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
@@ -4670,8 +4402,8 @@ FROM enc JOIN ids USING (subword)"""
         |  CAST(('0x' || substring(md5('graft-feat|' || term), 1, 8)) AS BIGINT)
         |    % 512 AS feature,
         |  COUNT(*) AS tf
-        |FROM tok GROUP BY doc_id, feature""".stripMargin,
-    "txt_dup_spans" ->
+        |FROM tok GROUP BY doc_id, feature""".stripMargin),
+    Gate("txt_dup_spans", txtDupSpans,
       s"""WITH pl AS (SELECT doc_id,
         |    CASE WHEN doc_id % 3 = 0 THEN text || ' ' || text ELSE text END AS text
         |  FROM documents),
@@ -4691,8 +4423,8 @@ FROM enc JOIN ids USING (subword)"""
         |${TestTables.mergedSql("dsp")}
         |SELECT chrom AS doc_id, start AS span_start, "end" AS span_end,
         |  n_intervals AS n_dup_windows
-        |FROM m1""".stripMargin,
-    "txt_profile" ->
+        |FROM m1""".stripMargin),
+    Gate("txt_profile", txtProfile,
       """WITH h AS (SELECT source, CAST(length(text) AS BIGINT) AS v,
         |    COUNT(*) AS c FROM documents GROUP BY source, v),
         |cum AS (SELECT *, CAST(SUM(c) OVER (PARTITION BY source ORDER BY v
@@ -4705,8 +4437,8 @@ FROM enc JOIN ids USING (subword)"""
         |  MIN(CASE WHEN cumc >= CEIL(0.5 * t.n) THEN v END) AS p50,
         |  MIN(CASE WHEN cumc >= CEIL(0.9 * t.n) THEN v END) AS p90,
         |  MIN(CASE WHEN cumc >= CEIL(0.99 * t.n) THEN v END) AS p99
-        |FROM cum JOIN t USING (source) GROUP BY source, t.n, t.tot""".stripMargin,
-    "txt_c4_filter" ->
+        |FROM cum JOIN t USING (source) GROUP BY source, t.n, t.tot""".stripMargin),
+    Gate("txt_c4_filter", txtC4,
       """WITH pl AS (SELECT doc_id,
         |    regexp_replace(text, ' (the|a|value|table|row) ', chr(10), 'g')
         |    || chr(10) || 'this line has more than five words.'
@@ -4732,15 +4464,15 @@ FROM enc JOIN ids USING (subword)"""
         |  COALESCE(n_kept, 0) AS n_kept,
         |  (COALESCE(n_kept, 0) >= 3 AND COALESCE(lor, 0) = 0
         |   AND COALESCE(cur, 0) = 0) AS page_keep
-        |FROM documents d LEFT JOIN agg USING (doc_id)""".stripMargin,
-    "doc_domain_cap" ->
+        |FROM documents d LEFT JOIN agg USING (doc_id)""".stripMargin),
+    Gate("doc_domain_cap", docDomainCap,
       """WITH b AS (SELECT doc_id, source,
         |    CAST(('0x' || substring(md5('graft|' || doc_id), 1, 8)) AS BIGINT) AS bucket
         |  FROM documents)
         |SELECT doc_id, source FROM b
         |QUALIFY ROW_NUMBER() OVER (PARTITION BY source
-        |  ORDER BY bucket ASC, doc_id ASC) <= 10""".stripMargin,
-    "doc_sample_strat" ->
+        |  ORDER BY bucket ASC, doc_id ASC) <= 10""".stripMargin),
+    Gate("doc_sample_strat", docSampleStrat,
       """WITH b AS (SELECT doc_id, source,
         |    CAST(('0x' || substring(md5('graft|' || doc_id), 1, 8)) AS BIGINT) AS bucket
         |  FROM documents)
@@ -4748,16 +4480,16 @@ FROM enc JOIN ids USING (subword)"""
         |WHERE bucket < CASE source
         |  WHEN 'src0' THEN 4294967296 WHEN 'src1' THEN 2147483648
         |  WHEN 'src2' THEN 1073741824 WHEN 'src3' THEN 536870912
-        |  WHEN 'src4' THEN 268435456 ELSE 0 END""".stripMargin,
-    "doc_shard_shuffle" ->
+        |  WHEN 'src4' THEN 268435456 ELSE 0 END""".stripMargin),
+    Gate("doc_shard_shuffle", docShardShuffle,
       """WITH k AS (SELECT doc_id, source,
         |    CAST(('0x' || substring(md5('graft|' || doc_id), 1, 15)) AS BIGINT) AS key
         |  FROM documents)
         |SELECT doc_id, source, CAST(key % 16 AS INT) AS shard,
         |  CAST(ROW_NUMBER() OVER (PARTITION BY key % 16
         |    ORDER BY key, doc_id) AS BIGINT) AS shard_pos
-        |FROM k""".stripMargin,
-    "doc_mix" ->
+        |FROM k""".stripMargin),
+    Gate("doc_mix", docMix,
       """WITH w AS (SELECT * FROM (VALUES
         |    ('src0', CAST(2 AS BIGINT), CAST(1073741824 AS BIGINT)),
         |    ('src1', CAST(0 AS BIGINT), CAST(2147483648 AS BIGINT)),
@@ -4771,8 +4503,8 @@ FROM enc JOIN ids USING (subword)"""
         |WHERE e.epoch < w.n_full OR
         |  CAST(('0x' || substring(
         |    md5('mix|' || e.epoch || '|' || d.doc_id), 1, 8)) AS BIGINT)
-        |  < w.thresh""".stripMargin,
-    "doc_mix_temp" ->
+        |  < w.thresh""".stripMargin),
+    Gate("doc_mix_temp", docMixTemp,
       """WITH c AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n
         |  FROM documents GROUP BY 1),
         |q AS MATERIALIZED (SELECT source, n,
@@ -4793,10 +4525,10 @@ FROM enc JOIN ids USING (subword)"""
         |WHERE e.epoch < wt.n_full OR
         |  CAST(('0x' || substring(
         |    md5('mix|' || e.epoch || '|' || d.doc_id), 1, 8)) AS BIGINT)
-        |  < wt.thresh""".stripMargin,
+        |  < wt.thresh""".stripMargin),
     // cut constants are the engine's own (0.75 * 2^32).toLong /
     // (0.875 * 2^32).toLong — both exact binary doubles
-    "doc_split_group" ->
+    Gate("doc_split_group", docSplitGroup,
       """WITH b AS (SELECT doc_id, source,
         |    CAST(('0x' || substring(md5('graft-split|' ||
         |      COALESCE(source, '__graft_null__')), 1, 8))
@@ -4806,12 +4538,12 @@ FROM enc JOIN ids USING (subword)"""
         |  CASE WHEN bucket < 3221225472 THEN 'train'
         |       WHEN bucket < 3758096384 THEN 'val'
         |       ELSE 'test' END AS split
-        |FROM b""".stripMargin,
+        |FROM b""".stripMargin),
     // Replays CdcKernel's polynomial window hash DIRECTLY per position
     // (sum of cp * P^(15-j) mod M, P=1000003, M=2^31-1): the engine's
     // rolling update equals this window sum by ring arithmetic mod M,
     // so an independent non-rolling replay certifies the rolling code.
-    "txt_cdc" ->
+    Gate("txt_cdc", txtCdc,
       s"""WITH base AS (SELECT doc_id, text ||
          |    CASE WHEN doc_id % 4 = 0 THEN '$CdcShared' ELSE '' END AS t
          |  FROM documents),
@@ -4838,8 +4570,8 @@ FROM enc JOIN ids USING (subword)"""
          |  md5(substring(b.t, CAST(s.p + 1 AS INT),
          |    CAST(s.nxt - s.p AS INT))) AS chunk_md5
          |FROM spans s JOIN b2 b USING (doc_id)
-         |WHERE s.nxt IS NOT NULL AND s.nxt > s.p""".stripMargin,
-    "doc_delta" ->
+         |WHERE s.nxt IS NOT NULL AND s.nxt > s.p""".stripMargin),
+    Gate("doc_delta", docDelta,
       """WITH o AS (SELECT doc_id, COALESCE(text, '') AS t FROM documents),
         |n AS (SELECT doc_id,
         |    CASE WHEN doc_id % 7 = 0 THEN COALESCE(text, '') || ' v2'
@@ -4856,24 +4588,24 @@ FROM enc JOIN ids USING (subword)"""
         |       WHEN nt IS NULL THEN 'removed'
         |       WHEN ot <> nt THEN 'changed' END AS status
         |FROM j
-        |WHERE ot IS NULL OR nt IS NULL OR ot <> nt""".stripMargin,
+        |WHERE ot IS NULL OR nt IS NULL OR ot <> nt""".stripMargin),
     // full-join replay: the salted two-branch union must be EXACTLY the
     // plain left join (salting is an execution strategy, not semantics)
-    "join_skew_salted" ->
+    Gate("join_skew_salted", joinSkewSalted,
       """WITH d AS (SELECT doc_id,
         |    CASE WHEN doc_id % 4 < 3 THEN 'hot' ELSE source END AS k
         |  FROM documents),
         |dim AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS n_k FROM d
         |  GROUP BY k HAVING k <> 'src1')
         |SELECT d.doc_id, d.k, dim.n_k
-        |FROM d LEFT JOIN dim ON d.k = dim.k""".stripMargin,
+        |FROM d LEFT JOIN dim ON d.k = dim.k""".stripMargin),
     // every SUM-derived column is CAST to BIGINT: DuckDB promotes
     // SUM(BIGINT) to HUGEINT, which pandas fetches as float64 —
     // numerically equal to Spark's BIGINT (so the builder's coercing
     // compare passed) but stringifying as '19150.0' vs '19150' under a
     // value-hashing compare. This was the r10-r12 perpetual
     // hash_match=false on exactly the three uncast-SUM oracles.
-    "diag_key_skew2" ->
+    Gate("diag_key_skew2", diagKeySkew,
       """WITH k AS (SELECT CAST(CASE WHEN l_orderkey % 4 < 3
         |      THEN l_orderkey % 8
         |      ELSE l_orderkey % 97 + 8 END AS VARCHAR) AS key
@@ -4886,8 +4618,8 @@ FROM enc JOIN ids USING (subword)"""
         |  CAST(cnt * 1000000 // total AS BIGINT) AS share_ppm,
         |  CAST(cnt * 100 * n_keys // total AS BIGINT) AS skew_x100
         |FROM c CROSS JOIN t
-        |ORDER BY cnt DESC, key ASC LIMIT 20""".stripMargin,
-    "lay_compaction2" ->
+        |ORDER BY cnt DESC, key ASC LIMIT 20""".stripMargin),
+    Gate("lay_compaction2", layCompaction,
       """WITH f AS (SELECT CAST(l_orderkey % 4 AS BIGINT) AS part,
         |    printf('f%06d', CAST(l_orderkey % 512 AS INT)) AS file,
         |    CAST(COUNT(*) * 1000 AS BIGINT) AS bytes
@@ -4905,29 +4637,29 @@ FROM enc JOIN ids USING (subword)"""
         |SELECT part, file, bytes, compaction_group,
         |  CAST(SUM(bytes) OVER (PARTITION BY part, compaction_group)
         |    AS BIGINT) AS group_bytes
-        |FROM g""".stripMargin,
-    "txt_quality_adaptive" ->
+        |FROM g""".stripMargin),
+    Gate("txt_quality_adaptive", txtQualityAdaptive,
       """WITH r AS (SELECT doc_id, lang, n_chars,
         |    CAST(ROW_NUMBER() OVER (PARTITION BY lang
         |      ORDER BY n_chars DESC, doc_id ASC) AS BIGINT) AS q_rank,
         |    COUNT(*) OVER (PARTITION BY lang) AS n_group
         |  FROM documents)
         |SELECT doc_id, lang, n_chars, q_rank, n_group FROM r
-        |WHERE q_rank * 1000000 <= 600000 * n_group""".stripMargin,
-    "txt_normalize" ->
+        |WHERE q_rank * 1000000 <= 600000 * n_group""".stripMargin),
+    Gate("txt_normalize", txtNormalize,
       """WITH t AS (SELECT doc_id, text || ' cafe' || chr(769) AS text
         |  FROM documents)
         |SELECT doc_id, md5(nfc_normalize(text)) AS norm_md5,
         |  CAST(nfc_normalize(text) <> text AS BIGINT) AS changed,
         |  CAST(length(nfc_normalize(text)) AS BIGINT) AS n_chars_norm
-        |FROM t""".stripMargin,
-    "txt_chunk" ->
+        |FROM t""".stripMargin),
+    Gate("txt_chunk", txtChunk,
       """SELECT doc_id, t.chunk_id, t.chunk_id * 96 AS chunk_start,
         |  substring(text, CAST(t.chunk_id * 96 + 1 AS INT), 128) AS chunk_text
         |FROM documents,
         |  UNNEST(generate_series(0,
-        |    GREATEST(0, (length(text) - 128 + 95) // 96))) t(chunk_id)""".stripMargin,
-    "txt_langid" -> {
+        |    GREATEST(0, (length(text) - 128 + 95) // 96))) t(chunk_id)""".stripMargin),
+    Gate("txt_langid", txtLangid, {
       val markers = TextOps.LangMarkers
       val scoreExprs = markers.map { case (lang, ws) =>
         s"CAST(len(regexp_extract_all(lower(text), '\\b(${ws.mkString("|")})\\b')) AS BIGINT) AS s_$lang"
@@ -4946,16 +4678,16 @@ FROM enc JOIN ids USING (subword)"""
          |FROM t),
          |mm AS (SELECT *, $best AS m FROM sc)
          |SELECT doc_id, CASE $cases ELSE 'und' END AS lang_pred FROM mm""".stripMargin
-    },
-    "txt_fingerprint" ->
+    }),
+    Gate("txt_fingerprint", txtFingerprint,
       """SELECT doc_id, md5(text) AS md5, CAST(strlen(text) AS BIGINT) AS n_bytes
-        |FROM documents""".stripMargin,
-    "dedup_exact" ->
+        |FROM documents""".stripMargin),
+    Gate("dedup_exact", dedupExact,
       """SELECT doc_id,
         |  MIN(doc_id) OVER (PARTITION BY md5(text)) AS canonical_id,
         |  doc_id <> MIN(doc_id) OVER (PARTITION BY md5(text)) AS is_dup
-        |FROM documents""".stripMargin,
-    "dedup_ngram_jaccard" ->
+        |FROM documents""".stripMargin),
+    Gate("dedup_ngram_jaccard", dedupNgramJaccard,
       """WITH toks AS (SELECT doc_id,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> len(x) > 0) AS t
         |  FROM documents),
@@ -4969,8 +4701,8 @@ FROM enc JOIN ids USING (subword)"""
         |SELECT id_1, id_2, n_common, x.n AS n_1, y.n AS n_2,
         |  CAST(n_common AS DOUBLE) / CAST(x.n + y.n - n_common AS DOUBLE) AS jaccard
         |FROM inter JOIN sizes x ON id_1 = x.doc_id JOIN sizes y ON id_2 = y.doc_id
-        |WHERE CAST(n_common AS DOUBLE) / CAST(x.n + y.n - n_common AS DOUBLE) >= 0.6""".stripMargin,
-    "dedup_minhash_lsh" ->
+        |WHERE CAST(n_common AS DOUBLE) / CAST(x.n + y.n - n_common AS DOUBLE) >= 0.6""".stripMargin),
+    Gate("dedup_minhash_lsh", dedupMinhash,
       """WITH toks AS (SELECT doc_id,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> len(x) > 0) AS t
         |  FROM documents),
@@ -4984,8 +4716,8 @@ FROM enc JOIN ids USING (subword)"""
         |SELECT id_1, id_2,
         |  CAST(n_common AS DOUBLE) / CAST(x.n + y.n - n_common AS DOUBLE) AS jaccard
         |FROM inter JOIN sizes x ON id_1 = x.doc_id JOIN sizes y ON id_2 = y.doc_id
-        |WHERE CAST(n_common AS DOUBLE) / CAST(x.n + y.n - n_common AS DOUBLE) >= 0.6""".stripMargin,
-    "dedup_minhash_incr" ->
+        |WHERE CAST(n_common AS DOUBLE) / CAST(x.n + y.n - n_common AS DOUBLE) >= 0.6""".stripMargin),
+    Gate("dedup_minhash_incr", dedupMinhashIncr,
       """WITH toks AS (SELECT doc_id,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> len(x) > 0) AS t
         |  FROM documents),
@@ -5000,8 +4732,8 @@ FROM enc JOIN ids USING (subword)"""
         |  CAST(n_common AS DOUBLE) / CAST(x.n + y.n - n_common AS DOUBLE) AS jaccard
         |FROM inter JOIN sizes x ON id_1 = x.doc_id JOIN sizes y ON id_2 = y.doc_id
         |WHERE CAST(n_common AS DOUBLE) / CAST(x.n + y.n - n_common AS DOUBLE) >= 0.6
-        |  AND (id_1 % 3 = 0 OR id_2 % 3 = 0)""".stripMargin,
-    "dedup_simhash" ->
+        |  AND (id_1 % 3 = 0 OR id_2 % 3 = 0)""".stripMargin),
+    Gate("dedup_simhash", dedupSimhash,
       """WITH sigs AS (SELECT doc_id, sig
         |  FROM read_parquet('{AUX_DIR}/simhash_sigs/*.parquet')),
         |cand AS (
@@ -5012,8 +4744,8 @@ FROM enc JOIN ids USING (subword)"""
         |    ((x.sig >> 32) & 65535) = ((y.sig >> 32) & 65535) OR
         |    ((x.sig >> 48) & 65535) = ((y.sig >> 48) & 65535)))
         |SELECT id_1, id_2, CAST(bit_count(xor(s1, s2)) AS BIGINT) AS hamming
-        |FROM cand WHERE bit_count(xor(s1, s2)) <= 3""".stripMargin,
-    "emb_ivf_topk" ->
+        |FROM cand WHERE bit_count(xor(s1, s2)) <= 3""".stripMargin),
+    Gate("emb_ivf_topk", embIvfTopk,
       """WITH asg AS (SELECT vec_id, centroid_id
         |  FROM read_parquet('{AUX_DIR}/ivf_assign/*.parquet')),
         |pr AS (SELECT query_id, centroid_id
@@ -5029,8 +4761,8 @@ FROM enc JOIN ids USING (subword)"""
         |SELECT query_id, neighbor_id, CAST(rn AS BIGINT) AS rank FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
         |    ORDER BY c DESC, neighbor_id) AS rn FROM cand) z
-        |WHERE rn <= 5""".stripMargin,
-    "emb_hard_neg_ivf" ->
+        |WHERE rn <= 5""".stripMargin),
+    Gate("emb_hard_neg_ivf", embHardNegIvf,
       """WITH asg AS (SELECT vec_id, centroid_id
         |  FROM read_parquet('{AUX_DIR}/ivf_assign/*.parquet')),
         |pr AS (SELECT query_id, centroid_id
@@ -5049,8 +4781,8 @@ FROM enc JOIN ids USING (subword)"""
         |  CAST(rn AS BIGINT) AS rank FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
         |    ORDER BY c DESC, neighbor_id) AS rn FROM cand) z
-        |WHERE rn <= 5""".stripMargin,
-    "dedup_components" ->
+        |WHERE rn <= 5""".stripMargin),
+    Gate("dedup_components", dedupComponents,
       """WITH RECURSIVE nat AS (SELECT id_1, id_2
         |  FROM read_parquet('{AUX_DIR}/dup_pairs/*.parquet')),
         |chain AS (SELECT 1000000 + i AS id_1, 1000001 + i AS id_2
@@ -5064,8 +4796,8 @@ FROM enc JOIN ids USING (subword)"""
         |reach(a, b) AS (SELECT a, b FROM e
         |  UNION SELECT r.a, e2.b FROM reach r JOIN e e2 ON r.b = e2.a)
         |SELECT a AS id, CAST(LEAST(a, MIN(b)) AS BIGINT) AS component_id
-        |FROM reach GROUP BY a""".stripMargin,
-    "dedup_keep_best" ->
+        |FROM reach GROUP BY a""".stripMargin),
+    Gate("dedup_keep_best", dedupKeepBest,
       """WITH RECURSIVE nat AS (SELECT id_1, id_2
         |  FROM read_parquet('{AUX_DIR}/dup_pairs/*.parquet')),
         |e AS (SELECT id_1 AS a, id_2 AS b FROM nat
@@ -5082,8 +4814,8 @@ FROM enc JOIN ids USING (subword)"""
         |    ROW_NUMBER() OVER (PARTITION BY component_id
         |      ORDER BY n_chars DESC, doc_id ASC) AS rk
         |  FROM j)
-        |SELECT doc_id, component_id, rk = 1 AS is_kept FROM r""".stripMargin,
-    "emb_ann_lsh" ->
+        |SELECT doc_id, component_id, rk = 1 AS is_kept FROM r""".stripMargin),
+    Gate("emb_ann_lsh", embAnnLsh,
       """WITH bk AS (SELECT vec_id, bucket
         |  FROM read_parquet('{AUX_DIR}/emb_buckets/*.parquet')),
         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -5102,8 +4834,8 @@ FROM enc JOIN ids USING (subword)"""
         |SELECT query_id, neighbor_id, CAST(rn AS BIGINT) AS rank FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
         |    ORDER BY c DESC, neighbor_id) AS rn FROM cand) z
-        |WHERE rn <= 5""".stripMargin,
-    "emb_cosine_dedup" ->
+        |WHERE rn <= 5""".stripMargin),
+    Gate("emb_cosine_dedup", embCosineDedup,
       """WITH bk AS (SELECT vec_id, bucket
         |  FROM read_parquet('{AUX_DIR}/emb_dedup_buckets/*.parquet')),
         |aug AS (
@@ -5116,8 +4848,8 @@ FROM enc JOIN ids USING (subword)"""
         |FROM bk x JOIN bk y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
         |JOIN aug a1 ON a1.vec_id = x.vec_id
         |JOIN aug a2 ON a2.vec_id = y.vec_id
-        |WHERE list_cosine_similarity(a1.v, a2.v) >= 0.9""".stripMargin,
-    "emb_semdedup" ->
+        |WHERE list_cosine_similarity(a1.v, a2.v) >= 0.9""".stripMargin),
+    Gate("emb_semdedup", embSemDedup,
       """WITH RECURSIVE asg AS (SELECT vec_id, centroid_id
         |  FROM read_parquet('{AUX_DIR}/semdedup_assign/*.parquet')),
         |aug AS (
@@ -5140,8 +4872,8 @@ FROM enc JOIN ids USING (subword)"""
         |  FROM reach GROUP BY a)
         |SELECT asg.vec_id, asg.centroid_id,
         |  COALESCE(comp.root = asg.vec_id, TRUE) AS keep
-        |FROM asg LEFT JOIN comp USING (vec_id)""".stripMargin,
-    "emb_lsh_cap" ->
+        |FROM asg LEFT JOIN comp USING (vec_id)""".stripMargin),
+    Gate("emb_lsh_cap", embLshCap,
       """WITH bk AS (SELECT vec_id, bucket
         |  FROM read_parquet('{AUX_DIR}/emb_cap_buckets/*.parquet')),
         |hot AS (SELECT bucket FROM bk GROUP BY bucket HAVING COUNT(*) > 400),
@@ -5161,8 +4893,8 @@ FROM enc JOIN ids USING (subword)"""
         |FROM ok x JOIN ok y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
         |JOIN aug a1 ON a1.vec_id = x.vec_id
         |JOIN aug a2 ON a2.vec_id = y.vec_id
-        |WHERE list_cosine_similarity(a1.v, a2.v) >= 0.9""".stripMargin,
-    "emb_pq_topk" ->
+        |WHERE list_cosine_similarity(a1.v, a2.v) >= 0.9""".stripMargin),
+    Gate("emb_pq_topk", embPqTopk,
       """WITH bk AS (SELECT sub, cid, cv
         |  FROM read_parquet('{AUX_DIR}/pq_books/*.parquet')),
         |cd AS (SELECT vec_id, sub, code
@@ -5184,16 +4916,16 @@ FROM enc JOIN ids USING (subword)"""
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
         |    ORDER BY dist ASC, neighbor_id ASC) AS rn
         |  FROM d WHERE query_id <> neighbor_id) z
-        |WHERE rn <= 5""".stripMargin,
+        |WHERE rn <= 5""".stripMargin),
     // candidates admitted by probe-list ∘ assignment (the dumped IVF
     // aux), distances replayed with the identical exact-long ADC
     // arithmetic as emb_pq_topk — the shortlist composition end to end
-    "emb_pq_ivf" -> pqIvfOracleSql,
+    Gate("emb_pq_ivf", embPqIvf, pqIvfOracleSql),
     // identical result contract through the persisted bucketed index;
     // what the engine side adds is the bucketed write -> catalog read
     // round-trip (see embPqIvfSearch)
-    "emb_pq_ivf_search" -> pqIvfOracleSql,
-    "emb_cov" ->
+    Gate("emb_pq_ivf_search", embPqIvfSearch, pqIvfOracleSql),
+    Gate("emb_cov", embCov,
       """WITH q AS (SELECT vec_id, CAST(u.i - 1 AS BIGINT) AS i,
         |    CAST(round(embedding[u.i] * 1024) AS BIGINT) AS q
         |  FROM embeddings, UNNEST(generate_series(1, 64)) AS u(i)),
@@ -5205,8 +4937,8 @@ FROM enc JOIN ids USING (subword)"""
         |cnt AS (SELECT CAST(-1 AS BIGINT) AS i, CAST(-1 AS BIGINT) AS j,
         |    CAST(COUNT(*) AS BIGINT) AS s FROM embeddings)
         |SELECT * FROM prods UNION ALL SELECT * FROM firsts
-        |UNION ALL SELECT * FROM cnt""".stripMargin,
-    "emb_cosine_topk" ->
+        |UNION ALL SELECT * FROM cnt""".stripMargin),
+    Gate("emb_cosine_topk", embCosineTopk,
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id % 100 = 0),
         |scored AS (SELECT q.query_id, e.vec_id AS neighbor_id,
@@ -5215,13 +4947,13 @@ FROM enc JOIN ids USING (subword)"""
         |SELECT query_id, neighbor_id, CAST(rn AS BIGINT) AS rank FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
         |    ORDER BY c DESC, neighbor_id) AS rn FROM scored) z
-        |WHERE rn <= 5""".stripMargin,
+        |WHERE rn <= 5""".stripMargin),
     // the quantized CTEs replicate the kernel arithmetic exactly:
     // scale = max|x|/127 (float abs is exact, one double division),
     // q = sign(x) * floor(|x|/scale + 0.5) clamped (round half away from
     // zero — DuckDB ROUND's rule and the kernel's), integer dot (exact in
     // doubles at |q|<=127, d=64), then score = dot * qs * cs left-assoc
-    "emb_quant_topk" ->
+    Gate("emb_quant_topk", embQuantTopk,
       """WITH e AS (SELECT vec_id, embedding FROM embeddings),
         |s AS (SELECT vec_id,
         |    CAST(list_max(list_transform(embedding, x -> abs(x))) AS DOUBLE) / 127
@@ -5243,8 +4975,8 @@ FROM enc JOIN ids USING (subword)"""
         |SELECT query_id, neighbor_id, CAST(rn AS BIGINT) AS rank FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
         |    ORDER BY sc2 DESC, neighbor_id) AS rn FROM scored) z
-        |WHERE rn <= 5""".stripMargin,
-    "emb_ivf_incr" ->
+        |WHERE rn <= 5""".stripMargin),
+    Gate("emb_ivf_incr", embIvfIncr,
       """WITH asg AS (SELECT vec_id, centroid_id
         |  FROM read_parquet('{AUX_DIR}/ivf_assign/*.parquet')),
         |pr AS (SELECT query_id, centroid_id
@@ -5281,8 +5013,8 @@ FROM enc JOIN ids USING (subword)"""
         |SELECT query_id, neighbor_id, CAST(rn AS BIGINT) AS rank FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
         |    ORDER BY c DESC, neighbor_id) AS rn FROM rr) z
-        |WHERE rn <= 5""".stripMargin,
-    "emb_quant_rerank" ->
+        |WHERE rn <= 5""".stripMargin),
+    Gate("emb_quant_rerank", embQuantRerank,
       """WITH e AS (SELECT vec_id, embedding FROM embeddings),
         |s AS (SELECT vec_id,
         |    CAST(list_max(list_transform(embedding, x -> abs(x))) AS DOUBLE) / 127
@@ -5314,8 +5046,8 @@ FROM enc JOIN ids USING (subword)"""
         |SELECT query_id, neighbor_id, CAST(rn AS BIGINT) AS rank FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
         |    ORDER BY c DESC, neighbor_id) AS rn FROM rr) z
-        |WHERE rn <= 5""".stripMargin,
-    "emb_hard_neg" ->
+        |WHERE rn <= 5""".stripMargin),
+    Gate("emb_hard_neg", embHardNeg,
       """WITH e AS (SELECT vec_id, label,
         |    CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
         |q AS (SELECT vec_id AS query_id, label AS ql, v AS qv
@@ -5328,41 +5060,41 @@ FROM enc JOIN ids USING (subword)"""
         |  CAST(rn AS BIGINT) AS rank FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
         |    ORDER BY c DESC, neighbor_id) AS rn FROM scored) z
-        |WHERE rn <= 5""".stripMargin,
-    "mm_frames" ->
+        |WHERE rn <= 5""".stripMargin),
+    Gate("mm_frames", mmFrames,
       """SELECT doc_id, CAST(f AS BIGINT) AS frame
         |FROM documents,
-        |  UNNEST(generate_series(0, CAST(strlen(text) AS BIGINT) % 24, 5)) t(f)""".stripMargin,
-    "mm_meta" ->
+        |  UNNEST(generate_series(0, CAST(strlen(text) AS BIGINT) % 24, 5)) t(f)""".stripMargin),
+    Gate("mm_meta", mmMeta,
       """SELECT doc_id, CAST(strlen(text) AS BIGINT) AS n_bytes,
         |  CAST(strlen(text) AS BIGINT) % 640 + 1 AS fake_width,
         |  CAST(strlen(text) AS BIGINT) * 7 % 480 + 1 AS fake_height,
         |  CAST(strlen(text) AS BIGINT) % 24 + 1 AS n_frames
-        |FROM documents""".stripMargin,
-    "mm_decode" ->
+        |FROM documents""".stripMargin),
+    Gate("mm_decode", mmDecode,
       """SELECT doc_id, CAST(4 + doc_id % 13 AS BIGINT) AS width,
         |  CAST(3 + (doc_id * 5) % 11 AS BIGINT) AS height,
         |  CAST(1 AS BIGINT) AS n_frames
-        |FROM documents WHERE doc_id % 7 = 0""".stripMargin,
-    "mm_phash_dedup" ->
+        |FROM documents WHERE doc_id % 7 = 0""".stripMargin),
+    Gate("mm_phash_dedup", mmPhashDedup,
       """WITH m AS (SELECT doc_id FROM documents WHERE doc_id % 3 = 0)
         |SELECT doc_id,
         |  MIN(doc_id) OVER (PARTITION BY doc_id % 7) AS rep_id
-        |FROM m""".stripMargin,
-    "mm_audio" ->
+        |FROM m""".stripMargin),
+    Gate("mm_audio", mmAudio,
       """SELECT doc_id, CAST(8000 AS BIGINT) AS sample_rate,
         |  CAST(1 AS BIGINT) AS channels, CAST(16 AS BIGINT) AS bits,
         |  CAST(800 + (doc_id % 5) * 160 AS BIGINT) AS n_samples,
         |  CAST((800 + (doc_id % 5) * 160) * 1000 // 8000 AS BIGINT)
         |    AS duration_ms
-        |FROM documents WHERE doc_id % 11 = 0""".stripMargin,
-    "mm_video" ->
+        |FROM documents WHERE doc_id % 11 = 0""".stripMargin),
+    Gate("mm_video", mmVideo,
       """SELECT doc_id, CAST(16 * (1 + doc_id % 8) AS BIGINT) AS width,
         |  CAST(16 * (1 + doc_id % 5) AS BIGINT) AS height,
         |  CAST(10 + doc_id % 20 AS BIGINT) AS n_frames,
         |  CAST((10 + doc_id % 20) * 40 AS BIGINT) AS duration_ms
-        |FROM documents WHERE doc_id % 9 = 0""".stripMargin,
-    "mm_frame_extract" ->
+        |FROM documents WHERE doc_id % 9 = 0""".stripMargin),
+    Gate("mm_frame_extract", mmFrameExtract,
       """SELECT doc_id, CAST(f AS BIGINT) AS frame,
         |  md5('frame|' || doc_id || '|' || f || '|' ||
         |      repeat('x', CAST(1 + (doc_id + f) % 7 AS INT))) AS frame_md5,
@@ -5370,16 +5102,16 @@ FROM enc JOIN ids USING (subword)"""
         |       + 1 + (doc_id + f) % 7 AS BIGINT) AS frame_len
         |FROM documents,
         |  UNNEST(generate_series(0, CAST(9 + doc_id % 20 AS BIGINT), 4)) t(f)
-        |WHERE doc_id % 9 = 0""".stripMargin,
-    "dedup_bloom" ->
+        |WHERE doc_id % 9 = 0""".stripMargin),
+    Gate("dedup_bloom", dedupBloom,
       """WITH corpus AS (SELECT text FROM documents WHERE doc_id % 2 = 0),
         |b AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 1
         |  UNION ALL
         |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 10 = 0)
         |SELECT b.doc_id FROM b
         |WHERE NOT EXISTS (SELECT 1 FROM corpus c WHERE c.text = b.text)"""
-        .stripMargin,
-    "txt_line_dedup" ->
+        .stripMargin),
+    Gate("txt_line_dedup", txtLineDedup,
       """WITH d2 AS (SELECT doc_id,
         |    regexp_replace(text, ' (the|a|value|table|row) ', chr(10), 'g') AS text
         |  FROM documents),
@@ -5401,8 +5133,8 @@ FROM enc JOIN ids USING (subword)"""
         |  COALESCE(a.n_removed, 0) AS n_removed,
         |  CASE WHEN d.text IS NULL THEN NULL
         |    ELSE COALESCE(a.clean_md5, md5('')) END AS clean_md5
-        |FROM d2 d LEFT JOIN agg a USING (doc_id)""".stripMargin,
-    "txt_url_canon" ->
+        |FROM d2 d LEFT JOIN agg a USING (doc_id)""".stripMargin),
+    Gate("txt_url_canon", txtUrlCanon,
       """SELECT * FROM (VALUES
         |  ('HTTPS://WWW.Example.COM:443/Path/Page/?utm_source=x&id=7&gclid=9#frag',
         |   'https://example.com/Path/Page/?id=7',
@@ -5427,11 +5159,11 @@ FROM enc JOIN ids USING (subword)"""
         |   'http://files.bucket.s3.amazonaws.com/key',
         |   'files.bucket.s3.amazonaws.com', 'bucket.s3.amazonaws.com'),
         |  ('not a url', 'not a url', '', ''),
-        |  (NULL, NULL, NULL, NULL)) t(url, canon, host, domain)""".stripMargin,
+        |  (NULL, NULL, NULL, NULL)) t(url, canon, host, domain)""".stripMargin),
     // full DSIR replay: unigram+bigram md5 buckets, add-1-smoothed
     // target/raw bucket counts, micro-quantized log ratios (identical
     // operand order as Dsir.scala), exact integer weight sums
-    "txt_dsir" ->
+    Gate("txt_dsir", txtDsir,
       """WITH d AS (SELECT doc_id,
         |    list_filter(string_split_regex(lower(COALESCE(text, '')),
         |      '[^a-z0-9]+'), x -> len(x) > 0) AS l
@@ -5465,25 +5197,25 @@ FROM enc JOIN ids USING (subword)"""
         |  FROM f JOIN lr USING (bucket) GROUP BY f.doc_id)
         |SELECT d0.doc_id, COALESCE(sc.s, 0) AS dsir_score,
         |  COALESCE(sc.nf, 0) AS n_feat
-        |FROM documents d0 LEFT JOIN sc USING (doc_id)""".stripMargin,
+        |FROM documents d0 LEFT JOIN sc USING (doc_id)""".stripMargin),
     // generated 12-iteration CTE replay of BPE training (see
     // bpeTrainOracle) and the fixed-merge apply replay
-    "txt_bpe" -> bpeTrainOracle(12),
-    "txt_bpe_apply" -> bpeApplyOracle,
+    Gate("txt_bpe", txtBpe, bpeTrainOracle(12)),
+    Gate("txt_bpe_apply", txtBpeApply, bpeApplyOracle),
     // per-bit Morton interleave replay + prefix-grid assignment
-    "lay_zorder" -> zorderOracleSql,
+    Gate("lay_zorder", layZorder, zorderOracleSql),
     // HDR log-bucket + integer-mass crossing replay
-    "txt_len_quantiles" -> hdrQuantilesOracleSql,
+    Gate("txt_len_quantiles", txtLenQuantiles, hdrQuantilesOracleSql),
     // SQL-surface z_value must agree with the Column-API layout
-    "ext_sql_zorder" -> zorderOracleSql,
+    Gate("ext_sql_zorder", extSqlZorder, zorderOracleSql),
     // ordinal-preserving tokenize-to-ids replay
-    "txt_bpe_encode" -> bpeEncodeOracle,
-    "txt_unigram_encode" -> unigramEncodeOracle(),
-    "txt_unigram" -> unigramTrainOracle(),
+    Gate("txt_bpe_encode", txtBpeEncode, bpeEncodeOracle),
+    Gate("txt_unigram_encode", txtUnigramEncode, unigramEncodeOracle()),
+    Gate("txt_unigram", txtUnigramTrain, unigramTrainOracle()),
     // banding-free truth: ALL corpus x eval shingle-Jaccard >= 0.6
     // pairs by direct replay (incl. self-pairs at 1.0) — the engine's
     // LSH candidates + exact verify must reproduce this set exactly
-    "txt_decontam_fuzzy" ->
+    Gate("txt_decontam_fuzzy", txtDecontamFuzzy,
       """WITH toks AS (SELECT doc_id,
         |    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
         |      x -> len(x) > 0) AS t
@@ -5503,11 +5235,11 @@ FROM enc JOIN ids USING (subword)"""
         |FROM inter JOIN sizes x ON inter.doc_id = x.doc_id
         |  JOIN sizes y ON inter.eval_id = y.doc_id
         |WHERE CAST(n_common AS DOUBLE) / CAST(x.n + y.n - n_common AS DOUBLE)
-        |  >= 0.6""".stripMargin,
+        |  >= 0.6""".stripMargin),
     // hybrid RRF replay: the txt_bm25 oracle body (lex list) + the
     // emb_cosine_topk oracle body at the %250 query slice (dense list)
     // + nano-unit reciprocal-rank sums and the fused ranking
-    "txt_hybrid" ->
+    Gate("txt_hybrid", txtHybrid,
       """WITH d AS (SELECT doc_id,
         |    list_filter(string_split_regex(lower(COALESCE(text, '')),
         |      '[^a-z0-9]+'), x -> len(x) > 0) AS toks
@@ -5558,11 +5290,11 @@ FROM enc JOIN ids USING (subword)"""
         |  CAST(rn AS BIGINT) AS rank FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
         |    ORDER BY rrf_score DESC, doc_id) AS rn FROM fused) z
-        |WHERE rn <= 10""".stripMargin,
+        |WHERE rn <= 10""".stripMargin),
     // CMS replay: per-row md5 cell hashing, cell counts, min-estimate,
     // exact probe-term counts (salt 'graft-cms-<row>' matches
     // Cms.cells; width 2048 matches the engine call)
-    "txt_cms" ->
+    Gate("txt_cms", txtCms,
       """WITH d AS (SELECT doc_id,
         |    list_filter(string_split_regex(lower(COALESCE(text, '')),
         |      '[^a-z0-9]+'), x -> len(x) > 0) AS l
@@ -5585,10 +5317,10 @@ FROM enc JOIN ids USING (subword)"""
         |tr AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS n_true
         |  FROM tok WHERE term IN (SELECT term FROM probes) GROUP BY 1)
         |SELECT est.term, est.est, COALESCE(tr.n_true, 0) AS n_true
-        |FROM est LEFT JOIN tr USING (term)""".stripMargin,
+        |FROM est LEFT JOIN tr USING (term)""".stripMargin),
     // hand-derived expected rows from the same literal texts the query
     // plants (char counts + md5 recomputed by DuckDB from the literals)
-    "io_warc" ->
+    Gate("io_warc", ioWarc,
       """SELECT file, record_index, target_uri, warc_date,
         |  CAST(length(t) AS BIGINT) AS n_chars, md5(t) AS text_md5
         |FROM (VALUES
@@ -5600,10 +5332,10 @@ FROM enc JOIN ids USING (subword)"""
         |   ''),
         |  ('fix.wet.gz', 1, 'http://e.example/zipped', '2026-01-02T00:00:01Z',
         |   'gzip member text'))
-        |  v(file, record_index, target_uri, warc_date, t)""".stripMargin,
+        |  v(file, record_index, target_uri, warc_date, t)""".stripMargin),
     // full BM25 replay: postings, document frequencies, the quantized
     // micro-idf / nano-tfn arithmetic (identical literals and operand
-    "txt_phrase" ->
+    Gate("txt_phrase", txtPhrase,
       """WITH t AS (SELECT doc_id, text
         |    || CASE WHEN doc_id % 5 = 0 THEN ' alpha beta gamma' ELSE '' END
         |    || CASE WHEN doc_id % 7 = 0 THEN ' alpha beta delta' ELSE '' END
@@ -5622,9 +5354,9 @@ FROM enc JOIN ids USING (subword)"""
         |  AND b.term = 'beta'
         |JOIN p c ON c.doc_id = a.doc_id AND c.pos = a.pos + 2
         |  AND c.term = 'gamma'
-        |WHERE a.term = 'alpha'""".stripMargin,
+        |WHERE a.term = 'alpha'""".stripMargin),
     // order as Bm25.scala), exact integer score sum, ranking
-    "txt_bm25" ->
+    Gate("txt_bm25", txtBm25,
       """WITH d AS (SELECT doc_id,
         |    list_filter(string_split_regex(lower(COALESCE(text, '')),
         |      '[^a-z0-9]+'), x -> len(x) > 0) AS toks
@@ -5655,12 +5387,12 @@ FROM enc JOIN ids USING (subword)"""
         |SELECT query_id, doc_id, CAST(rn AS BIGINT) AS rank, score FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
         |    ORDER BY score DESC, doc_id) AS rn FROM sc) z
-        |WHERE rn <= 10""".stripMargin,
+        |WHERE rn <= 10""".stripMargin),
     // exact count/moment columns only, every SUM cast to BIGINT (see
     // the diag_key_skew2 comment: DuckDB HUGEINT -> pandas float64 was
     // the perpetual hash mismatch). The HLL tolerance booleans moved to
     // the separate txt_profile_tol gate below.
-    "txt_profile_incr2" ->
+    Gate("txt_profile_incr2", txtProfileIncr,
       """SELECT source AS stratum, CAST(COUNT(*) AS BIGINT) AS n_docs,
         |  CAST(SUM(CAST(strlen(COALESCE(text, '')) AS BIGINT))
         |    AS BIGINT) AS n_chars,
@@ -5671,13 +5403,13 @@ FROM enc JOIN ids USING (subword)"""
         |        CAST(len(list_filter(string_split_regex(lower(COALESCE(text, '')),
         |          '[^a-z0-9]+'), x -> len(x) > 0)) AS BIGINT) AS nt
         |      FROM documents)
-        |GROUP BY source""".stripMargin,
+        |GROUP BY source""".stripMargin),
     // tolerance link: the engine emits incremental-vs-one-shot within
     // 5% (or +-5); the oracle requires the one-shot aux estimate within
     // the same envelope of DuckDB's EXACT distinct counts — both must
     // come out true, so exact-truth ~ one-shot ~ incremental is held at
     // every link (booleans hash portably; chk_invariants proves it)
-    "txt_profile_tol" ->
+    Gate("txt_profile_tol", txtProfileTol,
       """WITH tru AS (
         |  SELECT source AS stratum,
         |         COUNT(DISTINCT t.tok) AS vx
@@ -5696,8 +5428,8 @@ FROM enc JOIN ids USING (subword)"""
         |         <= GREATEST(5.0, 0.05 * tru.vx) AS vocab_ok,
         |       abs(CAST(aux.docs_est AS DOUBLE) - trd.dx)
         |         <= GREATEST(5.0, 0.05 * trd.dx) AS docs_ok
-        |FROM aux JOIN tru USING (stratum) JOIN trd USING (stratum)""".stripMargin,
-    "vis_plot" ->
+        |FROM aux JOIN tru USING (stratum) JOIN trd USING (stratum)""".stripMargin),
+    Gate("vis_plot", visPlot,
       s"""WITH $iv3Sql,
          |ev AS (SELECT chrom, start AS pos, 1 AS d FROM iv3
          |  UNION ALL SELECT chrom, "end", -1 FROM iv3),
@@ -5714,5 +5446,5 @@ FROM enc JOIN ids USING (subword)"""
          |SELECT c.chrom, c.n_rects, md.max_depth AS n_levels, c.sum_w,
          |  -0.3 AS min_y, '135,206,235' AS face_rgb,
          |  '105,105,105' AS edge_rgb
-         |FROM c JOIN md ON c.chrom = md.chrom""".stripMargin)
+         |FROM c JOIN md ON c.chrom = md.chrom""".stripMargin))
 }

@@ -3,7 +3,7 @@ import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{FutureTask, TimeUnit, TimeoutException}
 
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each SparkEntry gate's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
   * Storm-proofing contract (VERDICT r13 #1 — CORRECTNESS_r13.json arrived
@@ -295,10 +295,12 @@ object Verify {
         flushManifests()
       }
     }
-    // full runs dump every aux; a subset run dumps an aux only if its
-    // name is listed too (e.g. `Verify sf out emb_semdedup,semdedup_assign`)
+    // full runs dump every aux; a subset run dumps the aux its kept
+    // gates' oracles read, plus any aux listed by name
+    val auxRead = SparkEntry.gates.filter(g => keep(g.name))
+      .flatMap(g => SparkEntry.auxReads(g.oracle)).toSet
     SparkEntry.auxDumps.foreach { case (name, fn) =>
-      if (!keep(name)) ()
+      if (!keep(name) && !auxRead(name)) ()
       else if (totalBudget > 0 && elapsed() > totalBudget) {
         // record WHY the {AUX_DIR} input is missing: hash-based oracles
         // of already-completed queries read these dumps, and without a

@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.core.ColSpec
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Bucketed bin-index layout: amortize the interval-join shuffle across
   * queries.
@@ -41,9 +40,7 @@ object BucketedJoin {
     * length 1 first, so a point lands in exactly one bin. */
   def binIndex(df: DataFrame, c: ColSpec = ColSpec.default,
                binSize: Long = IntervalJoin.DefaultBinSize): DataFrame =
-    df.withColumn(BinCol, explode(sequence(
-      IntervalJoin.fdiv(c.startCol, binSize),
-      IntervalJoin.fdiv(c.promotedEnd - 1, binSize))))
+    IntervalJoin.explodeBins(df, c, binSize, BinCol)
 
   /** Materialize `df`'s bin index as a bucketed + sorted external table
     * at `path`, registered as `table` in the session catalog. Both sides
@@ -79,14 +76,7 @@ object BucketedJoin {
                         c1: ColSpec, c2: ColSpec,
                         leftBin: String = BinCol, rightBin: String,
                         binSize: Long = IntervalJoin.DefaultBinSize,
-                        on: Seq[(String, String)] = Nil): DataFrame = {
-    val cond = (c1.chromCol === c2.chromCol) &&
-      on.map { case (a, b) => col(a) === col(b) }
-        .foldLeft(col(leftBin) === col(rightBin))(_ && _)
-    left.join(right.hint("SHUFFLE_HASH"), cond, "inner")
-      .filter(IntervalJoin.overlapPredicate(c1, c2))
-      .filter(col(leftBin) === IntervalJoin.fdiv(
-        greatest(c1.startCol, c2.startCol), binSize))
-      .drop(leftBin, rightBin)
-  }
+                        on: Seq[(String, String)] = Nil): DataFrame =
+    IntervalJoin.binnedPairs(left, right, c1, c2, on, leftBin, rightBin,
+      binSize)
 }

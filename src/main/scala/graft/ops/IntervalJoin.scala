@@ -109,6 +109,38 @@ object IntervalJoin {
   def overlapPredicate(c1: ColSpec, c2: ColSpec): Column =
     c1.startCol < c2.promotedEnd && c2.startCol < c1.promotedEnd
 
+  /** `df` with one row per (interval, spanned genome bin of width `w`),
+    * the bin in column `bin`. Points are promoted to length 1 first, so
+    * a point lands in exactly one bin. */
+  private[ops] def explodeBins(df: DataFrame, c: ColSpec, w: Long,
+                               bin: String): DataFrame =
+    df.withColumn(bin, explode(sequence(fdiv(c.startCol, w),
+                                        fdiv(c.promotedEnd - 1, w))))
+
+  /** Overlap pairs of two bin-exploded relations (bins of width `w` in
+    * `lBin`/`rBin`): equi-join on `(chrom, on..., bin)`, re-check the
+    * overlap, and emit each pair only from the bin holding the overlap's
+    * start — dedup without a distinct() shuffle.
+    *
+    * The right side builds a per-partition hash map instead of
+    * sort-merge: with heavily duplicated (chrom, bin) keys SMJ
+    * degenerates into a buffered nested loop (measured 20x slower at
+    * 112M output pairs). SHJ streams the probe side; the build side is
+    * one bin-partition of the right relation. */
+  private[ops] def binnedPairs(lb: DataFrame, rb: DataFrame,
+                               c1: ColSpec, c2: ColSpec,
+                               on: Seq[(String, String)],
+                               lBin: String, rBin: String,
+                               w: Long): DataFrame = {
+    val cond = (c1.chromCol === c2.chromCol) &&
+      on.map { case (a, b) => col(a) === col(b) }
+        .foldLeft(col(lBin) === col(rBin))(_ && _)
+    lb.join(rb.hint("SHUFFLE_HASH"), cond, "inner")
+      .filter(overlapPredicate(c1, c2))
+      .filter(col(lBin) === fdiv(greatest(c1.startCol, c2.startCol), w))
+      .drop(lBin, rBin)
+  }
+
   /** [[Auto]] resolution from plan statistics (public so tests can assert
     * the choice without running the join):
     *  - tiny right side -> [[BroadcastRight]]. Broadcast is only right for
@@ -173,6 +205,9 @@ object IntervalJoin {
       case Auto => resolveAutoPlan(left, right, c1, c2, binSize)
       case s => (s, binSize * 64)
     }
+    def binned(l: DataFrame, r: DataFrame, w: Long) =
+      binnedPairs(explodeBins(l, c1, w, "__bin"),
+        explodeBins(r, c2, w, "__bin2"), c1, c2, on, "__bin", "__bin2", w)
     resolved match {
       case BroadcastRight | Auto =>
         val cond = (c1.chromCol === c2.chromCol) &&
@@ -180,57 +215,18 @@ object IntervalJoin {
             .foldLeft(overlapPredicate(c1, c2))(_ && _)
         left.join(broadcast(right), cond, "inner")
       case BinnedTwoLevel =>
-        val coarse = autoCoarse
         val longCap = binSize * 8
         def isLong(c: ColSpec) = (c.promotedEnd - c.startCol) > lit(longCap)
-        def bins(c: ColSpec, w: Long) =
-          sequence(fdiv(c.startCol, w), fdiv(c.promotedEnd - 1, w))
-        def cond0 = (c1.chromCol === c2.chromCol) &&
-          on.map { case (a, b) => col(a) === col(b) }
-            .foldLeft(col("__bin") === col("__bin2"))(_ && _)
-        def classJoin(lSide: DataFrame, rSide: DataFrame, w: Long) =
-          lSide.withColumn("__bin", explode(bins(c1, w)))
-            .join(rSide.withColumn("__bin2", explode(bins(c2, w)))
-              .hint("SHUFFLE_HASH"), cond0, "inner")
-            .filter(overlapPredicate(c1, c2))
-            // emit each pair only from this level's bin holding the
-            // overlap's start — dedup without a distinct() shuffle
-            .filter(col("__bin") ===
-              fdiv(greatest(c1.startCol, c2.startCol), w))
-            .drop("__bin", "__bin2")
         val lShort = left.filter(!isLong(c1))
         val lLong = left.filter(isLong(c1))
         val rShort = right.filter(!isLong(c2))
         val rLong = right.filter(isLong(c2))
         // three class-disjoint joins: short x short fine, long x all and
         // short x long coarse (shorts span <= coarse width -> <= 2 bins)
-        classJoin(lShort, rShort, binSize)
-          .unionByName(classJoin(lLong, right, coarse))
-          .unionByName(classJoin(lShort, rLong, coarse))
-      case Binned =>
-        val lb = left.withColumn(
-          "__bin",
-          explode(sequence(fdiv(c1.startCol, binSize),
-                           fdiv(c1.promotedEnd - 1, binSize))))
-        // Build a hash map of the (smaller) right side per partition
-        // instead of sort-merge: with heavily duplicated (chrom, bin) keys
-        // SMJ degenerates into a buffered nested loop (measured 20x slower
-        // at 112M output pairs). SHJ streams the probe side; the build
-        // side is one bin-partition of the smaller relation.
-        val rb = right.withColumn(
-          "__bin2",
-          explode(sequence(fdiv(c2.startCol, binSize),
-                           fdiv(c2.promotedEnd - 1, binSize))))
-          .hint("SHUFFLE_HASH")
-        val cond = (c1.chromCol === c2.chromCol) &&
-          on.map { case (a, b) => col(a) === col(b) }
-            .foldLeft(col("__bin") === col("__bin2"))(_ && _)
-        lb.join(rb, cond, "inner")
-          .filter(overlapPredicate(c1, c2))
-          // emit each pair only from the bin holding the overlap's start —
-          // dedup without a distinct() shuffle
-          .filter(col("__bin") === fdiv(greatest(c1.startCol, c2.startCol), binSize))
-          .drop("__bin", "__bin2")
+        binned(lShort, rShort, binSize)
+          .unionByName(binned(lLong, right, autoCoarse))
+          .unionByName(binned(lShort, rLong, autoCoarse))
+      case Binned => binned(left, right, binSize)
     }
   }
 }

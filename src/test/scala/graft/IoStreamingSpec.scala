@@ -723,6 +723,36 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("evt_ingest_e2e counts a null source and a literal \"__null\" " +
+    "source as two strata") {
+    // a documents twin of sf0.001 with both kinds of source; the gate's
+    // first batch (doc_id % 3 == 0) is admitted whole, so both strata
+    // reach the length histogram
+    val real = "/root/testdata/sf0.001"
+    assume(new java.io.File(s"$real/documents.parquet").exists())
+    val dir = java.nio.file.Files.createTempDirectory("graft_nullsrc").toString
+    spark.read.parquet(s"$real/documents.parquet")
+      .withColumn("source",
+        when(col("doc_id") % 12 === 0, lit(null).cast("string"))
+          .when(col("doc_id") % 12 === 6, lit("__null"))
+          .otherwise(col("source")))
+      .write.parquet(s"$dir/documents.parquet")
+    // the admitted set as the oracle derives it: rows whose text arrives
+    // in no earlier batch (the re-keyed replays only repeat earlier texts)
+    val d = spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("source"), col("text"), (col("doc_id") % 3).as("b"))
+    val earlier = d.select(col("text").as("__t"), col("b").as("__b"))
+    val adm = d.join(earlier,
+      col("text") === col("__t") && col("__b") < col("b"), "left_anti")
+    assert(adm.filter(col("source").isNull).count() > 0)
+    assert(adm.filter(col("source") === "__null").count() > 0)
+    val got = SparkEntry.queries("evt_ingest_e2e")(spark, dir).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got("hist_strata") == adm.select("source").distinct().count())
+    assert(got("hist_docs") == got("admitted_total"))
+    assert(got("profile_docs") == got("admitted_total"))
+  }
+
   test("windowed event counts run in batch mode over the events table") {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet("/root/testdata/sf0.001/events.parquet")

@@ -5,10 +5,11 @@ comma-separated query list, then the driver-style DuckDB compare
 
 Usage: python3 tools/check_subset.py <sfdir> <outdir> q1,q2[,aux,...]
 
-Compares only queries that have an oracle entry; aux-only names (listed
-so Verify dumps signatures for {AUX_DIR} oracles) are not compared, but
-their dump's row count and row hash are printed, so two builds' aux
-dumps can be diffed. Exit 0 = every compared query hash-matches.
+Compares only queries that have an oracle entry. Verify dumps the aux
+relations the listed queries' {AUX_DIR} oracles read by itself; an aux
+name listed too is not compared, but its dump's row count and row hash
+are printed, so two builds' aux dumps can be diffed. Exit 0 = every
+compared query hash-matches.
 
 The JVM heap and Spark's core count are sized like the tier-1 test
 command: half of MemTotal clamped to 2-8 GB, and `nproc` cores.
