@@ -993,7 +993,7 @@ object SparkEntry {
             pairsReplayDrift += ((prev diff got) ++ (got diff prev)).size.toLong)
           pairsSeen(bid) = got
         },
-        n = 3, numHashes = 48, bands = 16, threshold = 0.5, numBuckets = 8,
+        n = 3, numHashes = 48, bands = 16, threshold = 0.5,
         bloomIndexPath = bloom,
         onExactDups = (dd, bid) => { dupCounts(bid) = dd.count(); () },
         bloomExpectedItems = 1000000L, bloomBuckets = 8,
@@ -1943,8 +1943,7 @@ object SparkEntry {
     val ivfTable = uniqueTable("graft_ivfidx")
     Ann.writeIvfIndex(emb.filter(col("vec_id") % 3 =!= 0), cents,
       ivfTable, scratchFile("ivfidx"), numBuckets = 8)
-    Ann.appendIvfIndex(emb.filter(col("vec_id") % 3 === 0), cents,
-      ivfTable, numBuckets = 8)
+    Ann.appendIvfIndex(emb.filter(col("vec_id") % 3 === 0), cents, ivfTable)
     Ann.ivfTopKIndexed(s, emb.filter(col("vec_id") % 100 === 0), cents,
         ivfTable, k = 5, nProbe = 2,
         rerankWith = Some(emb), rerankDepth = 20)

@@ -1,5 +1,6 @@
 package graft.ann
 
+import graft.core.BucketedIndex
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,6 +18,12 @@ import org.apache.spark.sql.functions._
   * fold forms they replaced). The folds never entered whole-stage codegen
   * and were the measured 10-30x variance class at sf0.1; the kernels keep
   * the scan inside one codegen span with a tight JIT'd loop per row.
+  *
+  * The IVF and PQ-IVF indexes persist as [[graft.core.BucketedIndex]]
+  * tables bucketed on `centroid_id`: [[writeIvfIndex]] and
+  * [[writePqIvfIndex]] create them, [[appendIvfIndex]] appends under
+  * the table's own bucket spec, and `BucketedIndex.compact` rewrites an
+  * append-grown index to one file per bucket.
   */
 object Ann {
   import org.apache.spark.sql.graftbridge.Bridge.{column => colOf, expression => exprOf}
@@ -361,8 +368,8 @@ object Ann {
       col(idCol).as("vec_id"), col("qvec"), col("qscale"))
 
   /** Create a persisted quantized IVF index: inverted lists bucketed by
-    * `centroid_id` so probes scan hash-clustered list files without ever
-    * reshuffling the corpus. The int8 payload makes the index ~4x
+    * `centroid_id` ([[graft.core.BucketedIndex]]) so probes scan
+    * hash-clustered list files without ever reshuffling the corpus. The int8 payload makes the index ~4x
     * smaller than the float corpus; exact scores come from a
     * candidates-only rerank against the original vectors
     * ([[ivfTopKIndexed]]). Centroids must be FROZEN for the index's
@@ -375,58 +382,18 @@ object Ann {
   def writeIvfIndex(df: DataFrame, cents: Array[(Int, Array[Double])],
                     table: String, path: String, numBuckets: Int = 32,
                     idCol: String = "vec_id",
-                    vecCol: String = "embedding"): Unit = {
-    val s = df.sparkSession
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    ivfIndexRel(df, cents, idCol, vecCol)
-      .write.mode("overwrite").option("path", path)
-      .bucketBy(numBuckets, "centroid_id").sortBy("centroid_id")
-      .format("parquet").saveAsTable(table)
-  }
+                    vecCol: String = "embedding"): Unit =
+    BucketedIndex.create(ivfIndexRel(df, cents, idCol, vecCol), table, path,
+      numBuckets, "centroid_id")
 
-  /** Append an ingest batch to a quantized IVF index (same centroids and
-    * bucket spec as the create call). Cost is one pass over the BATCH;
-    * the existing lists are untouched. */
+  /** Append an ingest batch to a quantized IVF index (same centroids as
+    * the create call; the bucket spec is the table's own). Cost is one
+    * pass over the BATCH; the existing lists are untouched. An index
+    * grown by appends is compacted with `BucketedIndex.compact`. */
   def appendIvfIndex(df: DataFrame, cents: Array[(Int, Array[Double])],
-                     table: String, numBuckets: Int = 32,
-                     idCol: String = "vec_id",
+                     table: String, idCol: String = "vec_id",
                      vecCol: String = "embedding"): Unit =
-    ivfIndexRel(df, cents, idCol, vecCol)
-      .write.mode("append")
-      .bucketBy(numBuckets, "centroid_id").sortBy("centroid_id")
-      .format("parquet").saveAsTable(table)
-
-  /** Compact an append-grown IVF index to one file per bucket — same
-    * crash-safe shape as `Dedup.compactMinhashIndex`: write to a fresh
-    * path, swap the catalog entry by rename, best-effort delete the old
-    * location (the live index stays readable until the swap). */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                      table: String, newPath: String,
-                      numBuckets: Int = 32): Unit = {
-    import org.apache.spark.sql.catalyst.TableIdentifier
-    val oldLoc = spark.sessionState.catalog
-      .getTableMetadata(TableIdentifier(table)).location
-    require(new java.net.URI(newPath).getPath != oldLoc.getPath,
-      s"newPath must differ from the current index location $oldLoc")
-    val tmpTable = table + "__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
-    // plain file read, not the bucketed table: see compactMinhashIndex —
-    // the advertised bucket partitioning would elide the repartition
-    // while the actual read partitions are not bucket-aligned
-    spark.read.parquet(oldLoc.toString)
-      .repartition(numBuckets, col("centroid_id"))
-      .write.mode("overwrite").option("path", newPath)
-      .bucketBy(numBuckets, "centroid_id").sortBy("centroid_id")
-      .format("parquet").saveAsTable(tmpTable)
-    spark.sql(s"DROP TABLE $table")
-    spark.sql(s"ALTER TABLE $tmpTable RENAME TO $table")
-    try {
-      val fs = org.apache.hadoop.fs.FileSystem.get(oldLoc,
-        spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(oldLoc), true)
-      ()
-    } catch { case _: Exception => () }
-  }
+    BucketedIndex.append(ivfIndexRel(df, cents, idCol, vecCol), table)
 
   /** Top-k against a persisted quantized IVF index: broadcast the
     * queries' probe lists and quantized forms, scan only the probed
@@ -905,27 +872,22 @@ object Ann {
       .select(col("vec_id"), nearestId(col("__v"), cents).as("centroid_id"),
         pqCodes(col("__v"), books))
 
-  /** Persist an IVF-addressed PQ code relation as a bucketed table
-    * (external at `path`), bucketed+sorted by `centroid_id` — the
-    * at-rest layout [[pqIvfTopK]]'s scaladoc prescribes: a probe's
-    * broadcast-join against the probe list then prunes hash-clustered
-    * list files instead of rescanning a fresh encode, and the
-    * (construction-heavy) Lloyd + encode cost is paid once per corpus,
-    * not per query. Same posture as [[writeIvfIndex]]; append batches
-    * with mode("append") on the same table like [[appendIvfIndex]]. */
+  /** Persist an IVF-addressed PQ code relation as a
+    * [[graft.core.BucketedIndex]] (external at `path`), bucketed+sorted
+    * by `centroid_id` — the at-rest layout [[pqIvfTopK]]'s scaladoc
+    * prescribes: a probe's broadcast-join against the probe list then
+    * prunes hash-clustered list files instead of rescanning a fresh
+    * encode, and the (construction-heavy) Lloyd + encode cost is paid
+    * once per corpus, not per query. Same posture as [[writeIvfIndex]];
+    * append a batch's [[pqIvfEncode]] with `BucketedIndex.append`. */
   def writePqIvfIndex(corpus: DataFrame,
                       books: Array[(Int, Int, Array[Double])],
                       cents: Array[(Int, Array[Double])],
                       table: String, path: String, numBuckets: Int = 32,
                       idCol: String = "vec_id",
-                      vecCol: String = "embedding"): Unit = {
-    val s = corpus.sparkSession
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    pqIvfEncode(corpus, books, cents, idCol, vecCol)
-      .write.mode("overwrite").option("path", path)
-      .bucketBy(numBuckets, "centroid_id").sortBy("centroid_id")
-      .format("parquet").saveAsTable(table)
-  }
+                      vecCol: String = "embedding"): Unit =
+    BucketedIndex.create(pqIvfEncode(corpus, books, cents, idCol, vecCol),
+      table, path, numBuckets, "centroid_id")
 
   /** IVF-shortlisted ADC top-k — the composition that retires the
     * exhaustive [[pqAdcTopK]] scan at corpus scale: candidates come

@@ -222,7 +222,7 @@ object Bloom {
     * stays intact and readable until the swap, and a failure at any
     * point leaves either the old or the new index at `path` (plus at
     * worst a leftover sibling that the next run reaps). Mirrors
-    * [[Dedup.compactMinhashIndex]]'s fresh-path + rename-swap +
+    * `graft.core.BucketedIndex.compact`'s fresh-path + rename-swap +
     * best-effort-delete shape. Bucket blobs are dimension-sized by
     * construction, so the merge runs where [[probeNew]] already does
     * that work — on the driver. */

@@ -1,8 +1,8 @@
 package graft.dedup
 
-import graft.core.Par
+import graft.core.{BucketedIndex, Par}
 import graft.text.TextOps
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,6 +17,12 @@ import org.apache.spark.sql.functions._
   *  - SimHash: 64-bit signature, banded (4 x 16-bit) join for
   *    Hamming-distance <= 3 candidates;
   *  - embedding cosine: random-hyperplane LSH buckets + exact verify.
+  *
+  * Incremental MinHash keeps the corpus's banded keys as a persisted
+  * [[graft.core.BucketedIndex]] on `(band, band-hash)`:
+  * [[writeMinhashIndex]] creates it, [[appendMinhashIndex]] appends a
+  * batch under the table's own bucket spec, [[incrementalMinhashPairs]]
+  * probes it, and `BucketedIndex.compact` re-bounds its file count.
   */
 object Dedup {
 
@@ -170,36 +176,13 @@ object Dedup {
       .filter(col("n_docs") > maxShingleDf)
       .orderBy(col("n_docs").desc)
 
-  /** MinHash signature column: array of `numHashes` minimums of affine
-    * permutations of the shingle hash (xxhash64). Deterministic: the
-    * permutation constants derive from the hash index.
-    *
-    * @deprecated the higher-order fold evaluates through the expression
-    * interpreter (never codegen) — the measured 10-30x variance class.
-    * Use [[minhashSigRel]] (identical values, codegen'd aggregation). */
-  @deprecated("interpreted fold; use minhashSigRel", "r6")
-  def minhashSignature(shingles: Column, numHashes: Int): Column = {
-    // 31-bit modulus keeps h*a + b comfortably inside a long (ANSI-safe).
-    // Single fold producing the whole signature array: one aggregate()
-    // hashes each shingle once and updates all minima via zip_with —
-    // N separate aggregate() expressions would each re-hash every shingle
-    // after CollapseProject inlining (observed ~50x slowdown).
-    val p = 2147483647L // 2^31-1
-    val b = 506952122L  // golden-ratio constant mod p
-    val hashes = transform(shingles, s => pmod(xxhash64(s), lit(p)))
-    val init = array_repeat(lit(Long.MaxValue), numHashes)
-    aggregate(hashes, init, (acc, h) =>
-      zip_with(acc, sequence(lit(0L), lit(numHashes - 1L)), (m, i) =>
-        least(m, pmod(h * (i * 2 + 1) + lit(b) * (i + 1), lit(p)))))
-  }
-
   /** MinHash signatures for every document as ONE codegen'd aggregation:
     * explode shingles (via [[shingleRel]]), hash each once, take
     * `numHashes` `min` aggregates of affine permutations of the hash, and
-    * repack the signature array. Identical values to [[minhashSignature]]
-    * (same constants), but the hot loop is whole-stage-codegen'd and
-    * map-side combinable — the array-fold form evaluates through the
-    * expression interpreter (higher-order functions never codegen), and
+    * repack the signature array. The hot loop is whole-stage-codegen'd
+    * and map-side combinable — an array-fold form (one `aggregate` over
+    * the shingle hashes) would evaluate through the expression
+    * interpreter (higher-order functions never codegen), and
     * interpreter-bound stages proved hostage to JIT deoptimization
     * weather: the same 32-task signature stage measured 3.7s or 46s
     * run-to-run at sf0.1. Docs with no shingles produce no row (they can
@@ -310,89 +293,40 @@ object Dedup {
       .select("id_1", "id_2", "jaccard")
   }
 
-  /** Persist the banded LSH index of a corpus as a bucketed, sorted
-    * table keyed by `(band, band-hash)` — the corpus side of INCREMENTAL
-    * dedup. Written once per corpus build; every later ingest batch
-    * probes it via [[incrementalMinhashPairs]] with the corpus side
-    * read hash-clustered straight off the bucketed scan (no corpus
-    * shuffle, ever again). The index stores only `(id, band, hash)` —
-    * ~tens of bytes/doc — never text or shingles. */
+  /** Persist the banded LSH index of a corpus as a
+    * [[graft.core.BucketedIndex]] keyed by `(band, band-hash)` — the
+    * corpus side of INCREMENTAL dedup. Written once per corpus build;
+    * every later ingest batch probes it via [[incrementalMinhashPairs]]
+    * with the corpus side read hash-clustered straight off the bucketed
+    * scan (no corpus shuffle, ever again). The index stores only
+    * `(id, band, hash)` — ~tens of bytes/doc — never text or shingles.
+    * An index grown by appends is compacted with
+    * `BucketedIndex.compact`. */
   def writeMinhashIndex(df: DataFrame, idCol: String, textCol: String,
                         table: String, path: String,
                         n: Int = 3, numHashes: Int = 48, bands: Int = 16,
-                        numBuckets: Int = 32): Unit = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val s = df.sparkSession
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    bandedRel(minhashSigRel(df, idCol, textCol, n, numHashes),
-        bands, numHashes / bands)
-      .write.mode("overwrite").option("path", path)
-      .bucketBy(numBuckets, "__band", "__bh")
-      .sortBy("__band", "__bh")
-      .format("parquet")
-      .saveAsTable(table)
-  }
+                        numBuckets: Int = 32): Unit =
+    BucketedIndex.create(bandedKeys(df, idCol, textCol, n, numHashes, bands),
+      table, path, numBuckets, "__band", "__bh")
 
   /** Append an ingest batch's banded keys to an existing minhash index
     * ([[writeMinhashIndex]] created it) — the post-probe half of the
     * ingest loop: probe first, then append, so the NEXT batch dedups
-    * against this one. Bucket spec must match the create call. */
+    * against this one. The bucket spec is the table's own; `n`,
+    * `numHashes` and `bands` must match the create call. */
   def appendMinhashIndex(df: DataFrame, idCol: String, textCol: String,
                          table: String, n: Int = 3, numHashes: Int = 48,
-                         bands: Int = 16, numBuckets: Int = 32): Unit = {
+                         bands: Int = 16): Unit =
+    BucketedIndex.append(bandedKeys(df, idCol, textCol, n, numHashes, bands),
+      table)
+
+  /** The banded LSH keys `(__id, __band, __bh)` of `df`'s documents:
+    * the rows of a minhash index, and the probe side of a batch. */
+  private def bandedKeys(df: DataFrame, idCol: String, textCol: String,
+                         n: Int, numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     bandedRel(minhashSigRel(df, idCol, textCol, n, numHashes),
-        bands, numHashes / bands)
-      .write.mode("append")
-      .bucketBy(numBuckets, "__band", "__bh")
-      .sortBy("__band", "__bh")
-      .format("parquet")
-      .saveAsTable(table)
-  }
-
-  /** Compact a minhash index grown by repeated [[appendMinhashIndex]]:
-    * every append adds one file per (task, bucket), so a long-running
-    * ingest stream accumulates unbounded small files per bucket and the
-    * probe's hash-clustered scan degrades to many tiny reads. This
-    * rewrites the table once — repartitioned onto the bucket columns
-    * with `numBuckets` partitions, whose `pmod(hash, n)` routing is
-    * exactly the bucket-id function, so the rewrite lands ONE file per
-    * bucket — at `newPath` (must differ from the current location; the
-    * live files cannot be overwritten while being read), then swaps the
-    * catalog entry atomically via rename and best-effort deletes the old
-    * location. Probe results are unchanged (same rows, same bucket
-    * spec); run it from the ingest maintenance cadence, not per batch. */
-  def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-                          table: String, newPath: String,
-                          numBuckets: Int = 32): Unit = {
-    import org.apache.spark.sql.catalyst.TableIdentifier
-    val oldLoc = spark.sessionState.catalog
-      .getTableMetadata(TableIdentifier(table)).location
-    require(new java.net.URI(newPath).getPath != oldLoc.getPath,
-      s"newPath must differ from the current index location $oldLoc")
-    val tmpTable = table + "__compacting"
-    spark.sql(s"DROP TABLE IF EXISTS $tmpTable")
-    // read the FILES, not the table: a bucketed scan advertises the
-    // bucket HashPartitioning, which elides the repartition below while
-    // the actual multi-file read partitions are NOT bucket-aligned —
-    // each write task would then emit one file per bucket it happens to
-    // hold (observed 15 files for 4 buckets). A plain parquet scan makes
-    // the bucket-id-aligned shuffle real.
-    spark.read.parquet(oldLoc.toString)
-      .repartition(numBuckets, col("__band"), col("__bh"))
-      .write.mode("overwrite").option("path", newPath)
-      .bucketBy(numBuckets, "__band", "__bh")
-      .sortBy("__band", "__bh")
-      .format("parquet")
-      .saveAsTable(tmpTable)
-    spark.sql(s"DROP TABLE $table")
-    spark.sql(s"ALTER TABLE $tmpTable RENAME TO $table")
-    try {
-      val fs = org.apache.hadoop.fs.FileSystem.get(oldLoc,
-        spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(oldLoc), true)
-      ()
-    } catch { case _: Exception => () } // storage lifecycle can reap it
+      bands, numHashes / bands)
   }
 
   /** Near-dup pairs of an ingest BATCH against an indexed corpus, plus
@@ -436,8 +370,6 @@ object Dedup {
       n: Int = 3, numHashes: Int = 48,
       bands: Int = 16,
       threshold: Double = 0.5): (DataFrame, () => Unit) = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    val r = numHashes / bands
     val s = newDocs.sparkSession
     // The batch's banded keys are referenced three times below (corpus
     // probe + both sides of the within-batch join) and the candidate
@@ -446,8 +378,7 @@ object Dedup {
     // including the INDEX SCAN, turning "one corpus scan" into three
     // (measured 15s vs 5s on the bench gate). Both relations are
     // batch-/candidate-sized, never corpus-sized.
-    val newBanded = bandedRel(
-      minhashSigRel(newDocs, idCol, textCol, n, numHashes), bands, r)
+    val newBanded = bandedKeys(newDocs, idCol, textCol, n, numHashes, bands)
       .persist()
     val candDf = candidateRel(newBanded, s.table(indexTable))
     // localCheckpoint, not persist: a LINEAGE CUT, not just an execution
@@ -623,33 +554,12 @@ object Dedup {
     }
   }
 
-  /** 64-bit SimHash over word tokens (xxhash64 per token; per-bit majority
-    * vote), as a single higher-order expression — no UDF.
-    *
-    * @deprecated the higher-order fold evaluates through the expression
-    * interpreter (never codegen) — the measured 10-30x variance class.
-    * Use [[simhashSigRel]] (identical values, codegen'd aggregation). */
-  @deprecated("interpreted fold; use simhashSigRel", "r6")
-  def simhash64(text: Column): Column = {
-    // single fold: each token hashed once, all 64 bit-counters updated via
-    // zip_with (64 separate aggregates would re-hash every token each)
-    val th = transform(TextOps.tokens(text), t => xxhash64(t))
-    val counts = aggregate(th, array_repeat(lit(0L), 64), (acc, h) =>
-      zip_with(acc, sequence(lit(0L), lit(63L)), (c, b) =>
-        c + call_function("shiftright", h, b.cast("int"))
-          .bitwiseAND(lit(1L)) * lit(2L) - lit(1L)))
-    aggregate(
-      zip_with(counts, sequence(lit(0L), lit(63L)), (c, b) =>
-        when(c > 0, call_function("shiftleft", lit(1L), b.cast("int")))
-          .otherwise(lit(0L))),
-      lit(0L), (acc, v) => acc.bitwiseOR(v))
-  }
-
-  /** SimHash signatures as ONE codegen'd aggregation (same values as the
-    * [[simhash64]] column fold, incl. sig=0 for token-less docs): explode
-    * tokens, hash each once, take 64 per-bit `sum(+-1)` aggregates, pack
-    * the sign bits with constant shifts. Same interpreted-fold hazard as
-    * [[minhashSigRel]]. */
+  /** 64-bit SimHash signatures over word tokens (xxhash64 per token;
+    * per-bit majority vote; sig=0 for token-less docs) as ONE codegen'd
+    * aggregation: explode tokens, hash each once, take 64 per-bit
+    * `sum(+-1)` aggregates, pack the sign bits with constant shifts. An
+    * array fold over the tokens would evaluate interpreted, the hazard
+    * [[minhashSigRel]] describes. */
   private[graft] def simhashSigRel(df: DataFrame, idCol: String,
                                    textCol: String): DataFrame = {
     val sums = (0 until 64).map(b =>
@@ -660,7 +570,7 @@ object Dedup {
       .reduce(_ bitwiseOR _)
     // explode_outer keeps token-less docs as one null-token row whose
     // null hash makes every bit counter null -> every packed bit 0 ->
-    // sig 0, matching the column fold — and the input is referenced
+    // sig 0 — and the input is referenced
     // exactly once (a restore join would execute a derived input
     // pipeline twice in one plan, the double-embedding resolveComponents
     // and Closest eliminated in r5)

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.core.ColSpec
+import graft.core.{BucketedIndex, ColSpec}
 import org.apache.spark.sql.DataFrame
 
 /** Bucketed bin-index layout: amortize the interval-join shuffle across
@@ -12,7 +12,8 @@ import org.apache.spark.sql.DataFrame
   * table, every query batch, every new sample). This module materializes
   * the bin-exploded relation ONCE as a Spark bucketed table — hashed into
   * a fixed number of buckets on `(chrom, bin)` and sorted within each
-  * bucket — so that every later join between two co-bucketed tables
+  * bucket, the [[graft.core.BucketedIndex]] layout every persisted index
+  * shares — so that every later join between two co-bucketed tables
   * satisfies the join's required distribution straight off the parquet
   * scan: zero `Exchange` operators in the plan, verified by
   * `BucketedJoinSpec` against `executedPlan`.
@@ -42,28 +43,20 @@ object BucketedJoin {
                binSize: Long = IntervalJoin.DefaultBinSize): DataFrame =
     IntervalJoin.explodeBins(df, c, binSize, BinCol)
 
-  /** Materialize `df`'s bin index as a bucketed + sorted external table
-    * at `path`, registered as `table` in the session catalog. Both sides
-    * of a future join must use the SAME `numBuckets` (and `binSize`) to
-    * join exchange-free. Suffix the columns (via [[ColSpec.suffixAll]])
-    * BEFORE writing one of the two sides so the stored names are already
-    * disjoint. */
+  /** Materialize `df`'s bin index as a [[graft.core.BucketedIndex]]
+    * at `path`, registered as `table` in the session catalog, bucketed
+    * and sorted on `(chrom, bin)`. Both sides of a future join must use
+    * the SAME `numBuckets` (and `binSize`) to join exchange-free. Suffix
+    * the columns (via [[ColSpec.suffixAll]]) BEFORE writing one of the
+    * two sides so the stored names are already disjoint. */
   def writeBinIndex(df: DataFrame, table: String, path: String,
                     c: ColSpec = ColSpec.default,
                     binSize: Long = IntervalJoin.DefaultBinSize,
                     numBuckets: Int = 32,
-                    binColName: String = BinCol): Unit = {
-    val s = df.sparkSession
-    s.sql(s"DROP TABLE IF EXISTS $table")
-    binIndex(df, c, binSize)
-      .withColumnRenamed(BinCol, binColName)
-      .write.mode("overwrite")
-      .option("path", path)
-      .bucketBy(numBuckets, c.chrom, binColName)
-      .sortBy(c.chrom, binColName)
-      .format("parquet")
-      .saveAsTable(table)
-  }
+                    binColName: String = BinCol): Unit =
+    BucketedIndex.create(
+      binIndex(df, c, binSize).withColumnRenamed(BinCol, binColName),
+      table, path, numBuckets, c.chrom, binColName)
 
   /** Inner overlap pairs between two PRE-EXPLODED bin indexes with
     * disjoint column names (e.g. two tables written by [[writeBinIndex]]).

@@ -69,13 +69,22 @@ object IntervalJoin {
     if (q.length >= 2) Some((q(0), q(1))) else None
   }
 
-  /** Span-tail probe for [[Auto]]: approximate p99 interval span over a
-    * bounded prefix sample. A p99 beyond the two-level long-interval cut
-    * (8*binSize) means [[Binned]] would explode the tail onto >8 fine
-    * bins per row — the regime [[BinnedTwoLevel]] exists for. */
-  def spanTailIsHeavy(df: DataFrame, c: ColSpec, binSize: Long,
-                      maxRows: Int = 100000): Boolean =
-    spanQuantiles(df, c, maxRows).exists(_._2 > (binSize * 8).toDouble)
+  /** The "known-large heavy tail" decision shared by [[Auto]] and
+    * `Ops.coverage`: the probed span (p50, p99) of `df` when its
+    * optimizer size estimate is at least [[ProbeThresholdKey]] — but not
+    * the unknown-stats Long.MaxValue default that mapPartitions barriers
+    * report — and its p99 span exceeds the two-level long-interval cut
+    * (8*binSize), where [[Binned]] would explode the tail onto >8 fine
+    * bins per row. None otherwise; below the threshold no probe runs. */
+  private[ops] def heavySpanTail(df: DataFrame, c: ColSpec,
+                                 binSize: Long): Option[(Double, Double)] = {
+    val sz = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val threshold = BigInt(df.sparkSession.conf
+      .get(ProbeThresholdKey, DefaultProbeThresholdBytes.toString).toLong)
+    if (sz >= threshold && sz < BigInt(Long.MaxValue) / 4)
+      spanQuantiles(df, c).filter(_._2 > (binSize * 8).toDouble)
+    else None
+  }
 
   /** Coarse-bin width for the two-level join's long-class joins, sized to
     * the measured span distribution instead of the fixed 64*binSize
@@ -149,11 +158,9 @@ object IntervalJoin {
     *    cost O(|L| * |R| / nChrom), catastrophic for a non-tiny right side
     *    (observed 650s vs 15s at 600k x 150k). Hard few-thousand-row cap
     *    regardless of the session broadcast threshold.
-    *  - a KNOWN-large side (optimizer estimate above
-    *    [[ProbeThresholdKey]], but not the unknown-stats Long.MaxValue
-    *    default that mapPartitions barriers report) with a heavy span
-    *    tail ([[spanTailIsHeavy]]) -> [[BinnedTwoLevel]]: megabase-scale
-    *    intervals would explode onto many fine bins under [[Binned]].
+    *  - a KNOWN-large side with a heavy span tail ([[heavySpanTail]])
+    *    -> [[BinnedTwoLevel]]: megabase-scale intervals would explode
+    *    onto many fine bins under [[Binned]].
     *  - everything else -> [[Binned]], whose cost tracks the true pair
     *    count. */
   def resolveAuto(left: DataFrame, right: DataFrame,
@@ -172,21 +179,11 @@ object IntervalJoin {
     val legacyCoarse = binSize * 64
     val szR = right.queryExecution.optimizedPlan.stats.sizeInBytes
     if (szR <= cap) (BroadcastRight, legacyCoarse)
-    else {
-      val threshold = BigInt(left.sparkSession.conf
-        .get(ProbeThresholdKey, DefaultProbeThresholdBytes.toString).toLong)
-      val unknown = BigInt(Long.MaxValue) / 4
-      def knownLargeHeavy(df: DataFrame, c: ColSpec): Option[(Double, Double)] = {
-        val sz = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        if (sz >= threshold && sz < unknown)
-          spanQuantiles(df, c).filter(_._2 > (binSize * 8).toDouble)
-        else None
-      }
-      knownLargeHeavy(left, c1).orElse(knownLargeHeavy(right, c2)) match {
-        case Some((p50, p99)) =>
-          (BinnedTwoLevel, adaptiveCoarse(binSize, p50, p99))
-        case None => (Binned, legacyCoarse)
-      }
+    else heavySpanTail(left, c1, binSize)
+      .orElse(heavySpanTail(right, c2, binSize)) match {
+      case Some((p50, p99)) =>
+        (BinnedTwoLevel, adaptiveCoarse(binSize, p50, p99))
+      case None => (Binned, legacyCoarse)
     }
   }
 

@@ -338,9 +338,8 @@ object Ops {
     * `ops.py:1371-1438`). Counts are computed on the DISTINCT probe set
     * (full-duplicate df1 rows have identical counts) by
     * [[overlapCountsByRank]] — no pair enumeration — then fanned back out
-    * to every copy by content id. `strategy` is retained for signature
-    * stability; the rank path has no join-strategy choice. `binSize`
-    * doubles as the scan's coordinate bucket width. `returnInput=false`
+    * to every copy by content id. `binSize` is the scan's coordinate
+    * bucket width. `returnInput=false`
     * keeps only the count column (reference `ops.py:1427-1434`,
     * `tests/test_ops.py:2057-2069`); row order is whatever the plan
     * produces, so callers who need alignment keep the input. */
@@ -350,7 +349,6 @@ object Ops {
                     returnInput: Boolean = true,
                     cols1: ColSpec = ColSpec.default,
                     cols2: ColSpec = ColSpec.default,
-                    strategy: Strategy = Auto,
                     binSize: Long = IntervalJoin.DefaultBinSize): DataFrame = {
     val l = RowId.withContentId(df1, "__id1")
     val lDist = l
@@ -632,22 +630,17 @@ object Ops {
     *    where BOTH the bin replication and the per-probe run fanout
     *    explode — there the rank scan's cost, linear in rows and
     *    independent of fanout, wins asymptotically.
-    * `rankScan = None` decides like [[IntervalJoin.resolveAuto]]: pay a
-    * bounded span-tail probe only on a known-large probe relation
-    * (optimizer estimate above the same conf threshold), and switch to
-    * the scan when the p99 probe span crosses the two-level cut. */
+    * `rankScan = None` takes the scan exactly when
+    * [[IntervalJoin.heavySpanTail]] does — the decision
+    * [[IntervalJoin.resolveAuto]] also makes: a bounded span-tail probe
+    * only on a known-large probe relation, and the scan when its p99
+    * span crosses the two-level cut. */
   private[ops] def coveredBp(probes: DataFrame, idCol: String,
       anns: DataFrame, outCol: String, cols1: ColSpec, cols2: ColSpec,
       bucketWidth: Long, rankScan: Option[Boolean] = None,
       strategy: Strategy = Auto): DataFrame = {
-    val useScan = rankScan.getOrElse {
-      val sz = probes.queryExecution.optimizedPlan.stats.sizeInBytes
-      val threshold = BigInt(probes.sparkSession.conf
-        .get(IntervalJoin.ProbeThresholdKey,
-          IntervalJoin.DefaultProbeThresholdBytes.toString).toLong)
-      sz >= threshold && sz < BigInt(Long.MaxValue) / 4 &&
-        IntervalJoin.spanTailIsHeavy(probes, cols1, bucketWidth)
-    }
+    val useScan = rankScan.getOrElse(
+      IntervalJoin.heavySpanTail(probes, cols1, bucketWidth).isDefined)
     if (useScan) coveredBpByRank(probes, idCol, anns, outCol, cols1, cols2,
       bucketWidth)
     else coveredBpByPairs(probes, idCol, anns, outCol, cols1, cols2,

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.BucketedIndex
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -7,12 +8,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 /** Structured Streaming extension surface (beyond reference parity — the
   * reference is a batch library, SURVEY §2.6/§7).
   *
-  * Two classes of operator:
+  * Three classes of operator:
   *  - stateless interval transforms (region select, expand) stream
   *    as-is — they're pure `Column` expressions;
   *  - order-sensitive sweeps (merge/cluster, sessionize) need keyed state:
   *    `flatMapGroupsWithState` keyed by chrom/user with an event-time
-  *    watermark.
+  *    watermark;
+  *  - ingest into persisted indexes (dedup, ANN): a stateless
+  *    `foreachBatch` whose state lives in [[graft.core.BucketedIndex]]
+  *    tables. Each batch appends under the table's own bucket spec, so
+  *    only the create call names a bucket count.
   */
 object StreamOps {
 
@@ -211,7 +216,7 @@ object StreamOps {
       onPairs: (DataFrame, Long) => Unit,
       idCol: String = "doc_id", textCol: String = "text",
       n: Int = 3, numHashes: Int = 48, bands: Int = 16,
-      threshold: Double = 0.5, numBuckets: Int = 32,
+      threshold: Double = 0.5,
       bloomIndexPath: String = null,
       onExactDups: (DataFrame, Long) => Unit = (_, _) => (),
       bloomExpectedItems: Long = 10000000L, bloomFpp: Double = 0.01,
@@ -224,9 +229,9 @@ object StreamOps {
       (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         ingestDedupBatch(batch.toDF(), batchId, indexTable, docStorePath,
           onPairs, idCol, textCol, n, numHashes, bands, threshold,
-          numBuckets, bloomIndexPath, onExactDups, bloomExpectedItems,
-          bloomFpp, bloomBuckets, profileIndexPath, profileStrataCol,
-          lenHistPath, lenHistSbBits, cmsPath, cmsDepth, cmsWidth)
+          bloomIndexPath, onExactDups, bloomExpectedItems, bloomFpp,
+          bloomBuckets, profileIndexPath, profileStrataCol, lenHistPath,
+          lenHistSbBits, cmsPath, cmsDepth, cmsWidth)
     }
 
   /** The store subdirectories a batch's bloom prefilter may verify
@@ -259,7 +264,7 @@ object StreamOps {
       onPairs: (DataFrame, Long) => Unit,
       idCol: String = "doc_id", textCol: String = "text",
       n: Int = 3, numHashes: Int = 48, bands: Int = 16,
-      threshold: Double = 0.5, numBuckets: Int = 32,
+      threshold: Double = 0.5,
       bloomIndexPath: String = null,
       onExactDups: (DataFrame, Long) => Unit = (_, _) => (),
       bloomExpectedItems: Long = 10000000L, bloomFpp: Double = 0.01,
@@ -322,7 +327,7 @@ object StreamOps {
           n, numHashes, bands, threshold)
       try onPairs(pairs, batchId) finally release()
       graft.dedup.Dedup.appendMinhashIndex(fresh, idCol, textCol,
-        indexTable, n, numHashes, bands, numBuckets)
+        indexTable, n, numHashes, bands)
       // statistics/index tail — live corpus profile, HDR length
       // histogram, CMS term sketch, bloom append. Every one is
       // batch-addressed (overwrite of its own batch subdirectory, or a
@@ -390,26 +395,27 @@ object StreamOps {
   /** Streaming embedding ingest into a persisted quantized IVF index
     * ([[graft.ann.Ann.writeIvfIndex]] created it; centroids are FROZEN
     * for the index's lifetime): each micro-batch is assigned, int8-
-    * quantized, and appended in one pass over the batch — similarity
-    * search ([[graft.ann.Ann.ivfTopKIndexed]]) stays available over
-    * everything ingested so far, and the corpus never reshuffles.
+    * quantized, and appended under the table's own bucket spec in one
+    * pass over the batch — similarity search
+    * ([[graft.ann.Ann.ivfTopKIndexed]]) stays available over everything
+    * ingested so far, and the corpus never reshuffles.
     *
     * `compactEvery > 0` folds maintenance into the stream: after every
     * N batches the index is compacted to one file per bucket
-    * (crash-safe fresh-path + rename swap, [[graft.ann.Ann
-    * .compactIvfIndex]]), bounding the small-file growth a long-running
-    * append stream otherwise accumulates. The streaming query itself is
-    * stateless (`foreachBatch`) — restart resumes from the checkpoint. */
+    * (crash-safe fresh-path + rename swap,
+    * [[graft.core.BucketedIndex.compact]]), bounding the small-file
+    * growth a long-running append stream otherwise accumulates. The
+    * streaming query itself is stateless (`foreachBatch`) — restart
+    * resumes from the checkpoint. */
   def streamingIngestAnn(embs: DataFrame,
       cents: Array[(Int, Array[Double])], indexTable: String,
       compactPathFor: Long => String = null, compactEvery: Int = 0,
-      numBuckets: Int = 32, idCol: String = "vec_id",
-      vecCol: String = "embedding")
+      idCol: String = "vec_id", vecCol: String = "embedding")
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     embs.writeStream.outputMode("append").foreachBatch {
       (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         ingestAnnBatch(batch.toDF(), batchId, cents, indexTable,
-          compactPathFor, compactEvery, numBuckets, idCol, vecCol)
+          compactPathFor, compactEvery, idCol, vecCol)
     }
 
   /** One micro-batch of [[streamingIngestAnn]], exposed for direct
@@ -417,26 +423,21 @@ object StreamOps {
     * the batch's compaction target path is ALREADY the table's current
     * location (the prior delivery committed the compaction but the
     * checkpoint didn't advance), the compaction is skipped instead of
-    * tripping `compactIvfIndex`'s same-path guard and wedging the stream
-    * on every retry. */
+    * tripping `BucketedIndex.compact`'s same-path guard and wedging the
+    * stream on every retry. */
   def ingestAnnBatch(batchDf: DataFrame, batchId: Long,
       cents: Array[(Int, Array[Double])], indexTable: String,
       compactPathFor: Long => String = null, compactEvery: Int = 0,
-      numBuckets: Int = 32, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Unit = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     if (!batchDf.isEmpty) {
-      graft.ann.Ann.appendIvfIndex(batchDf, cents, indexTable,
-        numBuckets, idCol, vecCol)
+      graft.ann.Ann.appendIvfIndex(batchDf, cents, indexTable, idCol, vecCol)
       if (compactEvery > 0 && compactPathFor != null &&
           batchId > 0 && batchId % compactEvery == 0) {
         val s = batchDf.sparkSession
         val target = compactPathFor(batchId)
-        val current = s.sessionState.catalog
-          .getTableMetadata(
-            org.apache.spark.sql.catalyst.TableIdentifier(indexTable))
-          .location
-        if (new java.net.URI(target).getPath != current.getPath)
-          graft.ann.Ann.compactIvfIndex(s, indexTable, target, numBuckets)
+        if (new java.net.URI(target).getPath !=
+            BucketedIndex.location(s, indexTable).getPath)
+          BucketedIndex.compact(s, indexTable, target)
       }
     }
     ()

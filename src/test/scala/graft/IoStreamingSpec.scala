@@ -791,7 +791,7 @@ class StreamingSpec extends SparkSpec {
         input.toDF().toDF("doc_id", "text"), "sidx_spec", s"$dir/store",
         (pairs, batchId) => seen ++= pairs.collect().map(r =>
           (batchId, r.getLong(0), r.getLong(1))),
-        threshold = 0.5, numBuckets = 4)
+        threshold = 0.5)
       .option("checkpointLocation", s"$dir/ckpt").start()
     try {
       input.addData(batchA); q.processAllAvailable()
@@ -834,7 +834,7 @@ class StreamingSpec extends SparkSpec {
         input.toDF().toDF("doc_id", "text"), "bidx_spec", s"$dir/store",
         (p, b) => pairs ++= p.collect().map(r =>
           (b, r.getLong(0), r.getLong(1))),
-        threshold = 0.5, numBuckets = 4,
+        threshold = 0.5,
         bloomIndexPath = s"$dir/bloom",
         onExactDups = (d, b) => exact ++= d.select("doc_id").collect()
           .map(r => (b, r.getLong(0))),
@@ -865,51 +865,6 @@ class StreamingSpec extends SparkSpec {
     assert(m2 >= 2 && m2 < 2 + 100, s"maybe count $m2 for 2 planted dups")
   }
 
-  test("compactMinhashIndex: file count returns to one per bucket, " +
-    "probe results unchanged") {
-    import graft.dedup.Dedup
-    val mk = (salt: Int, changed: Int) => (0 until 60)
-      .map(i => if (i == changed) s"CH$salt" else s"tok${salt}_$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft_cidx").toString
-    spark.sql("DROP TABLE IF EXISTS cidx_spec")
-    val seed = Seq((1L, mk(0, -1))).toDF("doc_id", "text")
-    Dedup.writeMinhashIndex(seed, "doc_id", "text", "cidx_spec",
-      s"$dir/idx", numBuckets = 4)
-    // simulate a long-running ingest: many appends -> many files/bucket
-    var all = seed
-    (0 until 5).foreach { b =>
-      val batch = Seq((10L + b, mk(b, -1)), (20L + b, mk(b, 25)))
-        .toDF("doc_id", "text")
-      Dedup.appendMinhashIndex(batch, "doc_id", "text", "cidx_spec",
-        numBuckets = 4)
-      all = all.unionByName(batch)
-    }
-    def files() = new java.io.File(s"$dir/idx").listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    def filesAt(p: String) = new java.io.File(p).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(files() > 4, s"appends should fragment: ${files()}")
-    val probe = Seq((99L, mk(3, 40))).toDF("doc_id", "text")
-    val universe = all.unionByName(probe)
-    val before = Dedup.incrementalMinhashPairs(probe, universe, "cidx_spec",
-        "doc_id", "text", threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(before.nonEmpty) // non-vacuous: the probe has planted near-dups
-    Dedup.compactMinhashIndex(spark, "cidx_spec", s"$dir/idx2",
-      numBuckets = 4)
-    assert(filesAt(s"$dir/idx2") <= 4,
-      s"compaction should leave <=1 file/bucket: ${filesAt(s"$dir/idx2")}")
-    assert(!new java.io.File(s"$dir/idx").exists(), "old location reaped")
-    val after = Dedup.incrementalMinhashPairs(probe, universe, "cidx_spec",
-        "doc_id", "text", threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(after == before, s"probe drift: $before vs $after")
-    // appends keep working against the swapped table
-    Dedup.appendMinhashIndex(probe, "doc_id", "text", "cidx_spec",
-      numBuckets = 4)
-    assert(spark.table("cidx_spec").select("__id").distinct().count() == 12)
-  }
-
   test("streaming ingest maintains the profile index: per-batch appends " +
     "merge to the one-shot profile of the novel rows") {
     import graft.dedup.Dedup
@@ -929,7 +884,7 @@ class StreamingSpec extends SparkSpec {
     val input = MemoryStream[(Long, String, String)]
     val q = StreamOps.streamingIngestDedup(
         input.toDF().toDF("doc_id", "source", "text"), "pidx_spec",
-        s"$dir/store", (_, _) => (), threshold = 0.5, numBuckets = 4,
+        s"$dir/store", (_, _) => (), threshold = 0.5,
         profileIndexPath = s"$dir/prof")
       .option("checkpointLocation", s"$dir/ckpt").start()
     try {
@@ -970,7 +925,7 @@ class StreamingSpec extends SparkSpec {
     // column, which the batch lacks; the CMS writer succeeds
     val e = intercept[Exception](StreamOps.ingestDedupBatch(
       b0, 0L, "tail_spec", s"$dir/store", (p, _) => { p.count(); () },
-      numBuckets = 4, profileIndexPath = s"$dir/prof",
+      profileIndexPath = s"$dir/prof",
       profileStrataCol = "no_such_col",
       lenHistPath = s"$dir/lenhist", lenHistSbBits = 4,
       cmsPath = s"$dir/cms", cmsDepth = 3, cmsWidth = 64))
@@ -1006,7 +961,7 @@ class StreamingSpec extends SparkSpec {
     def deliver(): Unit = StreamOps.ingestDedupBatch(
       b0, 0L, "ridx_spec", s"$dir/store",
       (p, _) => pairs ++= p.collect().map(r => (r.getLong(0), r.getLong(1))),
-      threshold = 0.5, numBuckets = 4,
+      threshold = 0.5,
       bloomIndexPath = s"$dir/bloom",
       onExactDups = (d, _) => exact ++= d.select("doc_id")
         .as[Long].collect(),
@@ -1089,8 +1044,7 @@ class StreamingSpec extends SparkSpec {
     var nextPath = 0
     val q = StreamOps.streamingIngestAnn(
         input.toDF().toDF("vec_id", "embedding"), cents, "sivf_spec",
-        compactPathFor = bid => s"$dir/compact_$bid", compactEvery = 2,
-        numBuckets = 4)
+        compactPathFor = bid => s"$dir/compact_$bid", compactEvery = 2)
       .option("checkpointLocation", s"$dir/ckpt").start()
     try {
       batches.foreach { b => input.addData(b); q.processAllAvailable() }
@@ -1136,12 +1090,12 @@ class StreamingSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     def deliver(): Unit = StreamOps.ingestAnnBatch(b2, 2L, cents,
       "rivf_spec", compactPathFor = bid => s"$dir/compact_$bid",
-      compactEvery = 2, numBuckets = 4)
+      compactEvery = 2)
     deliver() // appends, then compacts to $dir/compact_2
     val loc1 = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier("rivf_spec")).location
     assert(loc1.getPath.endsWith("compact_2"), loc1.toString)
-    // replay of the SAME batchId: before the fix, compactIvfIndex's
+    // replay of the SAME batchId: before the fix, the compaction's
     // same-path require threw on every retry, wedging the stream —
     // now the already-applied compaction is detected and skipped
     deliver()

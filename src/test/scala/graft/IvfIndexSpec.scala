@@ -4,10 +4,10 @@ import org.apache.spark.sql.functions._
 
 import graft.ann.Ann
 
-/** Persisted quantized IVF index: incremental build == one-shot, probe
-  * correctness against brute force, and crash-safe compaction (results
-  * preserved, one file per bucket). The assignment itself is checked
-  * against the cross-join argmin in [[NearestCentroidSpec]]. */
+/** Persisted quantized IVF index: incremental build == one-shot, and
+  * probe correctness against brute force. The assignment itself is
+  * checked against the cross-join argmin in [[NearestCentroidSpec]];
+  * compaction in [[BucketedIndexSpec]]. */
 class IvfIndexSpec extends SparkSpec {
   import spark.implicits._
 
@@ -73,7 +73,7 @@ class IvfIndexSpec extends SparkSpec {
     Ann.writeIvfIndex(vecs.filter($"vec_id" % 3 === 0), cents, "ivf_t2",
       freshPath("incr"), numBuckets = 4)
     (1 to 2).foreach(i => Ann.appendIvfIndex(
-      vecs.filter($"vec_id" % 3 === i), cents, "ivf_t2", numBuckets = 4))
+      vecs.filter($"vec_id" % 3 === i), cents, "ivf_t2"))
     val one = spark.table("ivf_t1")
     val incr = spark.table("ivf_t2")
     assert(one.exceptAll(incr).isEmpty && incr.exceptAll(one).isEmpty)
@@ -110,34 +110,5 @@ class IvfIndexSpec extends SparkSpec {
     val exact = Ann.bruteForceTopK(vecs, queries, k = 3)
       .select("query_id", "neighbor_id", "rank")
     assert(got.exceptAll(exact).isEmpty && exact.exceptAll(got).isEmpty)
-  }
-
-  test("compaction: results unchanged, one file per bucket, old path " +
-    "reaped") {
-    val cents = Ann.ivfCentroids(vecs, 6)
-    val p0 = freshPath("c0")
-    Ann.writeIvfIndex(vecs.filter($"vec_id" < 100), cents, "ivf_t4", p0,
-      numBuckets = 4)
-    (1 to 3).foreach(i => Ann.appendIvfIndex(
-      vecs.filter($"vec_id" >= i * 100 && $"vec_id" < (i + 1) * 100),
-      cents, "ivf_t4", numBuckets = 4))
-    val queries = vecs.filter($"vec_id" % 80 === 0)
-    val before = Ann.ivfTopKIndexed(spark, queries, cents, "ivf_t4",
-      k = 3, nProbe = 2).collect().toSet
-    val filesBefore = new java.io.File(p0)
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    assert(filesBefore > 4, s"appends should fragment ($filesBefore files)")
-
-    Ann.compactIvfIndex(spark, "ivf_t4", freshPath("c1"), numBuckets = 4)
-    val after = Ann.ivfTopKIndexed(spark, queries, cents, "ivf_t4",
-      k = 3, nProbe = 2).collect().toSet
-    assert(after == before)
-    val loc = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier("ivf_t4"))
-      .location
-    val filesAfter = new java.io.File(loc.getPath)
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    assert(filesAfter <= 4, s"expected <=1 file/bucket, got $filesAfter")
-    assert(!new java.io.File(p0).exists(), "old location should be reaped")
   }
 }

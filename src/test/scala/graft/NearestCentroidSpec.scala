@@ -229,20 +229,12 @@ class NearestCentroidSpec extends SparkSpec {
     val books = for (s <- Array.range(0, 8); c <- Array.range(0, 16))
       yield (s, c, Array.fill(8)(rnd.nextDouble() - 0.5))
     val table = "nearest_k447"
-    val path = s"$dir/idx"
-    val key = "spark.sql.codegen.fallback"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    val (indexed, encoded) =
-      try {
-        Ann.writeIvfIndex(vecs, cs, table, path, numBuckets = 4)
-        (spark.table(table).select("vec_id", "centroid_id").collect(),
-          Ann.pqIvfEncode(vecs, books, cs)
-            .select("vec_id", "centroid_id", "sub", "code").collect())
-      } finally old match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    // TestSpark sets spark.sql.codegen.fallback=false for every suite, so
+    // a janino failure here fails the test instead of interpreting
+    Ann.writeIvfIndex(vecs, cs, table, s"$dir/idx", numBuckets = 4)
+    val indexed = spark.table(table).select("vec_id", "centroid_id").collect()
+    val encoded = Ann.pqIvfEncode(vecs, books, cs)
+      .select("vec_id", "centroid_id", "sub", "code").collect()
     val ref = assign(vecs, cs)
     def sorted(rs: Array[Row]) = rs.toSeq.map(_.toSeq).sortBy(_.mkString(" "))
     assert(sorted(indexed) == rowsOf(ref))

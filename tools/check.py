@@ -8,13 +8,15 @@ import duckdb
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 skip_run = "--no-run" in sys.argv
+# the checkout this script lives in is the one built and verified
+repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 if not skip_run:
     # stale outputs from a previous run would mask write failures
     subprocess.run(["rm", "-rf", out])
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {sf} {out}'],
-        cwd="/root/repo", capture_output=True, text=True, timeout=3600)
+        cwd=repo, capture_output=True, text=True, timeout=3600)
     sys.stdout.write("\n".join(
         l for l in (r.stdout + r.stderr).splitlines()
         if "error" in l.lower() or "[verify]" in l))
