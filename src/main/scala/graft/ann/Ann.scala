@@ -369,8 +369,9 @@ object Ann {
 
   /** Create a persisted quantized IVF index: inverted lists bucketed by
     * `centroid_id` ([[graft.core.BucketedIndex]]) so probes scan
-    * hash-clustered list files without ever reshuffling the corpus. The int8 payload makes the index ~4x
-    * smaller than the float corpus; exact scores come from a
+    * hash-clustered list files without ever reshuffling the corpus. The
+    * int8 payload makes the index ~4x smaller than the float corpus;
+    * exact scores come from a
     * candidates-only rerank against the original vectors
     * ([[ivfTopKIndexed]]). Centroids must be FROZEN for the index's
     * lifetime (persist via [[saveCentroids]]); retrain = rebuild.

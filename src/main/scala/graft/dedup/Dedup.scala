@@ -570,10 +570,9 @@ object Dedup {
       .reduce(_ bitwiseOR _)
     // explode_outer keeps token-less docs as one null-token row whose
     // null hash makes every bit counter null -> every packed bit 0 ->
-    // sig 0 — and the input is referenced
-    // exactly once (a restore join would execute a derived input
-    // pipeline twice in one plan, the double-embedding resolveComponents
-    // and Closest eliminated in r5)
+    // sig 0 — and the input is referenced exactly once (a restore join
+    // would execute a derived input pipeline twice in one plan, the
+    // double-embedding resolveComponents and Closest eliminated in r5)
     df.select(col(idCol).as("__id"), col(textCol).as("__text"))
       .repartition(Par.width(df), col("__id")) // see shingleRel: spread the scan
       .select(col("__id"),
