@@ -5,12 +5,12 @@ import org.apache.spark.sql.functions._
 
 import graft.ann.Ann
 import graft.core.BucketedIndex
-import graft.dedup.Dedup
 import graft.streaming.StreamOps
 
 /** The persisted-index layout ([[BucketedIndex]]): appends read the
-  * table's own bucket spec, and compaction rewrites any index kind to
-  * one file per bucket with its probe results unchanged. */
+  * table's own bucket spec, and append and compact refuse a table
+  * without one. Compaction of each index kind is checked in that
+  * index's suite through [[IndexCompactionCheck]]. */
 class BucketedIndexSpec extends SparkSpec {
   import spark.implicits._
 
@@ -19,9 +19,6 @@ class BucketedIndexSpec extends SparkSpec {
     d.delete(); d.getAbsolutePath
   }
 
-  private def parquetFiles(path: String): Int =
-    new java.io.File(path).listFiles().count(_.getName.endsWith(".parquet"))
-
   private def vecs = (0 until 400).map { i =>
     val v = Array.tabulate(12) { d =>
       val h = ((i * 29 + d * 13) % 89) - 44
@@ -29,79 +26,6 @@ class BucketedIndexSpec extends SparkSpec {
     }
     (i.toLong, v)
   }.toDF("vec_id", "embedding")
-
-  private val mk = (salt: Int, changed: Int) => (0 until 60)
-    .map(i => if (i == changed) s"CH$salt" else s"tok${salt}_$i").mkString(" ")
-
-  /** One index kind under test: `build` creates the index at the path
-    * and appends to it, `probe` reads it, `appendMore` appends again and
-    * `ids` counts the distinct ids the table holds afterwards. */
-  private case class Kind(table: String, build: String => Unit,
-                          probe: () => Seq[String], appendMore: () => Unit,
-                          ids: () => Long, expectedIds: Long)
-
-  private def minhashKind: Kind = {
-    val t = "cidx_minhash"
-    val seed = Seq((1L, mk(0, -1))).toDF("doc_id", "text")
-    val batches = (0 until 5).map(b =>
-      Seq((10L + b, mk(b, -1)), (20L + b, mk(b, 25))).toDF("doc_id", "text"))
-    val late = Seq((99L, mk(3, 40))).toDF("doc_id", "text")
-    val universe = batches.foldLeft(seed)(_ unionByName _).unionByName(late)
-    Kind(t,
-      path => {
-        Dedup.writeMinhashIndex(seed, "doc_id", "text", t, path,
-          numBuckets = 4)
-        // a long-running ingest: many appends -> many files per bucket
-        batches.foreach(Dedup.appendMinhashIndex(_, "doc_id", "text", t))
-      },
-      () => Dedup.incrementalMinhashPairs(late, universe, t, "doc_id",
-          "text", threshold = 0.5)
-        .collect().map(r => s"${r.getLong(0)},${r.getLong(1)}").sorted.toSeq,
-      () => Dedup.appendMinhashIndex(late, "doc_id", "text", t),
-      () => spark.table(t).select("__id").distinct().count(), 12L)
-  }
-
-  private def ivfKind: Kind = {
-    val t = "cidx_ivf"
-    val cents = Ann.ivfCentroids(vecs, 6)
-    val queries = vecs.filter($"vec_id" % 80 === 0)
-    Kind(t,
-      path => {
-        Ann.writeIvfIndex(vecs.filter($"vec_id" < 100), cents, t, path,
-          numBuckets = 4)
-        (1 to 3).foreach(i => Ann.appendIvfIndex(
-          vecs.filter($"vec_id" >= i * 100 && $"vec_id" < (i + 1) * 100),
-          cents, t))
-      },
-      () => Ann.ivfTopKIndexed(spark, queries, cents, t, k = 3, nProbe = 2)
-        .collect().map(_.mkString(",")).sorted.toSeq,
-      () => Ann.appendIvfIndex(vecs.filter($"vec_id" < 10), cents, t),
-      () => spark.table(t).select("vec_id").distinct().count(), 400L)
-  }
-
-  test("compact: one file per bucket, probe results unchanged, old path " +
-    "reaped, appends keep working (minhash and IVF indexes)") {
-    for (k <- Seq(minhashKind, ivfKind)) {
-      val p0 = freshPath(s"${k.table}-0")
-      k.build(p0)
-      assert(parquetFiles(p0) > 4,
-        s"${k.table}: appends should fragment (${parquetFiles(p0)} files)")
-      val before = k.probe()
-      assert(before.nonEmpty, s"${k.table}: vacuous probe")
-      val p1 = freshPath(s"${k.table}-1")
-      BucketedIndex.compact(spark, k.table, p1)
-      val loc = BucketedIndex.location(spark, k.table).getPath
-      assert(loc == p1, s"${k.table}: catalog entry not swapped ($loc)")
-      assert(parquetFiles(loc) <= 4,
-        s"${k.table}: expected <=1 file/bucket, got ${parquetFiles(loc)}")
-      assert(!new java.io.File(p0).exists(), s"${k.table}: old location reaped")
-      val after = k.probe()
-      assert(after == before, s"${k.table}: probe drift: $before vs $after")
-      // appends keep working against the swapped table
-      k.appendMore()
-      assert(k.ids() == k.expectedIds, s"${k.table}: ids after append")
-    }
-  }
 
   test("an ingest batch with default arguments appends to an index " +
     "created with numBuckets = 4, and the probe reads the index without " +

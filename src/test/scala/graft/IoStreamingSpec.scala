@@ -579,7 +579,7 @@ class MultimodalSpec extends SparkSpec {
   }
 }
 
-class StreamingSpec extends SparkSpec {
+class StreamingSpec extends SparkSpec with IndexCompactionCheck {
   import spark.implicits._
 
   test("streaming merge emits closed runs across micro-batches") {
@@ -863,6 +863,11 @@ class StreamingSpec extends SparkSpec {
       (0 until 500).map(i => s"fresh doc $i")).toDF("text")
     val m2 = Bloom.probeMaybe(idx, planted, col("text"), 4).count()
     assert(m2 >= 2 && m2 < 2 + 100, s"maybe count $m2 for 2 planted dups")
+  }
+
+  test("compactMinhashIndex: file count returns to one per bucket, " +
+    "probe results unchanged") {
+    checkCompaction(minhashKind)
   }
 
   test("streaming ingest maintains the profile index: per-batch appends " +

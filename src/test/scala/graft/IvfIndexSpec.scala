@@ -7,8 +7,8 @@ import graft.ann.Ann
 /** Persisted quantized IVF index: incremental build == one-shot, and
   * probe correctness against brute force. The assignment itself is
   * checked against the cross-join argmin in [[NearestCentroidSpec]];
-  * compaction in [[BucketedIndexSpec]]. */
-class IvfIndexSpec extends SparkSpec {
+  * compaction through [[IndexCompactionCheck]]. */
+class IvfIndexSpec extends SparkSpec with IndexCompactionCheck {
   import spark.implicits._
 
   private def vecs = (0 until 400).map { i =>
@@ -110,5 +110,10 @@ class IvfIndexSpec extends SparkSpec {
     val exact = Ann.bruteForceTopK(vecs, queries, k = 3)
       .select("query_id", "neighbor_id", "rank")
     assert(got.exceptAll(exact).isEmpty && exact.exceptAll(got).isEmpty)
+  }
+
+  test("compaction: results unchanged, one file per bucket, old path " +
+    "reaped") {
+    checkCompaction(ivfKind)
   }
 }
